@@ -106,7 +106,12 @@ object SparkEntry {
       // customer, so grouping the joined rows by (c_custkey, c_name) is the
       // same partition of orders as grouping orders by o_custkey — summing
       // first means the agg exchange carries one row per customer instead
-      // of one per order, and the broadcast join probes the small aggregate
+      // of one per order, and the broadcast join probes the small aggregate.
+      // Unlike q04's integer counts, the sum is not exact: o_totalprice is
+      // DOUBLE, so summing before the join adds in a different order and
+      // can move the last bits of the sum before round(…, 2). The 38/38
+      // DuckDB oracle replay (join-then-aggregate SQL) is the evidence the
+      // rounded revenue still matches.
       val rev = o.groupBy(col("o_custkey"))
         .agg(round(sum("o_totalprice"), 2).as("revenue"), count(lit(1)).as("n_orders"))
       rev.join(broadcast(c), rev("o_custkey") === c("c_custkey"))
@@ -473,6 +478,11 @@ object SparkEntry {
       // array_distinct / array_max over the array compute identical values
       // with zero exchanges. The n_spans > 0 filter reproduces explode's
       // empty-array drop exactly (explode emits no row for a spanless doc).
+      // size == size(array_distinct) matches the reference form it replaced,
+      // count(*) == size(collect_set(offset)) after the explode, only while
+      // Span.offset is a non-nullable Int: array_distinct keeps one NULL,
+      // collect_set drops it. PipelineSpec pins the non-nullable
+      // `spans.element.offset` field.
       val docs = pipelineDocs(s, d)
       val offs = expr("transform(spans, x -> x.offset)")
       docs.select(col("doc_id"),

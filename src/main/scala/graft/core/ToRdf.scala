@@ -54,9 +54,9 @@ object ToRdf {
     * `@id`) out of the input structure in place — the same move semantics
     * the reference gets from Rust ownership (its to_rdf takes the value).
     * Every engine call site discards the input afterwards (ExpandStage,
-    * j06, MicroBench, the W3C harness); a caller that needs the expanded
-    * document afterwards must pass `expanded.deepCopy.asArr.get`. The
-    * cross-product compaction sweep in W3CSuiteSpec tripped on this.
+    * j06, the kgbench replay, the W3C harness); a caller that needs the
+    * expanded document afterwards must pass `expanded.deepCopy.asArr.get`.
+    * The cross-product compaction sweep in W3CSuiteSpec tripped on this.
     */
   def toRdf(expanded: JArr, options: JsonLdOptions): Vector[Triple] = {
     val gen = new BnodeGenerator

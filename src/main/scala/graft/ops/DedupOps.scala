@@ -108,11 +108,16 @@ object DedupOps {
     // otherwise turn the self-join into an all-pairs O(n^2) explosion —
     // the LSH analog of stopword removal)
     val bucketSizes = banded0.groupBy("band", "bucket").agg(count(lit(1)).as("bsz"))
-    // NOT checkpointed: the self-join's two sides are canonically identical
-    // subtrees over the already-materialized `sig`, so Spark's ReuseExchange
-    // computes the (band, bucket) shuffle once and the second side reads the
-    // same shuffle files — the previous localCheckpoint paid a full extra
-    // materialization job for the same single computation (opt guide §2.4)
+    // NOT checkpointed, and not because of exchange reuse. The runtime (AQE
+    // final) plans at sf0.1, plans/pr2/d04_minhash_lsh.txt and
+    // plans/pr2/d05_simhash_pairs.txt, run the self-join as a
+    // BroadcastHashJoin with no (band, bucket) shuffle: each side re-derives
+    // the banded explode from the checkpointed `sig`. Their ReusedExchange
+    // nodes are other broadcasts: d04's (id, text) lookup, d05's frequent-
+    // bucket table. What justifies skipping a checkpoint of `banded` is the
+    // round-6 builder A/B alone (OPTIMIZATION_r06.md: d04 1.99 → 1.21-1.28 s,
+    // d05 1.05 → 0.62-0.86 s warm at sf0.1); the round-6 driver read d05 at
+    // 0.832× (VERDICT.md), so that A/B is still open.
     val banded = banded0.join(broadcast(bucketSizes.filter(col("bsz") > maxBucket)),
       Seq("band", "bucket"), "left_anti")
     val a = banded.select(col("band"), col("bucket"), col("id").as("id_a"), col("sig").as("sig_a"))
@@ -223,8 +228,8 @@ object DedupOps {
       posexplode(array((0 until 4).map(b =>
         shiftright(col("sh"), b * 16).bitwiseAND(lit(0xffffL))): _*)))
       .withColumnRenamed("col", "block").withColumnRenamed("pos", "band")
-    // frequent-bucket skipping (see minhashLsh); not checkpointed for the
-    // same ReuseExchange reason — the self-join sides share one shuffle
+    // frequent-bucket skipping; not checkpointed, on the same measured A/B
+    // (see minhashLsh)
     val bucketSizes = banded0.groupBy("band", "block").agg(count(lit(1)).as("bsz"))
     val banded = banded0.join(broadcast(bucketSizes.filter(col("bsz") > maxBucket)),
       Seq("band", "block"), "left_anti")

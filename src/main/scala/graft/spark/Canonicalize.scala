@@ -21,21 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Canonicalize {
 
-  /** Opt-in phase timing (set GRAFT_CANON_TIMING=1): stderr wall times for
-    * each EAGER phase of the driver-orchestrated fixpoint. Dev-only — the
-    * env var is absent in driver/bench runs, so the call is a plain pass-
-    * through there.
-    */
-  private val timing = sys.env.contains("GRAFT_CANON_TIMING")
-  @inline private def phase[T](label: String)(f: => T): T =
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[canon] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-
   /** Every triple role a canonical label can land in. */
   val AllRoles: Set[String] = Set("subj", "obj", "graph")
 
@@ -79,11 +64,11 @@ object Canonicalize {
     // per consumer (measured: j02 paid the expand 2-3×). In the production
     // materializer the equivalent durable step is the staged parquet table;
     // localCheckpoint is the single-box query-shaped analog.
-    val withKeys0 = t
+    val withKeys = t
       .withColumn("subj_key", when(col("subj").startsWith("_:"), concat(scopeCol, lit("|"), col("subj"))))
       .withColumn("obj_key", when(col("obj_kind") === "bnode", concat(scopeCol, lit("|"), col("obj_value"))))
       .withColumn("graph_key", when(col("graph").startsWith("_:"), concat(scopeCol, lit("|"), col("graph"))))
-    val withKeysM = phase("withKeys_ckpt")(withKeys0.localCheckpoint(false))
+      .localCheckpoint(false)
 
     // hash-side dedup: labels must depend on the quad SET — a document
     // repeating an identical value emits the same triple twice, and the
@@ -92,7 +77,6 @@ object Canonicalize {
     // the relabel joins below still run over the un-deduped withKeys, so
     // output rows and counts are untouched). One extra exchange over the
     // bnode-adjacent subset only.
-    val withKeys = withKeysM
     val bnodeTriples = withKeys.filter(col("subj_key").isNotNull || col("obj_key").isNotNull || col("graph_key").isNotNull)
       .dropDuplicates()
     // no separate emptiness probe: the bnode-free fast path falls out of
@@ -144,14 +128,14 @@ object Canonicalize {
         coalesce(col("other_lit"), when(col("other_node").isNotNull, lit("_")), lit("")), col("g")))
       .groupBy("node")
       .agg(nodeHash(concat_ws("\n", sort_array(collect_list(col("sig"))))).as("h"))
-    hashes = phase("round0_ckpt")(hashes.localCheckpoint(false))
+    hashes = hashes.localCheckpoint(false)
 
     // refinement rounds: include neighbor hashes. Weisfeiler-Lehman-style
     // refinement is monotone in the number of distinct colors, so the loop
     // stops at the fixpoint (distinct-hash count unchanged) — one cheap
     // countDistinct per round instead of blindly paying every join pass at
     // corpus scale. `rounds` stays the hard cap for pathological graphs.
-    val firstCounts = phase("firstCounts")(hashes.agg(countDistinct("h"), count(lit(1))).head())
+    val firstCounts = hashes.agg(countDistinct("h"), count(lit(1))).head()
     var distinctHashes = firstCounts.getLong(0)
     val totalNodes = firstCounts.getLong(1)
     // bnode-free corpus: no node ever hashed — identity relabeling
@@ -171,7 +155,7 @@ object Canonicalize {
     // dedup-shuffle+explode passes into one materialization + cheap reads.
     var incM: DataFrame = null
     while (r < rounds && !converged) {
-      if (incM == null) incM = phase("incM_ckpt")(inc.localCheckpoint(false))
+      if (incM == null) incM = inc.localCheckpoint(false)
       val withNbr = incM.join(hashes.withColumnRenamed("node", "other_node").withColumnRenamed("h", "nbr_h"),
         Seq("other_node"), "left")
       hashes = withNbr
@@ -179,7 +163,7 @@ object Canonicalize {
           coalesce(col("other_lit"), concat(lit("#"), col("nbr_h")), lit("")), col("g")))
         .groupBy("node")
         .agg(nodeHash(concat_ws("\n", sort_array(collect_list(col("sig"))))).as("h"))
-      hashes = phase(s"round${r + 1}_ckpt")(hashes.localCheckpoint(false))
+      hashes = hashes.localCheckpoint(false)
       // stop at the WL fixpoint (count unchanged) OR at full separation
       // (count == nodes): refinement past either is the identity, and each
       // skipped round is a full corpus-scale join pass. The convergence
@@ -187,7 +171,7 @@ object Canonicalize {
       // can still gate a round — when the cap binds (this was the last
       // permitted round) the answer is unused and the job is skipped.
       if (r + 1 < rounds) {
-        val d = phase(s"round${r + 1}_cd")(hashes.agg(countDistinct("h")).head().getLong(0))
+        val d = hashes.agg(countDistinct("h")).head().getLong(0)
         converged = d == distinctHashes || d == totalNodes
         distinctHashes = d
       }

@@ -3,6 +3,7 @@ package graft.spark
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 import graft.core.{JsonLdOptions, Triple, BnodeCanon}
 
 object SparkTestSession {
@@ -30,6 +31,11 @@ class PipelineSpec extends AnyFunSuite {
     assert(d1 == d2)
     assert(d1.spans.map(_.offset) == d1.spans.map(_.offset).sorted)
     assert(d1.spans.map(_.offset).distinct.size == d1.spans.size)
+    // j03's size == size(array_distinct) check equals its explode +
+    // collect_set form only while offset cannot be NULL
+    val span = SyntheticDocs.generate(spark, 1, 1).schema("spans").dataType
+      .asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    assert(!span("offset").nullable, "spans.element.offset became nullable")
   }
 
   test("expandDoc emits triples for every jsonld/media span family and no errors on the synthetic corpus") {

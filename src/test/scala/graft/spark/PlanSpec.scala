@@ -160,6 +160,22 @@ class PlanSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("Profile times each query into noop and writes its AQE final plan") {
+    val out = java.nio.file.Files.createTempDirectory("graft-profile")
+    // q01 shuffles for its aggregate; q06 is a map-only TakeOrderedAndProject
+    val names = Seq("q01_agg_pricing", "q06_topk")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(graft.Profile.run(spark, sf, out.toString, names))
+    assert(out.toFile.list().sorted.toSeq == names.map(_ + ".txt"))
+    for (n <- names) {
+      val plan = java.nio.file.Files.readString(out.resolve(s"$n.txt"))
+      assert(plan.contains("isFinalPlan=true"), s"$n:\n" + plan.take(2000))
+      assert(json.get(n).isNumber && json.get(n).asDouble > 0, json.toString)
+    }
+    assert(json.size == names.size, json.toString)
+    assert(java.nio.file.Files.readString(out.resolve("q01_agg_pricing.txt")).contains("ShuffleQueryStage"))
+  }
+
   test("html spans: embedded application/ld+json scripts are extracted and expanded") {
     val page =
       """<html><head>
