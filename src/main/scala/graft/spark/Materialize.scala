@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Checkpoint-resumable graph materialization with per-bucket lineage +
@@ -17,6 +17,11 @@ import org.apache.spark.sql.functions._
   * Resume: completed buckets are read from lineage and skipped (the
   * coarse-grained equivalent of a `left_anti` on completed doc_ids — bucket
   * granularity keeps the resume check O(buckets), not O(docs), at 10^12 docs).
+  *
+  * Lineage counts come from the bucket's own writes: `doc_count`,
+  * `triple_count` and `error_count` are `Dataset.observe` metrics collected
+  * while the errors and triples are written. No output is re-read and no
+  * input re-counted.
   */
 object Materialize {
 
@@ -52,21 +57,17 @@ object Materialize {
       .digest(normalized.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
   }
 
-  private def completedBuckets(spark: SparkSession, outDir: String): Set[Int] = {
-    if (!pathExists(spark, s"$outDir/lineage")) Set.empty
+  /** Done buckets and the highest attempt per bucket, from one collected
+    * read of `lineage/` (one row per bucket commit, so O(buckets)).
+    */
+  private def lineageState(spark: SparkSession, outDir: String): (Set[Int], Map[Int, Int]) = {
+    if (!pathExists(spark, s"$outDir/lineage")) (Set.empty, Map.empty)
     else {
       import spark.implicits._
-      spark.read.parquet(s"$outDir/lineage")
-        .filter(col("status") === "done").select("bucket").as[Int].collect().toSet
-    }
-  }
-
-  private def attemptsSoFar(spark: SparkSession, outDir: String): Map[Int, Int] = {
-    if (!pathExists(spark, s"$outDir/lineage")) Map.empty
-    else {
-      import spark.implicits._
-      spark.read.parquet(s"$outDir/lineage").groupBy("bucket").agg(max("attempt").as("a"))
-        .as[(Int, Int)].collect().toMap
+      val rows = spark.read.parquet(s"$outDir/lineage")
+        .select("bucket", "status", "attempt").as[(Int, String, Int)].collect()
+      (rows.collect { case (b, "done", _) => b }.toSet,
+        rows.groupMapReduce(_._1)(_._3)(math.max))
     }
   }
 
@@ -84,8 +85,8 @@ object Materialize {
   ): RunReport = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val done = if (resume) completedBuckets(spark, outDir) else Set.empty[Int]
-    val attempts = attemptsSoFar(spark, outDir)
+    val (completed, attempts) = lineageState(spark, outDir)
+    val done = if (resume) completed else Set.empty[Int]
     val ctxB = RemoteContextPool.broadcastResolved(spark,
       docs.select(explode(col("spans")).as("s"))
         .filter(col("s.kind") === "jsonld" && col("s.text").contains(RemoteContextPool.baseIri))
@@ -114,17 +115,31 @@ object Materialize {
       for (b <- 0 until buckets if !done.contains(b)) {
         if (failAtBucket.contains(b)) throw new RuntimeException(s"injected failure at bucket $b")
         val t0 = System.nanoTime()
+        // Lineage counts are Observations, each fulfilled by the first query
+        // that reports it:
+        // - doc_count is observed under rows.cache(), in the cached plan
+        //   (CollectMetricsExec.collect follows InMemoryTableScanExec into
+        //   it). The errors write goes first and has no shuffle, so it builds
+        //   the cache and counts the docs in its result stage.
+        // - error_count and triple_count are observed directly under their
+        //   writes, in those writes' result stages.
+        // Spark merges a result task's accumulator updates once per partition
+        // (a map task's on every successful attempt), so a retried map stage
+        // cannot double any of the three.
+        val docsSeen, triplesWritten, errorsWritten = Observation()
         val bucketDocs = staged.filter(col("bucket") === b).drop("bucket").as[Doc]
+          .observe(docsSeen, count(lit(1)).as("n"))
         val rows = ExpandStage.run(bucketDocs, ctxB).cache()
         val triples = ExpandStage.triples(rows)
           .dropDuplicates("subj", "pred", "obj_kind", "obj_value", "obj_datatype", "obj_lang", "graph")
         val errors = ExpandStage.errors(rows)
-        triples.write.mode(SaveMode.Overwrite).parquet(s"$outDir/triples/bucket=$b")
-        errors.write.mode(SaveMode.Overwrite).parquet(s"$outDir/errors/bucket=$b")
-        val tc = spark.read.parquet(s"$outDir/triples/bucket=$b").count()
-        val ec = spark.read.parquet(s"$outDir/errors/bucket=$b").count()
-        val dc = bucketDocs.count()
+        errors.observe(errorsWritten, count(lit(1)).as("n"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/errors/bucket=$b")
+        triples.observe(triplesWritten, count(lit(1)).as("n"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/triples/bucket=$b")
         rows.unpersist()
+        def n(o: Observation) = o.get("n").asInstanceOf[Long]
+        val (dc, tc, ec) = (n(docsSeen), n(triplesWritten), n(errorsWritten))
         val lineage = Seq(PartitionLineage(b, dc, tc, ec, "done",
           attempts.getOrElse(b, 0) + 1, (System.nanoTime() - t0) / 1000000)).toDS()
         lineage.write.mode(SaveMode.Append).parquet(s"$outDir/lineage")

@@ -1,7 +1,7 @@
 package graft.spark
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.JsonLdOptions
 
@@ -133,6 +133,8 @@ object StreamingPipeline {
     * when the batch was skipped as already committed. The committed check is
     * O(1) against the driver-side cache; the lineage table is read once per
     * driver JVM, not once per batch.
+    * `n_triples` is observed on the write itself; the batch dir is not read
+    * back.
     */
   def appendTriplesBatch(batch: org.apache.spark.sql.DataFrame, batchId: Long, outDir: String): Boolean = {
     val spark = batch.sparkSession
@@ -154,9 +156,10 @@ object StreamingPipeline {
     // overwrite, not append: a retry of a batch whose data write succeeded
     // but whose lineage row did not (the exact failure window the gate
     // covers) must replace the partial/duplicate dir, not double it
-    rows.write.mode("overwrite").parquet(s"$outDir/triples/batch=$batchId")
-    val n = spark.read.parquet(s"$outDir/triples/batch=$batchId").count()
-    Seq((batchId, n)).toDF("batch_id", "n_triples")
+    val written = Observation()
+    rows.observe(written, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(s"$outDir/triples/batch=$batchId")
+    Seq((batchId, written.get("n").asInstanceOf[Long])).toDF("batch_id", "n_triples")
       .write.mode("append").parquet(lineagePath)
     // only after the lineage row is durable — a failed lineage write must
     // leave the id uncached so the retry re-runs the overwrite path

@@ -94,6 +94,54 @@ class PipelineSpec extends AnyFunSuite {
     // attempts: resumed buckets recorded attempt 1 (first completion)
     val lineage = spark.read.parquet(s"$out1/lineage")
     assert(lineage.count() == 4)
+    assert(lineage.filter(col("attempt") =!= 1).isEmpty)
+    // resume = false reprocesses done buckets but still counts their attempts
+    val rerun = Materialize.run(docs, out1, buckets = 4, resume = false)
+    assert(rerun.skipped == 0 && rerun.processed == 4)
+    val attempts = spark.read.parquet(s"$out1/lineage").groupBy("bucket").agg(max("attempt")).collect()
+    assert(attempts.length == 4 && attempts.forall(_.getInt(1) == 2))
+  }
+
+  test("lineage counts equal what each bucket wrote; the report sums them") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft-lineage").toString
+    // truncated JSON-LD: each broken doc puts one row on the error channel
+    val broken = (0 until 6).map(i => Doc(s"doc-broken-$i", Vector(
+      Span("jsonld", s"""{"@context":{"@vocab":"http://v/"},"@id":"http://e/$i","p":""", null, 0))))
+    val docs = SyntheticDocs.generate(spark, 200, 4).union(broken.toDS())
+    val report = Materialize.run(docs, out, buckets = 4)
+    val lineage = spark.read.parquet(s"$out/lineage").as[PartitionLineage].collect().sortBy(_.bucket)
+    assert(lineage.map(_.bucket).toSeq == (0 until 4))
+    val docsPerBucket = docs.select(Materialize.bucketOf(4).as("b")).groupBy("b").count()
+      .as[(Int, Long)].collect().toMap
+    lineage.foreach { l =>
+      val b = l.bucket
+      assert(l.doc_count == docsPerBucket.getOrElse(b, 0L), s"bucket $b doc_count")
+      assert(l.triple_count == spark.read.parquet(s"$out/triples/bucket=$b").count(), s"bucket $b triple_count")
+      assert(l.error_count == spark.read.parquet(s"$out/errors/bucket=$b").count(), s"bucket $b error_count")
+    }
+    assert(lineage.map(_.error_count).sum >= broken.size)
+    assert(report.triples == lineage.map(_.triple_count).sum)
+    assert(report.errors == lineage.map(_.error_count).sum)
+  }
+
+  test("empty buckets do not hang: 3 docs into 8 buckets commit 0/0/0 lineage rows") {
+    import spark.implicits._
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.{Seconds, Span => TimeSpan}
+    implicit val signaler: Signaler = ThreadSignaler
+    val out = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val report = TimeLimits.failAfter(TimeSpan(120, Seconds)) {
+      Materialize.run(SyntheticDocs.generate(spark, 3, 1), out, buckets = 8)
+    }
+    assert(report.processed == 8)
+    val lineage = spark.read.parquet(s"$out/lineage").as[PartitionLineage].collect()
+    assert(lineage.map(_.bucket).sorted.toSeq == (0 until 8))
+    assert(lineage.forall(_.status == "done"))
+    assert(lineage.map(_.doc_count).sum == 3)
+    val empty = lineage.filter(_.doc_count == 0)
+    assert(empty.length >= 5)
+    assert(empty.forall(l => l.triple_count == 0 && l.error_count == 0), empty.toSeq)
   }
 
   test("distributed canonicalization (iterative joins) is deterministic, complete, and structure-preserving") {
