@@ -461,10 +461,9 @@ object SparkEntry {
     "j02_graph_pipeline" -> ((s, d) => {
       val triples = pipelineTriples(s, d)
       // subject-only relabel: this query reads only (pred, subj) of the
-      // canonical output, and relabeling is injective per role, so pruning
-      // the obj/graph relabel joins (2 corpus-wide shuffles) leaves both
-      // count(*) and countDistinct(subj) bit-identical (labeled is unique
-      // per node — left joins are non-expanding)
+      // canonical output, and relabeling is injective per role, so leaving
+      // obj/graph labels as they are keeps both count(*) and
+      // countDistinct(subj) bit-identical
       val canon = Canonicalize.global(triples, rounds = 2, scoped = true,
         relabelRoles = Set("subj"))
       canon.groupBy("pred")

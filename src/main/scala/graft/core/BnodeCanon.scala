@@ -7,7 +7,7 @@ import java.security.MessageDigest
   * depend only on graph structure, never on input label order.
   *
   * This is the partition-local (per-document) formulation; the distributed
-  * DataFrame-join formulation over the full corpus lives in
+  * formulation for corpora whose bnodes span rows lives in
   * graft.spark.Canonicalize and follows the same refinement rounds.
   */
 object BnodeCanon {

@@ -1,23 +1,68 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import java.util.{Arrays, HexFormat}
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 
-/** URDNA2015-style blank-node labeling expressed as iterative DataFrame
-  * joins (north_rule): the distributed formulation of
-  * graft.core.BnodeCanon for corpora where blank nodes span rows.
+/** A triple row with its blank-node keys, `<doc_id>|<label>` per role (null
+  * where the role holds no blank node), as [[Canonicalize]] groups it.
+  */
+private[spark] final case class KeyedTriple(subj: String, pred: String, obj_kind: String,
+    obj_value: String, obj_datatype: String, obj_lang: String, graph: String, doc_id: String,
+    subj_key: String, obj_key: String, graph_key: String)
+
+/** Node count and distinct-hash count after rounds 0, 1, … of one or more
+  * scopes; adding two sums them.
+  */
+private[spark] final case class ScopeCounts(nodes: Long, distinct: Array[Long]) {
+  def +(o: ScopeCounts): ScopeCounts =
+    ScopeCounts(nodes + o.nodes, Array.tabulate(distinct.length)(k => distinct(k) + o.distinct(k)))
+}
+
+private[spark] object ScopeCounts {
+  def zero(probes: Int): ScopeCounts = ScopeCounts(0L, new Array[Long](probes))
+}
+
+/** URDNA2015-style blank-node labeling for corpora where blank nodes span
+  * rows: the distributed counterpart of graft.core.BnodeCanon, computed
+  * scope by scope in memory.
   *
-  * Shape per round (hash refinement / color refinement):
-  *   edges ⋈ hashes(on subj bnode) ⋈ hashes(on obj bnode) →
-  *   groupBy(node) over sort_array(collect_list(signature)) → sha2.
-  * All joins are equi-joins on the bnode key — well-distributed (bnode ids
-  * are hashes), so no salting needed here; AQE handles residual skew. Only
-  * the bnode-adjacent subgraph participates: the first `filter` keeps the
-  * shuffled volume proportional to bnode density, not corpus size.
+  * A node is keyed `<doc_id>|<label>` (`|<label>` when unscoped) and its
+  * scope is the key's text before the first `|`: the doc id truncated at its
+  * own first `|`, so docs `a|1` and `a|2` share scope `a`. Every hash is
+  * seeded with the scope and the automorphism tie-break ranks within a
+  * scope, so no hash, rank or label depends on another scope. The stage
+  * therefore groups the bnode-adjacent rows by scope and runs in two passes
+  * over one local checkpoint of the input:
   *
-  * The fixpoint is driver-orchestrated (Catalyst has no iteration); each
-  * round is checkpoint-friendly (localCheckpoint) to cut lineage — the
-  * ICDE-2016 iterative-dataflow pattern (PAPERS.md).
+  *  1. per scope, the node count and the distinct-hash counts after
+  *     Weisfeiler-Lehman rounds 0 .. `rounds`−1, summed per partition on
+  *     the executors and then on the driver, which collects one row per
+  *     partition whatever the number of scopes;
+  *  2. per scope, hashes at round R, ranks, labels, and the relabelled rows.
+  *
+  * R is global: refinement stops at the first round whose corpus-wide
+  * distinct-hash count is unchanged or equals the node count, `rounds`
+  * capping it. A scope cannot stop at its own fixpoint, because round-r
+  * hashes differ from round-(r−1) hashes even when its partition is stable,
+  * so every scope is hashed to the same R. The sums are exact: hashes of
+  * different scopes differ by their seed, so they collide only through a
+  * SHA-256 collision. Rows without a blank-node key pass through
+  * untouched; that includes every row whose `doc_id` is null in scoped mode.
+  *
+  * Memory: a task holds one scope's bnode-adjacent rows at a time — in
+  * scoped mode one document's, or those of all docs whose ids agree up to
+  * their first `|`. `scoped = false` makes the whole corpus one scope `""`,
+  * held by one task; no query uses it.
+  *
+  * Partitions: the scope shuffle has max(cores, `spark.sql.shuffle.partitions`)
+  * partitions, so each task sorts about (bnode-adjacent data) ÷ that count,
+  * sized like any other shuffle of the session. The count is fixed, so AQE
+  * neither coalesces nor splits these partitions; a scope is indivisible in
+  * any case, so one oversized document still lands in one task.
   */
 object Canonicalize {
 
@@ -27,27 +72,20 @@ object Canonicalize {
   /** Relabel `_:` ids in `triples`. `scoped` = true keys bnodes by
     * (doc_id, label) — doc-local bnode spaces; false = one global space.
     *
-    * `relabelRoles` prunes the final relabel joins to the roles the caller
-    * actually reads (optimization-guide §1.2: don't compute what you throw
-    * away — Catalyst cannot eliminate a left join itself because it cannot
-    * prove `labeled` is unique per key, but it IS unique by construction:
-    * one row per groupBy("node") group). Each pruned role is one full
-    * corpus-wide shuffle join removed; the pruned role's column passes
-    * through unchanged (original label), every other column — including the
-    * hash/label computation feeding the kept roles — is bit-identical to
-    * the all-roles run.
+    * `relabelRoles` names the roles whose blank nodes are relabelled; a role
+    * left out keeps its original labels, and every other column, including
+    * the labels of the kept roles, is identical to the all-roles run.
     */
   def global(triples: Dataset[TripleRow], rounds: Int = 3, scoped: Boolean = true,
       relabelRoles: Set[String] = AllRoles): DataFrame =
     globalWithRounds(triples, rounds, scoped, relabelRoles)._1
 
   /** [[global]], additionally reporting how many WL refinement rounds
-    * actually ran (0 when first-degree signatures separate every bnode — the
+    * ran (0 when first-degree signatures separate every bnode — the
     * overwhelmingly common doc-scoped case; > 0 when signature collisions
-    * forced neighbor-hash refinement). The count is known eagerly: the
-    * fixpoint loop is driver-orchestrated, so it has executed by the time
-    * this returns. j11 uses it as a self-check that its corpus really
-    * exercises the refinement path.
+    * forced neighbor-hash refinement). The count is known eagerly: pass 1
+    * has executed by the time this returns. j11 uses it as a self-check that
+    * its corpus really exercises the refinement path.
     */
   def globalWithRounds(triples: Dataset[TripleRow], rounds: Int = 3, scoped: Boolean = true,
       relabelRoles: Set[String] = AllRoles): (DataFrame, Int) = {
@@ -55,171 +93,66 @@ object Canonicalize {
       s"relabelRoles must be a non-empty subset of $AllRoles")
     val spark = triples.sparkSession
     import spark.implicits._
-    val t = triples.toDF()
-    val scopeCol = if (scoped) col("doc_id") else lit("")
+    // `triples` is usually an un-cached expand pipeline, read here by both
+    // passes and the pass-through rows: checkpoint it so expansion runs once
+    val input = triples.toDF().localCheckpoint(false)
+    val keyed = keyedByScope(input, scoped)
+    val scopes = byScope(keyed)
 
-    // Materialize the keyed triples ONCE: they are read again by the final
-    // relabel joins (and the bnode-presence probe), and `triples` is usually
-    // an un-cached expand pipeline — without this the full expansion re-runs
-    // per consumer (measured: j02 paid the expand 2-3×). In the production
-    // materializer the equivalent durable step is the staged parquet table;
-    // localCheckpoint is the single-box query-shaped analog.
-    val withKeys = t
-      .withColumn("subj_key", when(col("subj").startsWith("_:"), concat(scopeCol, lit("|"), col("subj"))))
-      .withColumn("obj_key", when(col("obj_kind") === "bnode", concat(scopeCol, lit("|"), col("obj_value"))))
-      .withColumn("graph_key", when(col("graph").startsWith("_:"), concat(scopeCol, lit("|"), col("graph"))))
-      .localCheckpoint(false)
+    // pass 1: the counts the stop rule reads, for rounds 0 .. rounds-1
+    val probes = rounds max 1
+    val ScopeCounts(nodes, distinct) =
+      scopeCounts(scopes, probes).collect().foldLeft(ScopeCounts.zero(probes))(_ + _)
+    if (nodes == 0) return (input, 0)
+    // refinement runs while the distinct count still changes and some nodes
+    // still share a hash; the count after the last permitted round is never
+    // read, so `rounds` caps R without a probe
+    val r =
+      if (rounds <= 0 || distinct(0) == nodes) 0
+      else (1 until rounds).find(k => distinct(k) == distinct(k - 1) || distinct(k) == nodes).getOrElse(rounds)
 
-    // hash-side dedup: labels must depend on the quad SET — a document
-    // repeating an identical value emits the same triple twice, and the
-    // duplicate signature would hash the same graph to different labels
-    // than its deduplicated equivalent (mirrors BnodeCanon.canonicalize;
-    // the relabel joins below still run over the un-deduped withKeys, so
-    // output rows and counts are untouched). One extra exchange over the
-    // bnode-adjacent subset only.
-    val bnodeTriples = withKeys.filter(col("subj_key").isNotNull || col("obj_key").isNotNull || col("graph_key").isNotNull)
-      .dropDuplicates()
-    // no separate emptiness probe: the bnode-free fast path falls out of
-    // firstCounts below (totalNodes == 0) — a standalone isEmpty executed
-    // the dedup exchange once just to answer a question the round-0
-    // aggregation answers anyway (measured: the probe alone was ~0.5 s of
-    // j02's warm time, and one full corpus pass at scale)
+    // pass 2: label every scope at round R
+    val relabeled = scopes
+      .flatMapGroups((scope, rows) => new ScopeGraph(scope, rows.toVector).relabel(r, relabelRoles))
+      .toDF()
+    val plain = keyed.filter(col("scope").isNull).select(relabeled.columns.map(col).toIndexedSeq: _*)
+    (plain.union(relabeled), r)
+  }
 
-    // directed incidence list: one row per (bnode, role) occurrence
-    val objSig = concat_ws("", col("obj_kind"), col("obj_value"), col("obj_datatype"), col("obj_lang"))
-    val inc = bnodeTriples.select(
-      explode(array(
-        struct(col("subj_key").as("node"), lit("s").as("role"), col("pred"),
-          when(col("obj_key").isNotNull, lit(null).cast("string")).otherwise(objSig).as("other_lit"),
-          col("obj_key").as("other_node"),
-          when(col("graph_key").isNotNull, lit("_")).otherwise(col("graph")).as("g")),
-        struct(col("obj_key").as("node"), lit("o").as("role"), col("pred"),
-          when(col("subj_key").isNotNull, lit(null).cast("string")).otherwise(col("subj")).as("other_lit"),
-          col("subj_key").as("other_node"),
-          when(col("graph_key").isNotNull, lit("_")).otherwise(col("graph")).as("g")),
-        struct(col("graph_key").as("node"), lit("g").as("role"), col("pred"),
-          lit(null).cast("string").as("other_lit"), lit(null).cast("string").as("other_node"),
-          lit("").as("g"))
-      )).as("e"))
-      .select("e.*")
-      .filter(col("node").isNotNull)
-    // NOT checkpointed: in the overwhelmingly common fixpoint-skip case the
-    // incidence list is consumed exactly once (round-0 hashes), so
-    // materializing it is pure cost — a full extra write+read of the
-    // bnode-adjacent corpus at scale; when refinement rounds do run, each
-    // recomputes a cheap explode+filter over the ALREADY-checkpointed keyed
-    // triples instead. (Local sf0.1 wall time moves only ~5% — within host
-    // drift — but the saved materialization is real at 100 TB.)
+  /** `rows` with the bnode keys of [[KeyedTriple]] and their `scope`, null
+    * on rows without a blank node.
+    */
+  private[spark] def keyedByScope(rows: DataFrame, scoped: Boolean): DataFrame = {
+    val docScope = if (scoped) col("doc_id") else lit("")
+    def key(label: String) = concat(docScope, lit("|"), col(label))
+    rows
+      .withColumn("subj_key", when(col("subj").startsWith("_:"), key("subj")))
+      .withColumn("obj_key", when(col("obj_kind") === "bnode", key("obj_value")))
+      .withColumn("graph_key", when(col("graph").startsWith("_:"), key("graph")))
+      .withColumn("scope", substring_index(coalesce(col("subj_key"), col("obj_key"), col("graph_key")), "|", 1))
+  }
 
-    // Scope-seeded node hash: the node key is "<scope>|<label>", and folding
-    // the scope prefix into every hash separates structurally-identical
-    // bnodes from DIFFERENT scopes at round 0. Without it, cross-doc
-    // collisions (identical chain shapes repeated across documents — list
-    // tails, boilerplate structures) force corpus-wide refinement rounds
-    // whose count GROWS with corpus size; with it, refinement depth is
-    // bounded by within-doc structure only. In global mode the scope prefix
-    // is "" for every node — a no-op, so identical structures still merge.
-    def nodeHash(sigs: org.apache.spark.sql.Column) =
-      sha2(concat_ws("\u0000", substring_index(col("node"), "|", 1), sigs), 256)
+  /** The bnode-adjacent rows of `keyed`, grouped by scope. */
+  private[spark] def byScope(keyed: DataFrame): KeyValueGroupedDataset[String, KeyedTriple] = {
+    val spark = keyed.sparkSession
+    import spark.implicits._
+    // a scope's work is hashing, heavy for its bytes: AQE would coalesce the
+    // small shuffle into one task, so fix the count, at least one per core
+    val partitions = spark.sparkContext.defaultParallelism max
+      spark.conf.get("spark.sql.shuffle.partitions").toInt
+    keyed.filter(col("scope").isNotNull)
+      .repartition(partitions, col("scope"))
+      .groupBy("scope").as[String, KeyedTriple]
+  }
 
-    // round 0: first-degree signatures
-    var hashes: DataFrame = inc
-      .withColumn("sig", concat_ws("|", col("role"), col("pred"),
-        coalesce(col("other_lit"), when(col("other_node").isNotNull, lit("_")), lit("")), col("g")))
-      .groupBy("node")
-      .agg(nodeHash(concat_ws("\n", sort_array(collect_list(col("sig"))))).as("h"))
-    hashes = hashes.localCheckpoint(false)
-
-    // refinement rounds: include neighbor hashes. Weisfeiler-Lehman-style
-    // refinement is monotone in the number of distinct colors, so the loop
-    // stops at the fixpoint (distinct-hash count unchanged) — one cheap
-    // countDistinct per round instead of blindly paying every join pass at
-    // corpus scale. `rounds` stays the hard cap for pathological graphs.
-    val firstCounts = hashes.agg(countDistinct("h"), count(lit(1))).head()
-    var distinctHashes = firstCounts.getLong(0)
-    val totalNodes = firstCounts.getLong(1)
-    // bnode-free corpus: no node ever hashed — identity relabeling
-    if (totalNodes == 0) return (withKeys.drop("subj_key", "obj_key", "graph_key"), 0)
-    // first-degree hashes already separate every node ⇒ refinement is the
-    // identity — skip the join rounds entirely (the overwhelmingly common
-    // case for doc-scoped bnodes; same skip as BnodeCanon.canonicalize)
-    var converged = distinctHashes == totalNodes
-    var r = 0
-    // Materialized incidence list, built lazily on FIRST loop entry only: in
-    // the common fixpoint-skip case `inc` is consumed exactly once (round-0
-    // hashes) and materializing it would be pure cost (see the NOT-
-    // checkpointed note above) — but once refinement runs, every round
-    // otherwise re-derives `inc` from scratch INCLUDING the bnodeTriples
-    // dropDuplicates exchange (DataFrame actions re-plan; shuffle output is
-    // not reused across jobs). One checkpoint here turns `rounds` extra
-    // dedup-shuffle+explode passes into one materialization + cheap reads.
-    var incM: DataFrame = null
-    while (r < rounds && !converged) {
-      if (incM == null) incM = inc.localCheckpoint(false)
-      val withNbr = incM.join(hashes.withColumnRenamed("node", "other_node").withColumnRenamed("h", "nbr_h"),
-        Seq("other_node"), "left")
-      hashes = withNbr
-        .withColumn("sig", concat_ws("|", col("role"), col("pred"),
-          coalesce(col("other_lit"), concat(lit("#"), col("nbr_h")), lit("")), col("g")))
-        .groupBy("node")
-        .agg(nodeHash(concat_ws("\n", sort_array(collect_list(col("sig"))))).as("h"))
-      hashes = hashes.localCheckpoint(false)
-      // stop at the WL fixpoint (count unchanged) OR at full separation
-      // (count == nodes): refinement past either is the identity, and each
-      // skipped round is a full corpus-scale join pass. The convergence
-      // probe is itself a corpus-scale job, so it only runs when its answer
-      // can still gate a round — when the cap binds (this was the last
-      // permitted round) the answer is unused and the job is skipped.
-      if (r + 1 < rounds) {
-        val d = hashes.agg(countDistinct("h")).head().getLong(0)
-        converged = d == distinctHashes || d == totalNodes
-        distinctHashes = d
-      }
-      r += 1
-    }
-
-    // Deterministic tie-break for automorphic nodes + final content label.
-    // NOTE (bug #23 scope): this orderBy(node) consults INPUT node keys, so
-    // for WL-stable automorphic groups the corpus-scale labels are
-    // deterministic but not isomorphism-invariant — unlike BnodeCanon,
-    // which breaks such ties with budget-capped individualization-
-    // refinement. Corpus-scale individualization would need a recursive
-    // per-orbit join loop; ties are scoped per document (scope key), the
-    // pipeline's bnode labels are themselves generator-deterministic, and
-    // j02/j12 consume these labels only through within-mode comparisons,
-    // so the label-dependence is bounded and documented rather than fixed.
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("scope"), col("h")).orderBy(col("node"))
-    val labeled = hashes
-      .withColumn("scope", substring_index(col("node"), "|", 1))
-      .withColumn("rank", row_number().over(w) - 1)
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("scope"), col("h"))))
-      .withColumn("label", concat(lit("_:c"),
-        substring(sha2(concat_ws("|", col("scope"), col("h"),
-          when(col("n") > 1, col("rank").cast("string")).otherwise(lit(""))), 256), 1, 16)))
-      .select(col("node"), col("label"))
-
-    // relabel via one equi-join on the bnode key per REQUESTED role
-    // (`labeled` is unique per node — one groupBy("node") row — so each left
-    // join is provably non-expanding: row counts and all pass-through
-    // columns are unchanged whether a role joins or skips)
-    def roleJoin(df: DataFrame, role: String, key: String, lbl: String): DataFrame =
-      if (relabelRoles(role))
-        df.join(labeled.withColumnRenamed("node", key).withColumnRenamed("label", lbl), Seq(key), "left")
-      else df.withColumn(lbl, lit(null).cast("string"))
-    val relabeled = roleJoin(roleJoin(roleJoin(withKeys,
-        "subj", "subj_key", "subj_label"),
-        "obj", "obj_key", "obj_label"),
-        "graph", "graph_key", "graph_label")
-      .select(
-        coalesce(col("subj_label"), col("subj")).as("subj"),
-        col("pred"),
-        col("obj_kind"),
-        coalesce(col("obj_label"), col("obj_value")).as("obj_value"),
-        col("obj_datatype"), col("obj_lang"),
-        coalesce(col("graph_label"), col("graph")).as("graph"),
-        col("doc_id"))
-    (relabeled, r)
+  /** Pass 1: per partition, the summed [[ScopeCounts]] of its scopes for
+    * rounds 0 .. `probes`−1, one row per partition.
+    */
+  private[spark] def scopeCounts(scopes: KeyValueGroupedDataset[String, KeyedTriple],
+      probes: Int): Dataset[ScopeCounts] = {
+    implicit val enc: Encoder[ScopeCounts] = Encoders.product[ScopeCounts]
+    scopes.mapGroups((scope, rows) => new ScopeGraph(scope, rows.toVector).counts(probes))
+      .mapPartitions(cs => Iterator(cs.foldLeft(ScopeCounts.zero(probes))(_ + _)))
   }
 
   /** Skew-aware per-predicate profile: two-phase (salted partial → final)
@@ -234,4 +167,122 @@ object Canonicalize {
       .groupBy(col("pred"))
       .agg(sum(col("partial")).as("n"))
   }
+}
+
+/** The blank-node graph of one scope's rows, hashed in memory.
+  *
+  * Its labels are byte for byte those of the SQL join formulation that
+  * PipelineSpec keeps as its reference (`JoinCanonicalize`): signatures are `concat_ws("|", role, pred, other, g)`
+  * (null parts skipped), sorted by UTF-8 bytes as Spark sorts strings, and
+  * joined by "\n"; a node hash is the lowercase hex SHA-256 of
+  * `<scope>\u0000<signatures>`.
+  */
+private final class ScopeGraph(scope: String, rows: Vector[KeyedTriple]) {
+  import ScopeGraph._
+
+  private val ids = mutable.HashMap.empty[String, Int]
+  private val keys = mutable.ArrayBuffer.empty[String]
+  private def id(key: String): Int =
+    if (key == null) -1 else ids.getOrElseUpdate(key, { keys += key; keys.size - 1 })
+
+  // One entry per (node, role) incidence of a distinct row: duplicate triples
+  // must not change the hashes, which depend on the triple set only. The
+  // signature is `pre + other + post`, where other is `lit` when set, else
+  // the neighbour's hash ("_" in round 0) when there is one, else "".
+  private val node, nbr = mutable.ArrayBuilder.make[Int]
+  private val pre, lit, post = mutable.ArrayBuilder.make[String]
+  private def incidence(n: Int, role: String, pred: String, other: String, otherNode: Int, g: String): Unit =
+    if (n >= 0) {
+      node += n; nbr += otherNode; lit += other
+      pre += (if (pred == null) role + "|" else role + "|" + pred + "|")
+      post += (if (g == null) "" else "|" + g)
+    }
+  rows.distinct.foreach { t =>
+    val (s, o, gr) = (id(t.subj_key), id(t.obj_key), id(t.graph_key))
+    val g = if (gr >= 0) "_" else t.graph
+    // U+0001 separates the object fields; spelled as an escape because the
+    // raw control character is invisible in source
+    val objSig = Seq(t.obj_kind, t.obj_value, t.obj_datatype, t.obj_lang).filter(_ != null).mkString("\u0001")
+    incidence(s, "s", t.pred, if (o >= 0) null else objSig, o, g)
+    incidence(o, "o", t.pred, if (s >= 0) null else t.subj, s, g)
+    incidence(gr, "g", t.pred, null, -1, "")
+  }
+  private val (incNode, incNbr, incPre, incLit, incPost) =
+    (node.result(), nbr.result(), pre.result(), lit.result(), post.result())
+  private val n = keys.size
+  private val scopeBytes = scope.getBytes(UTF_8)
+
+  /** Node hashes after one more round; `prev` = null gives round 0. */
+  private def refine(prev: Array[String]): Array[String] = {
+    val sigs = Array.fill(n)(mutable.ArrayBuffer.empty[Array[Byte]])
+    var i = 0
+    while (i < incNode.length) {
+      val other =
+        if (incLit(i) != null) incLit(i)
+        else if (incNbr(i) < 0) ""
+        else if (prev == null) "_"
+        else "#" + prev(incNbr(i))
+      sigs(incNode(i)) += (incPre(i) + other + incPost(i)).getBytes(UTF_8)
+      i += 1
+    }
+    sigs.map { s =>
+      val md = sha256.get()
+      md.reset()
+      md.update(scopeBytes)
+      md.update(0.toByte)
+      s.sortInPlace()(byteOrder).iterator.zipWithIndex.foreach { case (b, j) =>
+        if (j > 0) md.update('\n'.toByte)
+        md.update(b)
+      }
+      hex.formatHex(md.digest())
+    }
+  }
+
+  /** Node count and distinct-hash counts after rounds 0 .. probes-1. Once the
+    * count stops changing or reaches the node count it is carried forward
+    * without hashing: refinement only splits classes, so it stays put.
+    */
+  def counts(probes: Int): ScopeCounts = {
+    val d = new Array[Long](probes)
+    var h = refine(null)
+    d(0) = h.distinct.length.toLong
+    for (k <- 1 until probes) {
+      d(k) =
+        if (d(k - 1) == n || (k >= 2 && d(k - 1) == d(k - 2))) d(k - 1)
+        else { h = refine(h); h.distinct.length.toLong }
+    }
+    ScopeCounts(n.toLong, d)
+  }
+
+  /** The scope's rows (duplicates kept) with the blank nodes of `roles`
+    * relabelled by their round-`round` labels.
+    */
+  def relabel(round: Int, roles: Set[String]): Iterator[TripleRow] = {
+    val h = (1 to round).foldLeft(refine(null))((prev, _) => refine(prev))
+    // nodes sharing a hash are told apart by the byte order of their keys:
+    // deterministic, but not invariant under relabelling the input when the
+    // tie is WL-stable (BnodeCanon individualizes instead)
+    val label = new Array[String](n)
+    (0 until n).groupBy(v => h(v)).foreach { case (hv, members) =>
+      val tied = members.size > 1
+      members.sortBy(v => keys(v).getBytes(UTF_8))(byteOrder).iterator.zipWithIndex.foreach { case (v, rank) =>
+        val md = sha256.get()
+        md.reset()
+        label(v) = "_:c" + hex.formatHex(md.digest(
+          s"$scope|$hv|${if (tied) rank.toString else ""}".getBytes(UTF_8))).substring(0, 16)
+      }
+    }
+    def relabeled(role: String, key: String, orig: String) =
+      if (key != null && roles(role)) label(ids(key)) else orig
+    rows.iterator.map(t => TripleRow(relabeled("subj", t.subj_key, t.subj), t.pred, t.obj_kind,
+      relabeled("obj", t.obj_key, t.obj_value), t.obj_datatype, t.obj_lang,
+      relabeled("graph", t.graph_key, t.graph), t.doc_id))
+  }
+}
+
+private object ScopeGraph {
+  private val sha256 = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("SHA-256"))
+  private val hex = HexFormat.of()
+  /** Spark's string order: UTF-8 bytes compared unsigned. */
+  private val byteOrder: Ordering[Array[Byte]] = (a, b) => Arrays.compareUnsigned(a, b)
 }

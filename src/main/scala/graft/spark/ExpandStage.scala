@@ -78,9 +78,9 @@ object ExpandStage {
   /** Expand one document to triples (pure; also used by ScalaTest directly).
     * Blank-node labels are canonicalized per document with the doc id as
     * scope salt — bnodes never cross documents by construction, so this is
-    * exactly the global canonicalization, computed with zero shuffle. The
-    * join-based global formulation (Canonicalize.global) is the fallback for
-    * corpora where bnodes DO cross rows.
+    * exactly the global canonicalization, computed with zero shuffle.
+    * Canonicalize.global, grouped by scope, covers corpora where bnodes DO
+    * cross rows.
     */
   def expandDoc(
       doc: Doc,

@@ -1,5 +1,6 @@
 package graft.spark
 
+import scala.collection.mutable
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -24,6 +25,66 @@ object SparkTestSession {
 
 class PipelineSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** The bnode-bearing toRdf fixtures, parsed from their expected N-Quads. */
+  private lazy val toRdfBnodeFixtures: Vector[(String, Vector[Triple])] = {
+    val dir = java.nio.file.Paths.get("src/test/resources/w3c/toRdf")
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.list(dir).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith("-out.nq")).toVector.sorted
+      .map { f =>
+        val id = f.stripSuffix("-out.nq")
+        id -> BnodeCanon.parseNQuads(new String(
+          java.nio.file.Files.readAllBytes(dir.resolve(f)), "UTF-8")).toVector
+      }
+      .filter(_._2.exists(t => t.subj.startsWith("_:") || t.objKind == "bnode" || t.graph.startsWith("_:")))
+  }
+
+  private def toRdfRows(fixtures: Vector[(String, Vector[Triple])]): Vector[TripleRow] =
+    fixtures.flatMap { case (id, ts) =>
+      ts.map(t => TripleRow(t.subj, t.pred, t.objKind, t.objValue, t.objDatatype, t.objLang, t.graph, id))
+    }
+
+  /** kgbench's `canon` recipe: default docs with every 5th doc a deep-bnode
+    * doc, renamed `deep-…` so that no two docs share a scope.
+    */
+  private def canonRecipeRows(nDocs: Int): Vector[TripleRow] = {
+    import spark.implicits._
+    val docs = (0 until nDocs).map { i =>
+      if (i % 5 == 4) { val d = SyntheticDocs.deepBnodeDoc(i); d.copy(doc_id = "deep-" + d.doc_id) }
+      else SyntheticDocs.generateDoc(i)
+    }
+    val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
+    ExpandStage.triples(ExpandStage.run(docs.toDS(), ctxB)).collect().toVector
+  }
+
+  /** Rows at the edges of the signature encoding: `|`-bearing doc ids that
+    * share a scope and a tie, a null doc id, a bnode object with a null
+    * value, a null predicate, duplicate triples, bnode graphs, and
+    * non-ASCII labels and literals whose UTF-16 and UTF-8 orders disagree.
+    */
+  private val edgeRows: Vector[TripleRow] = {
+    def chain(doc: String) = Vector(
+      TripleRow("_:b0", "http://p/knows", "bnode", "_:b1", "", "", "", doc),
+      TripleRow("_:b1", "http://p/name", "literal", "x", "http://www.w3.org/2001/XMLSchema#string", "", "", doc))
+    val astral = "\uD834\uDD1E" // U+1D11E: before U+E000 in UTF-16, after it in UTF-8
+    chain("a|1") ++ chain("a|2") ++ chain("a") ++ chain(null) ++ Vector(
+      TripleRow("_:n", "http://p/v", "bnode", null, null, null, null, "e"),
+      TripleRow("_:n", null, "literal", "y", null, null, "", "e"),
+      TripleRow("http://s/e", "http://p/x", "bnode", "_:n", "", "", "_:g", "e"),
+      TripleRow("http://s/e", "http://p/x", "bnode", "_:n", "", "", "_:g", "e"),
+      TripleRow("_:\u00fc", "http://p/q", "literal", "\uE000", "", "", "", "u"),
+      TripleRow("_:\u00fc", "http://p/q", "literal", astral, "", "", "", "u"),
+      TripleRow("_:" + astral, "http://p/q", "literal", "v", "", "", "", "u"),
+      TripleRow("_:\uE000", "http://p/q", "literal", "v", "", "", "", "u"),
+      TripleRow("_:\u65e5", "http://p/q", "literal", "v", null, "ja", "", "u"),
+      TripleRow("http://s/plain", "http://p/plain", "literal", "z", "", "", "", "u"))
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Vector[TripleRow] = {
+    import spark.implicits._
+    df.as[TripleRow].collect().toVector.sortBy(_.toString)
+  }
 
   test("synthetic generator is deterministic and satisfies the span invariant") {
     val d1 = SyntheticDocs.generateDoc(7L)
@@ -248,6 +309,99 @@ class PipelineSpec extends AnyFunSuite {
     triples.unpersist()
   }
 
+  test("grouped canonicalization equals the frozen join formulation: rows and round counts") {
+    import spark.implicits._
+    def hasBnode(t: TripleRow) = t.subj.startsWith("_:") || t.obj_kind == "bnode" || t.graph.startsWith("_:")
+    val corpora = Vector(
+      "canon recipe" -> canonRecipeRows(40),
+      "toRdf fixtures" -> toRdfRows(toRdfBnodeFixtures),
+      "edge rows" -> edgeRows,
+      "blank-node-free rows" -> edgeRows.filterNot(hasBnode),
+      "empty" -> Vector.empty[TripleRow])
+    val roleSets = Vector(Canonicalize.AllRoles, Set("subj"), Set("obj", "graph"))
+    for ((name, rows) <- corpora) {
+      val ds = rows.toDS().cache()
+      val ran = mutable.SortedSet.empty[Int]
+      for (scoped <- Seq(true, false); rounds <- 0 to 3; roles <- roleSets) {
+        val (want, wantR) = JoinCanonicalize.globalWithRounds(ds, rounds, scoped, roles)
+        val (got, gotR) = Canonicalize.globalWithRounds(ds, rounds, scoped, roles)
+        val cfg = s"$name, scoped=$scoped, rounds=$rounds, roles=$roles"
+        val gotRows = sortedRows(got)
+        assert(gotR == wantR, s"$cfg: rounds")
+        assert(got.columns.toSeq == want.columns.toSeq, s"$cfg: columns")
+        assert(gotRows == sortedRows(want), s"$cfg: rows")
+        // stated outright, not only through the reference: input without
+        // blank nodes comes back unchanged after 0 rounds, and scoped mode
+        // passes rows with a null doc_id through unrelabelled
+        if (!rows.exists(hasBnode)) assert(gotR == 0 && gotRows == rows.sortBy(_.toString), s"$cfg: unchanged")
+        if (scoped) assert(gotRows.filter(_.doc_id == null) == rows.filter(_.doc_id == null).sortBy(_.toString),
+          s"$cfg: null doc_id rows")
+        ran += gotR
+      }
+      info(s"$name: ${rows.size} rows, refinement rounds run ${ran.mkString(", ")}")
+      ds.unpersist()
+    }
+  }
+
+  test("canonicalization pass 1 brings back one row per partition, not one per scope") {
+    import spark.implicits._
+    val keyed = Canonicalize.keyedByScope(canonRecipeRows(40).toDF(), scoped = true)
+    val counts = Canonicalize.scopeCounts(Canonicalize.byScope(keyed), 3).collect()
+    val partitions = spark.sparkContext.defaultParallelism max
+      spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val nScopes = keyed.select("scope").na.drop().distinct().count()
+    assert(nScopes > partitions, "the corpus must have more scopes than partitions")
+    assert(counts.length <= partitions)
+    val nodes = keyed.select(explode(array("subj_key", "obj_key", "graph_key"))).na.drop().distinct().count()
+    assert(counts.map(_.nodes).sum == nodes)
+  }
+
+  test("canonical triples do not depend on the input's blank-node labels, except on WL-stable ties") {
+    import spark.implicits._
+    // a random bijection of each doc's bnode labels onto themselves
+    def permute(rows: Vector[TripleRow], seed: Long): Vector[TripleRow] =
+      rows.groupBy(_.doc_id).toVector.sortBy(_._1).flatMap { case (_, ts) =>
+        val labels = ts.flatMap(t => Seq(t.subj, if (t.obj_kind == "bnode") t.obj_value else null, t.graph))
+          .filter(l => l != null && l.startsWith("_:")).distinct.sorted
+        val m = labels.zip(new scala.util.Random(seed ^ ts.head.doc_id.hashCode).shuffle(labels)).toMap
+        def p(l: String) = m.getOrElse(l, l)
+        ts.map(t => t.copy(subj = p(t.subj),
+          obj_value = if (t.obj_kind == "bnode") p(t.obj_value) else t.obj_value, graph = p(t.graph)))
+      }
+    def canon(rows: Vector[TripleRow]) = sortedRows(Canonicalize.global(rows.toDS(), rounds = 3, scoped = true))
+
+    // the canon recipe has no WL-stable ties: every permutation keeps the set
+    val recipe = canonRecipeRows(40)
+    val base = canon(recipe)
+    for (seed <- 1L to 2L) assert(canon(permute(recipe, seed)) == base, s"permutation seed $seed")
+
+    // known counter-examples, one copy per doc, each copy permuted at random:
+    // ties are ranked by input key order, so the label an input node gets
+    // depends on its input label. For the automorphic pair of the test above
+    // that never changes the triple set; for a directed 3-cycle, whose nodes
+    // WL cannot separate, it does.
+    val copies = 24
+    def copiesOf(ts: String => Vector[TripleRow]) = (0 until copies).toVector.flatMap(k => ts(s"k$k"))
+    val pair = copiesOf(d => Vector(
+      TripleRow("http://s/", "http://p/x", "bnode", "_:a", "", "", "", d),
+      TripleRow("http://s/", "http://p/x", "bnode", "_:b", "", "", "", d),
+      TripleRow("_:a", "http://p/q", "literal", "v", "", "", "", d),
+      TripleRow("_:b", "http://p/q", "literal", "v", "", "", "", d)))
+    val cycle = copiesOf(d => Vector(
+      TripleRow("_:a", "http://p/next", "bnode", "_:b", "", "", "", d),
+      TripleRow("_:b", "http://p/next", "bnode", "_:c", "", "", "", d),
+      TripleRow("_:c", "http://p/next", "bnode", "_:a", "", "", "", d)))
+    def breaks(rows: Vector[TripleRow]): Int = {
+      val (a, b) = (canon(rows).groupBy(_.doc_id), canon(permute(rows, 7L)).groupBy(_.doc_id))
+      a.keys.count(d => a(d) != b(d))
+    }
+    val (pairBreaks, cycleBreaks) = (breaks(pair), breaks(cycle))
+    info(s"triple set changed under random relabelling: automorphic pair $pairBreaks/$copies, " +
+      s"directed 3-cycle $cycleBreaks/$copies")
+    assert(pairBreaks == 0)
+    assert(cycleBreaks > 0, "the 3-cycle tie no longer depends on input labels: update ROADMAP direction 1")
+  }
+
   test("j12 pin: canonical labelset hash of the fixed deep-bnode corpus matches SparkEntry's constants") {
     // re-derives the j12 constants from the same code path the query runs:
     // 120-doc deep-bnode corpus → expand → scoped canonicalization →
@@ -278,25 +432,14 @@ class PipelineSpec extends AnyFunSuite {
 
   test("distributed canonicalization is a valid bijective relabeling on every toRdf fixture") {
     // canonical N-Quads are invariant under any BIJECTIVE bnode relabeling —
-    // so Canonicalize.global (doc-scoped iterative joins) must leave
+    // so Canonicalize.global (doc-scoped) must leave
     // BnodeCanon.toCanonicalNQuads unchanged per fixture. A label collision
     // (merging distinct bnodes) or a scope mix-up breaks the equality.
     import spark.implicits._
     import graft.core.{BnodeCanon, Triple}
-    val dir = java.nio.file.Paths.get("src/test/resources/w3c/toRdf")
-    import scala.jdk.CollectionConverters._
-    val fixtures = java.nio.file.Files.list(dir).iterator().asScala
-      .map(_.getFileName.toString).filter(_.endsWith("-out.nq")).toVector.sorted
-      .map { f =>
-        val id = f.stripSuffix("-out.nq")
-        id -> BnodeCanon.parseNQuads(new String(
-          java.nio.file.Files.readAllBytes(dir.resolve(f)), "UTF-8"))
-      }
-      .filter(_._2.exists(t => t.subj.startsWith("_:") || t.objKind == "bnode" || t.graph.startsWith("_:")))
+    val fixtures = toRdfBnodeFixtures
     assert(fixtures.nonEmpty, "expected bnode-bearing toRdf fixtures")
-    val rows = fixtures.flatMap { case (id, ts) =>
-      ts.map(t => TripleRow(t.subj, t.pred, t.objKind, t.objValue, t.objDatatype, t.objLang, t.graph, id))
-    }
+    val rows = toRdfRows(fixtures)
     val relabeled = Canonicalize.global(rows.toDS(), rounds = 3, scoped = true)
       .select("doc_id", "subj", "pred", "obj_kind", "obj_value", "obj_datatype", "obj_lang", "graph")
       .collect()
