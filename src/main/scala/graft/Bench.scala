@@ -1,776 +1,347 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.io.{BufferedReader, File, FileWriter, InputStreamReader, PrintWriter}
+import java.nio.file.{Files, LinkOption, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+import scala.util.{Success, Try, Using}
+import scala.util.control.NonFatal
+import graft.ops.{DedupOps, SimilarityOps}
 import graft.spark.{ExpandStage, RemoteContextPool, SyntheticDocs}
 
-/** Benchmark entry point (driver contract): one JSON line
-  * {"metric":"total","value":sec,"unit":"sec","queries":{...},"sf":...}
-  * plus extra keys: pipeline triples/sec and the N→4N scaling evidence
-  * required by BASELINE.md — measured with real separate executor JVMs via
-  * spark-submit local-cluster[1,8,*] vs local-cluster[4,8,*] on the same
-  * input (falls back to a thread-level proxy if spark-submit is missing).
+/** Benchmark entry point (driver contract): one JSON line on stdout and in
+  * `target/bench.json`, {"metric":"total","value":sec,"unit":"sec",
+  * "queries":{...},"sf":...,"headline":{...},"pipeline":{...},"scaling":{...}}.
+  * Shaped from `SPARK_GRAFT_CPUS` (default: the JVM's processor count), with
+  * k = max(1, cpus/4) cores per executor:
+  *  1. Scaling: serve-mode [[ClusterProbe]]s under spark-submit,
+  *     `local-cluster[1,k,*]` (N) and `local-cluster[4,k,*]` (4N). A round is
+  *     one rep per leg plus that window's [[hwProbe]]. Rounds run until 3 are
+  *     clean, 8 ran, or the scaling deadline kills both probe process trees,
+  *     which ends every blocked read.
+  *  2. Headline: the [[Headline]] queries at `SPARK_GRAFT_SF_DIR` on
+  *     `local[cpus]`, retried once when its own window reads degraded.
+  *  3. Pipeline triples/s; engine-only ceiling, [[EngineProbe]] 1×k vs 4×k threads.
+  * Memory, every JVM alive at once: sbt, this JVM (`SPARK_DRIVER_MEM`), 2
+  * submit drivers of [[HeapMbPerCore]] MiB and 5 pre-touched executors of
+  * HeapMbPerCore·k MiB: with k = 1 and a 4 GiB driver, 9.25 GiB of heap.
+  * One budget bounds the run: [[Budget]] seconds from the sbt launch, which
+  * the driver's kill clock times ([[preMainOverheadSec]]). Scaling ends
+  * [[TailSec]] before it; the headline retry and the engine legs run only if
+  * they fit, and the engine legs are killed at the budget.
   */
 object Bench {
+  val Budget = 560.0
+  /** Warmup + headline with its retry + pipeline + engine legs: 120-190 s on 4 cores. */
+  val TailSec = 200.0
+  /** The engine legs, forks included, with margin: ~30 s on 4 cores. */
+  val EngineSec = 60.0
+  /** Docs per rep per executor core: the 4N leg runs ≥ 5 s, so fixed job
+    * overhead (scheduling, broadcast, stage setup: 0.3-0.6 s) stays small. */
+  val DocsPerCore = 375000L
+  val EngineDocsPerCore = 75000L
+  val HwUnitsPerCore = 1536L
+  val HeapMbPerCore = 768
+  val PipeDocs = 40000L
+  /** Steal above this share of capacity during a leg marks its round
+    * unclean; an N→4N ratio outside [CoherentLo, CoherentHi] is a window
+    * artifact, not the engine. */
+  val CleanSteal = 0.20
+  val CoherentLo = 0.35
+  val CoherentHi = 1.05
+  val Headline = Vector(
+    "q01_agg_pricing", "q03_join_broadcast_topn", "q04_join_multi", "q05_window_first_order",
+    "q12_rollup", "d01_dedup_exact", "d03_text_features", "d04_minhash_lsh", "d05_simhash_pairs",
+    "e01_knn_bruteforce", "e02_ann_lsh", "e04_ann_ivf", "j01_expand_triples", "j02_graph_pipeline")
+  private val Jar = "target/scala-2.13/jsonldrsspark_2.13-0.1.0.jar"
+  private val RepRe = """.*\[cluster-probe\] rep=\d+ .* sec=([0-9.]+) .*steal=([0-9.]+|NaN) execs=(\d+).*""".r
+  private val SecRe = """.*\[engine-probe\].* sec=([0-9.]+).*""".r
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+  /** A scaling or hardware ratio can only be trusted inside (0.15, 1.05]:
+    * 4 busy units cannot beat 4× one, and below 0.15 one leg stalled. */
+  def plausible(r: Double): Boolean = r > 0.15 && r <= 1.05
+  /** Lower middle, so with 2 values the smaller one. Contention only slows a
+    * leg, so the faster reading is the less contaminated one. */
+  def median(xs: Seq[Double]): Double = { val s = xs.sorted; s((s.size - 1) / 2) }
+  /** One scaling round: N and 4N leg seconds, the window's hw ceiling, and
+    * the steal share during each leg. */
+  final case class Round(t1: Double, t4: Double, hw: Double, s1: Double, s4: Double) {
+    def valid: Boolean = !t1.isNaN && !t4.isNaN
+    def ratio: Double = if (valid) t1 / t4 / 4.0 else Double.NaN
+    def stealKnown: Boolean = !s1.isNaN && !s4.isNaN
+    def coherent: Boolean = valid && ratio >= CoherentLo && ratio <= CoherentHi
+    def clean: Boolean = stealKnown && s1 <= CleanSteal && s4 <= CleanSteal && coherent
   }
 
-  /** One timed pipeline run: expand `n` synthetic docs → count triples.
-    * Returns (seconds, triples).
-    */
-  private def pipelineRun(spark: SparkSession, n: Long, parts: Int): (Double, Long) = {
-    val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
-    val docs = SyntheticDocs.generate(spark, n, parts)
-    val t0 = System.nanoTime()
-    val count = ExpandStage.triples(ExpandStage.run(docs, ctxB)).count()
-    ((System.nanoTime() - t0) / 1e9, count)
+  final case class Selection(valid: Seq[Round], kept: Seq[Round], clean: Seq[Round]) {
+    /** The lower-middle round by ratio among the clean rounds, else the kept,
+      * else the valid ones: its ratio and hw ceiling share one window. */
+    def chosen: Option[Round] = {
+      val usable = Seq(clean, kept, valid).find(_.nonEmpty).getOrElse(Nil).sortBy(_.ratio)
+      usable.lift((usable.size - 1) / 2)
+    }
   }
 
-  /** Seconds already burned on the DRIVER's kill clock before main()
-    * started: the driver's timeout wraps `sbt "runMain graft.Bench"`, so sbt
-    * startup + this JVM's fork/preTouch count against the ~580 s budget but
-    * are invisible to a main()-anchored clock. In a degraded window sbt
-    * startup alone was measured at ~190 s (round-5 continuation: three
-    * artifact-less kills in a row — every internal guard held, the run was
-    * simply 190 s older than it believed). Walk the /proc ancestry (this JVM
-    * → sbt JVM → timeout) and take the earliest start time of a RELATED
-    * ancestor (java/sbt/timeout or a shell whose cmdline carries the sbt
-    * invocation); unrelated long-lived shells stop the walk.
-    */
-  private def preMainOverheadSec(): Double = {
-    try {
-      val hz = 100.0 // Linux USER_HZ on this kernel
-      val uptime = scala.io.Source.fromFile("/proc/uptime").mkString
-        .split("\\s+")(0).toDouble
-      def statOf(pid: Long): Option[(Long, Double, String)] =
-        try {
-          val s = scala.io.Source.fromFile(s"/proc/$pid/stat").mkString
-          // comm may contain spaces/parens: fields resume after the last ')'
-          val rest = s.substring(s.lastIndexOf(')') + 2).split(" ")
-          val ppid = rest(1).toLong // field 4
-          val startSec = rest(19).toDouble / hz // field 22 (ticks since boot)
-          val cmd =
-            try scala.io.Source.fromFile(s"/proc/$pid/cmdline").mkString
-              .replace('\u0000', ' ')
-            catch { case _: Throwable => "" }
-          Some((ppid, startSec, cmd))
-        } catch { case _: Throwable => None }
-      var pid = ProcessHandle.current().pid()
-      var earliest = Double.MaxValue
-      var hops = 0
-      var walking = true
-      while (walking && hops < 6 && pid > 1) {
-        statOf(pid) match {
-          case Some((ppid, startSec, cmd)) =>
-            val related = hops == 0 || cmd.contains("sbt") ||
-              cmd.contains("java") || cmd.startsWith("timeout")
-            if (related) { earliest = math.min(earliest, startSec); pid = ppid; hops += 1 }
-            else walking = false
-          case None => walking = false
-        }
-      }
-      if (earliest == Double.MaxValue) 0.0
-      // cap: a misattributed ancient ancestor must not zero the budget —
-      // 400 s of real overhead already means "emit the minimal artifact"
-      else math.min(400.0, math.max(0.0, uptime - earliest))
-    } catch { case _: Throwable => 0.0 }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // global wall-clock accounting: the driver kills the whole run at its
-    // own budget (~580 s) measured from the sbt LAUNCH, not from main() —
-    // anchor the elapsed clock at the launch (preMainOverheadSec) so every
-    // elastic block below sheds load against the budget that actually
-    // remains. A silent 10-minute run with no JSON line is strictly worse
-    // than a run with fewer scaling rounds.
-    val mainT0 = System.nanoTime()
-    val preMainSec = preMainOverheadSec()
-    def mainElapsed: Double = (System.nanoTime() - mainT0) / 1e9 + preMainSec
-    def note(msg: String): Unit = System.err.println(f"[bench] t=$mainElapsed%.0fs $msg")
-    note(f"pre-main overhead $preMainSec%.0fs (sbt + JVM fork, on the driver kill clock)")
-    val spark = session(cpus)
-
-    // ---- SCALING PHASE FIRST (north-rule gate): the serve probes get the
-    // freshest budget and are torn down before the warmup/headline section,
-    // so headline numbers see zero probe interference. Selection and the
-    // context-only engine-ceiling legs run after the headline (pure
-    // computation / guarded forks).
-    // 3M docs per rep: at 1.2M the 4N leg finished in ~2.1-2.6 s and fixed
-    // job overhead (scheduling 192 tasks across 4 executors, broadcast,
-    // stage setup ≈ 0.3-0.6 s) ate ~20% of the measurement, understating
-    // steady-state scaling — the question the 100 TB gate actually asks.
-    // At 3M the 4N leg runs ~5-6 s (overhead share <10%) and a round still
-    // costs well under a minute with serve-mode probes.
-    val clusterProbeDocs = 3000000L
-    // Scaling evidence (north_rule: N vs 4N executors via spark-submit).
-    // local-cluster gives real separate executor JVMs: 1×8-core executor vs
-    // 4×8-core executors on the same input.
-    //
-    // SERVE-MODE probes: one long-lived spark-submit per leg, each running
-    // one timed rep per "rep" command on stdin. Round 3's design re-spawned
-    // both clusters per round (JVM + 4×4g preTouch + warmup ≈ 150 s/round),
-    // so at most 3 rounds fit the budget and a degraded-host window (they
-    // last MINUTES here, and are sometimes invisible to the steal counter —
-    // measured: 4N leg 5.1 s at 1% steal vs 2.2 s healthy minutes later)
-    // could own every round. With reps-on-demand a round costs one rep per
-    // leg (~10-25 s), so Bench samples many windows and keeps the best
-    // steal-clean, ratio-coherent ones.
-    final case class ClusterProbeProc(proc: Process, out: java.io.BufferedReader, executors: Int,
-        ready: java.util.concurrent.atomic.AtomicBoolean)
-    val RepRe = """.*\[cluster-probe\] rep=\d+ .* sec=([0-9.]+) .*steal=([0-9.]+|NaN) execs=(\d+).*""".r
-    def startProbe(executors: Int, watchdogSec: Long): Option[ClusterProbeProc] = {
-      val jar = new java.io.File("target/scala-2.13/jsonldrsspark_2.13-0.1.0.jar")
-      if (!jar.exists()) return None
-      val cmd = Seq("/opt/spark/bin/spark-submit",
-        // 3g heaps: the probe streams generated docs (nothing cached) and a
-        // rep's working set is small; the binding constraint is PRETOUCH
-        // TIME at startup — 5 concurrent JVMs page-faulting their heaps in
-        // (measured: a fragmented-memory window stretched 4g-per-JVM
-        // pretouch past a 300 s watchdog). 192 partitions = 6 exact waves
-        // on 32 cores (finer granularity smooths per-partition variance
-        // into a shorter straggler tail).
-        "--master", s"local-cluster[$executors,8,3584]",
-        "--conf", "spark.executor.memory=3g",
-        "--conf", "spark.executor.extraJavaOptions=-Xms3g -XX:+AlwaysPreTouch",
-        "--conf", "spark.driver.memory=2g",
-        "--conf", "spark.sql.shuffle.partitions=64",
-        "--conf", "spark.ui.enabled=false",
-        // tasks are location-agnostic (generated input): never hold a core
-        // waiting for locality
-        "--conf", "spark.locality.wait=0",
-        "--class", "graft.ClusterProbe", jar.getPath, clusterProbeDocs.toString, "192", "serve")
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_HOME", "/opt/spark")
-      pb.redirectErrorStream(true)
-      try {
-        val p = pb.start()
-        // startup watchdog from SPAWN time: a degraded window can stretch
-        // even the minimal serve-mode warm (measured ready times: ~100-150 s
-        // parallel in a calm window, 250 s+ degraded); a probe that is not
-        // ready in time is killed so the run degrades to a RESPAWN (below)
-        // or fewer probes instead of hanging past the driver budget with
-        // zero output
-        val ready = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val killer = new Thread(() => {
-          val deadline = System.nanoTime() + watchdogSec * 1000000000L
-          while (!ready.get() && System.nanoTime() < deadline) Thread.sleep(500)
-          if (!ready.get()) {
-            // take the executor/worker descendants down too — orphaned
-            // executors from a killed first attempt would contend with the
-            // respawned probes
-            p.descendants().forEach(h => { h.destroyForcibly(); () })
-            p.destroyForcibly()
-          }
-        })
-        killer.setDaemon(true)
-        killer.start()
-        Some(ClusterProbeProc(p, null, executors, ready))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
-    // block until the probe's ready line (watchdog kills → readLine null);
-    // everything read is teed to target/cluster_probe_<n>.log so a killed or
-    // misbehaving probe leaves a post-mortem trail
-    def awaitReady(h: Option[ClusterProbeProc]): Option[ClusterProbeProc] = h.flatMap { pr =>
-      val tee = try new java.io.PrintWriter(
-        new java.io.FileWriter(s"target/cluster_probe_${pr.executors}.log", false), true)
-      catch { case scala.util.control.NonFatal(_) => null }
-      def killTree(): Unit = {
-        pr.proc.descendants().forEach(h => { h.destroyForcibly(); () })
-        pr.proc.destroyForcibly()
-      }
-      try {
-        val br = new java.io.BufferedReader(new java.io.InputStreamReader(pr.proc.getInputStream))
-        var line = br.readLine()
-        while (line != null && !line.contains("[cluster-probe] ready")) {
-          if (tee != null) tee.println(line)
-          line = br.readLine()
-        }
-        if (tee != null && line != null) tee.println(line)
-        pr.ready.set(true)
-        if (line == null) { killTree(); None }
-        else Some(pr.copy(out = br))
-      } catch { case scala.util.control.NonFatal(_) => killTree(); None }
-      finally if (tee != null) tee.close()
-    }
-    // one timed rep; NaN when the probe died, timed out, or ran with a short
-    // cluster (fewer registered executors than requested — not a valid leg)
-    def legRep(pr: ClusterProbeProc): (Double, Double) = try {
-      // rep watchdog: a wedged Spark job inside the probe would otherwise
-      // block readLine past the driver's kill deadline — the one unbounded
-      // wait left once the startup watchdog disarms. Killing the probe makes
-      // readLine fail -> NaN -> the round loop sees a dead probe and stops.
-      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val killer = new Thread(() => {
-        val capSec = math.max(math.min(120.0, 520.0 - mainElapsed), 1.0)
-        val deadline = System.nanoTime() + (capSec * 1e9).toLong
-        while (!done.get() && System.nanoTime() < deadline) Thread.sleep(500)
-        if (!done.get()) pr.proc.destroyForcibly()
-      })
-      killer.setDaemon(true)
-      killer.start()
-      try {
-        pr.proc.getOutputStream.write("rep\n".getBytes("UTF-8"))
-        pr.proc.getOutputStream.flush()
-        var line = pr.out.readLine()
-        var res = (Double.NaN, Double.NaN)
-        var found = false
-        while (!found && line != null) {
-          line match {
-            case RepRe(sec, st, ex) =>
-              found = true
-              if (ex.toInt >= pr.executors) res = (sec.toDouble, st.toDouble)
-            case _ => line = pr.out.readLine()
-          }
-        }
-        res
-      } finally done.set(true)
-    } catch { case scala.util.control.NonFatal(_) => (Double.NaN, Double.NaN) }
-    def stopProbe(pr: Option[ClusterProbeProc]): Unit = pr.foreach { p =>
-      try {
-        p.proc.getOutputStream.write("quit\n".getBytes("UTF-8"))
-        p.proc.getOutputStream.flush()
-      } catch { case scala.util.control.NonFatal(_) => }
-      // 5 s grace then forceful: teardown runs between scaling and headline,
-      // where every second is uncharged budget. destroyForcibly kills only
-      // the submit JVM — take the executor/worker descendants down with it
-      if (!p.proc.waitFor(5, java.util.concurrent.TimeUnit.SECONDS)) {
-        p.proc.descendants().forEach(h => { h.destroyForcibly(); () })
-        p.proc.destroyForcibly()
-      }
-    }
-    // Pure-JVM hardware-scaling ceiling: fixed total work, 8 vs 32 threads,
-    // no Spark. With only 8 of 32 cores busy the box delivers more per-core
-    // throughput (clock/memory-bandwidth headroom), so no same-box N→4N
-    // proxy can exceed this ratio — report it next to the app efficiency.
-    // One leg runs INSIDE each interleaved scaling round (round-2 judge
-    // finding: a single up-front probe dates a different drift window than
-    // the rounds it contextualizes — this host shifts ±30% in minutes).
-    def hwRun(threads: Int): Double = {
-      val ctr = new java.util.concurrent.atomic.AtomicLong(12288L)
-      def spin(): Long = {
-        var h = 0L
-        while (ctr.getAndDecrement() > 0) {
-          val sb = new java.lang.StringBuilder
-          var i = 0
-          while (i < 20000) { sb.append(i); i += 1 }
-          h ^= sb.toString.hashCode
-        }
-        h
-      }
-      val sink = new java.util.concurrent.atomic.AtomicLong()
-      val t0 = System.nanoTime()
-      val ts = (1 to threads).map(_ => new Thread(() => { sink.addAndGet(spin()); () }))
-      ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
-    def hwProbe(): Double = {
-      // single pair when the reading is plausible (best-of-2 ALWAYS cost
-      // ~12 s/round and pushed round 3 of r03 past the budget guard). But a
-      // pair whose legs straddle a window flip reads garbage — measured
-      // 0.12 (t32 leg stalled) and 1.26 (t8 leg stalled, physically >1.05)
-      // in adjacent rounds of one r05 run — so an IMPLAUSIBLE reading gets
-      // one retry: ~6-12 s, paid only in drift windows, and it keeps the
-      // median round's own hw evidence usable (an implausible median-round
-      // probe voids the artifact via hwRoundCeiling > 1.05 even when the
-      // cross-round fallback is fine).
-      def pair(): Double = {
-        val t8 = hwRun(8)
-        val t32 = hwRun(32)
-        (t8 / t32) / 4.0
-      }
-      val first = pair()
-      if (first > 0.15 && first <= 1.05) first else pair()
-    }
-
-    // Workload-true ceiling: the SAME engine, SAME executor topology
-    // (1 JVM × 8 threads vs 4 JVMs × 8 threads), NO Spark. The JSON
-    // expand workload is allocation/memory-bandwidth heavy and scales
-    // worse 8→32 busy cores than cache-resident compute; this ratio is
-    // the best any 4-executor run of this workload can do on this box.
-    // Spark-layer scaling efficiency = cluster ratio / this ceiling.
-    def engineCeiling(): (Int, Double) => Double = {
-      val jar = new java.io.File("target/scala-2.13/jsonldrsspark_2.13-0.1.0.jar")
-      if (!jar.exists()) return (_: Int, _: Double) => Double.NaN
-      val cp = jar.getPath + ":/opt/spark/jars/*"
-      def fork(start: Long, end: Long): Process =
-        new ProcessBuilder("java", "-Xms5g", "-Xmx5g", "-XX:+AlwaysPreTouch", "-cp", cp,
-          "graft.EngineProbe", "8", start.toString, end.toString)
-          .redirectErrorStream(true).start()
-      val total = 600000L
-      val SecRe = """.*\[engine-probe\].* sec=([0-9.]+).*""".r
-      def leg(procs: Int, killAfterSec: Double): Double = {
-        val chunk = total / procs
-        val ps = (0 until procs).map(i => fork(i * chunk, (i + 1) * chunk))
-        // hard bound from FORK time: engine legs are context-only and must
-        // never push the run past the driver's kill deadline (a degraded
-        // window stretched the leg pair to 300 s and a full v8 run to 652 s
-        // — past the ~580 s budget, which would have voided the JSON)
-        val killer = new Thread(() => {
-          Thread.sleep(math.max(killAfterSec, 1.0).toLong * 1000L)
-          ps.foreach(p => if (p.isAlive) p.destroyForcibly())
-        })
-        killer.setDaemon(true)
-        killer.start()
-        // every read is fallible: a killer-destroyed process surfaces as
-        // IOException("Stream closed") from readLine, NOT as a null line —
-        // uncaught it killed the whole run (and its JSON) once
-        val readers = ps.map { p =>
-          val br = new java.io.BufferedReader(new java.io.InputStreamReader(p.getInputStream))
-          try {
-            var line = br.readLine()
-            while (line != null && !line.contains("ready")) line = br.readLine()
-          } catch { case scala.util.control.NonFatal(_) => }
-          br
-        }
-        // every process is warmed and parked at the barrier — release all at
-        // once so the timed windows overlap fully
-        ps.foreach { p =>
-          try { p.getOutputStream.write('\n'); p.getOutputStream.flush() }
-          catch { case scala.util.control.NonFatal(_) => }
-        }
-        val secs = readers.zip(ps).map { case (br, p) =>
-          var sec = Double.NaN
-          try {
-            var line = br.readLine()
-            while (line != null) {
-              line match { case SecRe(s) => sec = s.toDouble; case _ => }
-              line = br.readLine()
-            }
-          } catch { case scala.util.control.NonFatal(_) => }
-          p.waitFor()
-          sec
-        }
-        secs.max // leg wall time = slowest process
-      }
-      leg // expose the single-leg runner (procs, killAfterSec)
-    }
-
-    var mode = "local-cluster-executors"
-    hwRun(32) // JIT warmup for the per-round hw probes
-    val engLeg = engineCeiling()
-    // interleave cluster-N, cluster-4N, hw-probe per round: the host's
-    // delivered throughput drifts ±30% minute-to-minute, so a single
-    // N-then-4N pair makes the ratio a lottery (measured 0.50, 0.68 and 0.74
-    // for identical code in adjacent windows). Each round's hw probe samples
-    // the SAME drift window as the cluster legs it contextualizes; the
-    // engine-ceiling legs moved OUT of the rounds (round-3): at ~90 s/round
-    // of fork+preTouch overhead they pushed round 3 past the budget guard,
-    // and 2 rounds defeat the median that the whole design rests on.
-    // engine legs run ONCE each (context-only metric): best-of-2 doubled the
-    // fork+preTouch cost and in a degraded window pushed the run past the
-    // driver budget; the plausibility band on the ratio nulls garbage legs
-    // A leg is only trustworthy if the hypervisor left us the CPU during it:
-    // this VM sees ~10% steal under full load even in calm windows and
-    // 50%+ in bursts (the bursts are what slowed round-3/4 4N legs 2.5×
-    // while the 8-core N leg sailed through — steal punishes full-width
-    // demand disproportionately, which is exactly what breaks an N-vs-4N
-    // ratio). 20% of capacity is the clean bound: comfortably above the
-    // calm-window baseline, far below the 2×-leg-slowdown regime.
-    val CleanSteal = 0.20
-    // ratio-coherence band: this workload's genuine N→4N efficiency is
-    // 0.55-0.83 measured across rounds 2-4 (engine-topology ceiling 0.47+,
-    // hw ceiling 0.76-0.83); a round reading below 0.35 means 4× the cores
-    // delivered under 1.4× the throughput — a degraded-window artifact on
-    // this box, not a property of the engine (measured: the same leg pair
-    // reads 0.26 and 0.57 twenty minutes apart, steal-clean both times).
-    // Above 1.05 is physically impossible. Either way the round cannot
-    // certify a gate; keep sampling.
-    val CoherentLo = 0.35
-    val CoherentHi = 1.05
-    final case class ScalingRound(t1: Double, t4: Double, hw: Double, s1: Double, s4: Double) {
-      def valid: Boolean = !t1.isNaN && !t4.isNaN
-      def ratio: Double = if (valid) (t1 / t4) / 4.0 else Double.NaN
-      def stealKnown: Boolean = !s1.isNaN && !s4.isNaN
-      def coherent: Boolean = valid && ratio >= CoherentLo && ratio <= CoherentHi
-      def clean: Boolean = stealKnown && s1 <= CleanSteal && s4 <= CleanSteal && coherent
-    }
-    // probes start sequentially (each warmup gets the whole box); the 4N
-    // probe only if the N probe came up. While one leg runs a rep the other
-    // app idles (registered executors cost ~nothing between reps).
-    // probes spawn IN PARALLEL (their startup is JVM boot + preTouch + a
-    // minimal warm — overlapping them halves the serial cost in degraded
-    // windows); startup is charged against the same budget: skip legs that
-    // cannot pay for themselves AND still leave room to emit the JSON line
-    // first attempt gets 210 s (calm-window ready is 100-150 s); a failed
-    // probe gets ONE respawn below, so the watchdog no longer needs to
-    // cover the slow tail alone
-    // JVM-SPAWN CANARY (round-5 live finding): the host has a mode lasting
-    // an hour+ where NEW JVMs stall in heap pretouch (probe executor JVMs
-    // launch and then never register — their 3g -Xms pretouch runs 10-30×
-    // slow) while plain forks and warm in-JVM compute stay fast. Three full
-    // Bench runs died to it: 370+ s lost waiting on probes, no budget left
-    // for the headline, NO JSON for the driver. Measure the actual failing
-    // operation — a 1g-pretouch JVM boot (healthy < 1 s on this box;
-    // the degraded mode implies ≥ 70 s/GiB) — and skip ALL multi-JVM phases
-    // (serve probes, engine-ceiling legs) when it is slow: the in-JVM
-    // thread-proxy fallback supplies scaling evidence and the headline/
-    // pipeline JSON always emits. A slow first reading gets one confirming
-    // retry (windows flip on second timescales here).
-    def spawnCanary(): Double = {
-      val t0 = System.nanoTime()
-      try {
-        // -version output is tiny (no pipe-fill risk); bounded wait, then kill
-        val p = new ProcessBuilder("java", "-Xms1g", "-Xmx1g", "-XX:+AlwaysPreTouch", "-version")
-          .redirectErrorStream(true).start()
-        p.waitFor(30, java.util.concurrent.TimeUnit.SECONDS)
-        if (p.isAlive) p.destroyForcibly()
-      } catch { case scala.util.control.NonFatal(_) => }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val canarySec = { val a = spawnCanary(); if (a <= 5.0) a else math.min(a, spawnCanary()) }
-    val spawnDegraded = canarySec > 5.0
-    if (spawnDegraded)
-      note(f"spawn canary $canarySec%.1fs — window is spawn-degraded, skipping multi-JVM phases")
-    else note(f"spawn canary $canarySec%.1fs")
-    val handleN = if (!spawnDegraded && mainElapsed < 320.0) startProbe(1, 210L) else None
-    val handle4 = if (handleN.isDefined) startProbe(4, 210L) else None
-    // await both CONCURRENTLY: a blocked await on one probe would let the
-    // other's merged log output fill its 64 KB pipe and stall that JVM
-    var probeN: Option[ClusterProbeProc] = None
-    var probe4: Option[ClusterProbeProc] = None
-    locally {
-      val tN = new Thread(() => probeN = awaitReady(handleN))
-      val t4 = new Thread(() => probe4 = awaitReady(handle4))
-      tN.start(); t4.start(); tN.join(); t4.join()
-    }
-    note(f"serve probes up n=${probeN.isDefined} 4n=${probe4.isDefined} t=$mainElapsed%.0fs")
-    // ONE respawn for probes that missed the first readiness window: the
-    // documented bad regime flips on SECONDS timescales (BENCH.md round 5),
-    // and a measured failure shape is a probe whose executors launch in
-    // ~30 s and then wedge — a fresh spawn in the next window usually comes
-    // straight up. Budget-capped so the worst case (respawn also fails at
-    // t≈230+150=380) leaves the same headline start time as the old single
-    // 300 s watchdog + round tail; never attempted late.
-    if (!spawnDegraded && (probeN.isEmpty || probe4.isEmpty) && mainElapsed < 240.0) {
-      val cap = math.min(150L, (390.0 - mainElapsed).toLong)
-      note(f"respawning failed probes (n=${probeN.isEmpty} 4n=${probe4.isEmpty}) cap=${cap}s")
-      val hN = if (probeN.isEmpty) startProbe(1, cap) else None
-      val h4 = if (probe4.isEmpty) startProbe(4, cap) else None
-      val tN = new Thread(() => hN.foreach(h => probeN = awaitReady(Some(h))))
-      val t4 = new Thread(() => h4.foreach(h => probe4 = awaitReady(Some(h))))
-      tN.start(); t4.start(); tN.join(); t4.join()
-      note(f"serve probes up n=${probeN.isDefined} 4n=${probe4.isDefined} t=$mainElapsed%.0fs (after respawn)")
-    }
-    var rounds = Vector.empty[ScalingRound]
-    var worstRoundSecs = 0.0
-    (probeN, probe4) match {
-      case (Some(pn), Some(p4)) =>
-        // ≥3 rounds so a median exists and one degraded-host window can be
-        // rejected. Keep sampling until 3 CLEAN rounds (steal-bounded AND
-        // ratio-coherent) exist, up to 8 — serve-mode reps are cheap enough
-        // that extra rounds cost ~25-45 s each, and the degraded windows
-        // this host produces last minutes, so later rounds genuinely sample
-        // different conditions. Budget guards stay predictive: a new round
-        // starts only if one more round of the worst observed duration
-        // (plus drift margin) still finishes inside the driver budget — the
-        // absolute caps alone green-light a round they cannot pay (the
-        // round-3 zero-output incident).
-        var continue = true
-        while (continue) {
-          val roundT0 = System.nanoTime()
-          val (t1, s1) = legRep(pn)
-          val (t4, s4) = legRep(p4)
-          val r = ScalingRound(t1, t4, hwProbe(), s1, s4)
-          note(f"scaling round done n=${r.t1}%.1fs (steal=${r.s1}%.2f) 4n=${r.t4}%.1fs (steal=${r.s4}%.2f) hw=${r.hw}%.2f clean=${r.clean}")
-          rounds :+= r
-          worstRoundSecs = math.max(worstRoundSecs, (System.nanoTime() - roundT0) / 1e9)
-          // scaling runs FIRST: its phase cap must leave the warmup/headline/
-          // pipeline/JSON section intact (measured 50-135 s incl. degraded
-          // windows). Rounds are cheap (one rep per leg + hw probe, 12-45 s)
-          // so even a 300 s probe startup leaves room for 3-5 of them.
-          // scaling runs FIRST: its phase cap must leave the warmup/headline/
-          // pipeline/JSON section intact (measured 50-135 s incl. degraded
-          // windows, uncharged by any later guard). Keep sampling while both
-          // probes are ALIVE — an invalid round (short cluster during an
-          // executor re-registration, a timed-out rep against a live probe)
-          // must not abort the search the way a dead probe does.
-          continue = pn.proc.isAlive && p4.proc.isAlive &&
-            rounds.count(_.clean) < 3 && rounds.size < 8 &&
-            mainElapsed < 380.0 && mainElapsed + worstRoundSecs * 1.25 < 420.0
-        }
-      case _ =>
-    }
-    stopProbe(probeN)
-    stopProbe(probe4)
-
-    val headline = Vector(
-      "q01_agg_pricing", "q03_join_broadcast_topn", "q04_join_multi", "q05_window_first_order",
-      "q12_rollup", "d01_dedup_exact", "d03_text_features", "d04_minhash_lsh", "d05_simhash_pairs",
-      "e01_knn_bruteforce", "e02_ann_lsh", "e04_ann_ivf", "j01_expand_triples", "j02_graph_pipeline")
-    val all = SparkEntry.queries
-    // untimed warmup: session/codegen/parquet-footer setup otherwise lands
-    // entirely on the first measured query (q01 read ~3 s of one-time cost).
-    // TIMED AS WINDOW EVIDENCE: healthy warmup ≈ 25 s; the r04 voided
-    // headline's warmup ran 67 s — warmup time is a degraded-window tell the
-    // steal counter misses.
-    // BUDGET BACKSTOP (round-5 live finding, three lost artifacts): when the
-    // probe phase already ate the budget AND the window is compute-degraded,
-    // the remaining sections must shed load so the JSON line still emits —
-    // a trimmed artifact with suspect=true beats the driver reading nothing.
-    // Kernel warmup is skipped deep in the budget (first-measured-query cost
-    // lands on queries the trimmed core set mostly drops anyway).
-    val deepBudget = mainElapsed > 430.0
-    if (deepBudget) note("deep in budget: trimming warmup to the session warm only")
-    val warmT0 = System.nanoTime()
-    try {
-      spark.range(1000).selectExpr("sum(id)").count()
-      if (!deepBudget) {
-      all.get("q01_agg_pricing").foreach(fn => fn(spark, sfDir).count())
-      // tiny-sample kernel warmup: UDF classload + codegen for the minhash /
-      // simhash / vector expressions otherwise lands entirely on the FIRST
-      // measured d*/e* query (d04 read ~1 s of one-time cost in driver runs
-      // vs its 1.4-1.7 s steady-state warm timing). 64-row samples keep the
-      // warmup in the low seconds while touching every kernel class.
-      val docsSample = spark.read.parquet(s"$sfDir/documents.parquet").limit(64)
-      graft.ops.DedupOps.minhashLsh(docsSample).count()
-      graft.ops.DedupOps.simhashPairs(docsSample).count()
-      // orderBy before limit: lshTopK re-scans its input to join vectors
-      // back by id, so the sample must be deterministic under recomputation
-      // (a bare limit is not)
-      val embSample = spark.read.parquet(s"$sfDir/embeddings.parquet").orderBy("vec_id").limit(64)
-      graft.ops.SimilarityOps.lshTopK(embSample, embSample.limit(4), "vec_id", "embedding", k = 2).count()
-      }
-    } catch {
-      // NonFatal only: an OOM/linkage error here must surface now, not
-      // resurface confusingly inside the first timed query
-      case scala.util.control.NonFatal(e) => System.err.println(s"[bench] warmup failed: $e")
-    }
-    val warmupSec = (System.nanoTime() - warmT0) / 1e9
-    note(f"warmup done in $warmupSec%.1fs")
-
-    // ---- HEADLINE, window-certified like the scaling rounds (round-4 judge
-    // item 1: three rounds running, the headline artifact of record landed in
-    // a steal-invisible degraded window — r04 read 114 s at steal 0.000 while
-    // the same code measures ~21 s healthy). Every attempt carries its own
-    // same-window evidence: the hw thread-scaling probe run immediately
-    // before it (healthy 0.76-0.85 on this box; the r04 degraded window read
-    // 0.60-0.75) and the hypervisor-steal share during it. A suspect first
-    // attempt gets ONE in-budget retry; the reported headline is the cleaner
-    // window's attempt, and `suspect` is the CHOSEN attempt's own evidence.
-    final case class HeadlineAttempt(results: Vector[(String, Double)], hw: Double,
-        steal: Double, wallSec: Double) {
-      def totalSec: Double = results.map(_._2).sum
-      // window tells: the hw probe sampled just before the attempt (healthy
-      // 0.76-0.85; degraded windows read 0.16-0.72) and hypervisor steal
-      // during it. Degraded-window evidence triggers a RETRY (a better
-      // window usually exists minutes away — measured 22.7 s → 19.0 s and
-      // 46.7 s → 13.9 s in r05 runs)...
-      def windowDegraded: Boolean = hw < 0.70 || (!steal.isNaN && steal > CleanSteal)
-      // ...but contention is ONE-SIDED: a shaky window can only INFLATE a
-      // total, so a healthy total still upper-bounds the engine and is safe
-      // to report. `suspect` therefore marks totals that may be
-      // window-INFLATED: measurable steal, a degraded window WITH a slow
-      // total, or the absolute backstop for degradation that starts after
-      // the probe (healthy sf0.1 totals are 14-25 s; the r04 voided
-      // headline read 114 s at steal 0.000). Thresholds are calibrated to
-      // the driver's sf0.1 headline set; re-derive if the set or sf changes.
-      def windowSuspect: Boolean = (!steal.isNaN && steal > CleanSteal) ||
-        (sfDir.contains("0.1") && ((windowDegraded && totalSec > 30.0) || totalSec > 45.0))
-    }
-    // core-set trim: post-warmup, if the run is already deep in budget (a
-    // failed probe phase + a degraded warmup), measure a 5-query core —
-    // one representative per family — instead of all 14, and mark the
-    // headline suspect. The full-set totals are NOT comparable to a trimmed
-    // total; `trimmed` in the headline block says which this artifact is.
-    val trimmedHeadline = mainElapsed > 430.0
-    val headlineSet =
-      if (!trimmedHeadline) headline
-      else Vector("q01_agg_pricing", "q04_join_multi", "d04_minhash_lsh", "e02_ann_lsh", "j01_expand_triples")
-    if (trimmedHeadline) note(s"deep in budget: headline trimmed to ${headlineSet.size} queries")
-    def runHeadline(): HeadlineAttempt = {
-      val hw = hwProbe()
-      val s0 = StealMeter.snap()
-      val t0 = System.nanoTime()
-      val results = headlineSet.flatMap { name =>
-        all.get(name).map { fn =>
-          val q0 = System.nanoTime()
-          try fn(spark, sfDir).count()
-          catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1L }
-          name -> (System.nanoTime() - q0) / 1e9
-        }
-      }
-      val steal = StealMeter.share(s0, StealMeter.snap())
-      HeadlineAttempt(results, hw, steal, (System.nanoTime() - t0) / 1e9)
-    }
-    val warmupSuspect = warmupSec > 50.0
-    val attempt1 = runHeadline()
-    note(f"headline attempt 1: total=${attempt1.totalSec}%.1fs hw=${attempt1.hw}%.2f steal=${attempt1.steal}%.3f warmup_suspect=$warmupSuspect")
-    // retry when the attempt's own window was degraded (even with a healthy
-    // total — a cleaner window usually reads lower still), or the warmup
-    // window was degraded AND the total looks inflated
-    val wantRetry = !trimmedHeadline &&
-      (attempt1.windowDegraded || (warmupSuspect && attempt1.totalSec > 30.0))
-    // predictive budget: the retry (hw probe ~8 s + the attempt's own wall
-    // time with drift margin) plus the pipeline + JSON tail (~45 s) must fit
-    val retryFits = mainElapsed + 8.0 + attempt1.wallSec * 1.25 + 45.0 < 560.0
-    val (chosen, attempts) =
-      if (wantRetry && retryFits) {
-        val attempt2 = runHeadline()
-        note(f"headline attempt 2: total=${attempt2.totalSec}%.1fs hw=${attempt2.hw}%.2f steal=${attempt2.steal}%.3f")
-        // prefer the clean-window attempt; both clean or both dirty → faster
-        val pick =
-          if (attempt2.windowDegraded == attempt1.windowDegraded)
-            (if (attempt2.totalSec < attempt1.totalSec) attempt2 else attempt1)
-          else if (attempt1.windowDegraded) attempt2
-          else attempt1
-        (pick, 2)
-      } else (attempt1, 1)
-    val results = chosen.results
-    val headlineSteal = chosen.steal
-    // the chosen attempt's OWN window evidence; the warmup tell only taints
-    // a first attempt that also reads slow (a clean retry clears it)
-    val headlineSuspect = trimmedHeadline || chosen.windowSuspect ||
-      (attempts == 1 && warmupSuspect && chosen.totalSec > 30.0)
-    note(f"headline done (attempts=$attempts steal=$headlineSteal%.3f hw=${chosen.hw}%.2f suspect=$headlineSuspect)")
-
-    // pipeline throughput at the benchmark parallelism — skipped when the
-    // remaining budget cannot pay for it (JSON emission is the priority)
-    val (tPipe, nTriples) =
-      if (mainElapsed < 505.0) pipelineRun(spark, 40000, cpus) else (Double.NaN, 0L)
-    val triplesPerSec = nTriples / tPipe
-    spark.stop()
-    note(if (tPipe.isNaN) "pipeline skipped (budget)" else "pipeline done")
-
-    // lower-middle for even counts: with 2 surviving rounds the ratio
-    // "median" must not silently become the max. For the per-LEG medians the
-    // lower-middle is also the principled reference point on a shared box:
-    // contention noise is one-sided (it only ever makes a leg slower), so
-    // the faster reading is the less contaminated estimate of the host's
-    // true capability and a leg far above it marks a degraded-window round.
-    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s((s.size - 1) / 2) }
+  /** Drops invalid rounds, and rounds whose N or 4N leg is 2× off that leg's
+    * median: those sampled a degraded window. */
+  def select(rounds: Seq[Round]): Selection = {
     val valid = rounds.filter(_.valid)
-    // leg-level plausibility filter: a round whose N or 4N cluster leg
-    // deviates >2× from the median of that leg across rounds sampled a
-    // degraded-host window — its ratio is a drift artifact, drop it
-    val (kept, dropped) =
-      if (valid.size < 2) (valid, Vector.empty[ScalingRound])
-      else {
-        val mN = median(valid.map(_.t1)); val m4 = median(valid.map(_.t4))
-        valid.partition(r =>
-          r.t1 / mN < 2.0 && mN / r.t1 < 2.0 && r.t4 / m4 < 2.0 && m4 / r.t4 < 2.0)
-      }
-    // steal-certified rounds: both cluster legs measured under the clean
-    // bound. Direct evidence beats the indirect 2× cross-round filter (which
-    // a majority of dirty rounds can skew), so clean rounds take priority.
-    val clean = valid.filter(_.clean)
-    // a ratio must come from ONE drift window: taking min over legs ACROSS
-    // rounds can pair a fast N leg with a slow 4N leg from different windows
-    // (measured 0.38 that way in a window whose per-round ratios were fine).
-    // Report the MEDIAN-ratio surviving round, with ITS hw ceiling.
-    var t1x = Double.NaN
-    var t4x = Double.NaN
-    var engN = Double.NaN
-    var eng4 = Double.NaN
-    var engCeiling = Double.NaN
-    var hwRoundCeiling = Double.NaN // the MEDIAN ROUND's own hw probe
-    // the per-leg filter can reject EVERY round when two rounds' legs
-    // anti-correlate; real cluster measurements still beat the thread
-    // proxy, so fall back to the unfiltered median and let `suspect` flag it
-    val usable = if (clean.nonEmpty) clean else if (kept.nonEmpty) kept else valid
-    if (usable.nonEmpty) {
-      val byRatio = usable.sortBy(r => r.t1 / r.t4)
-      val sel = byRatio((byRatio.size - 1) / 2)
-      t1x = sel.t1; t4x = sel.t4; hwRoundCeiling = sel.hw
-      // engine-topology ceiling (same engine, same 1×8 vs 4×8 JVM topology,
-      // no Spark): measured ONCE after the rounds — context, not a gate.
-      // Best-of-2 legs; a ratio > 1.05 is physically impossible (4 JVMs
-      // can't beat 4× one JVM) and < ~0.15 means the 4-proc leg hit a
-      // pathological window — both report as null rather than poison the
-      // quotient. Skipped entirely if the rounds already ate the budget.
-      if (!spawnDegraded && mainElapsed < 400.0) {
-        engN = engLeg(1, 540.0 - mainElapsed)
-        if (mainElapsed < 480.0) eng4 = engLeg(4, 550.0 - mainElapsed)
-        val r = (engN / eng4) / 4.0
-        if (!r.isNaN && r > 0.15 && r <= 1.05) engCeiling = r
-        note(f"engine ceiling done n=$engN%.1fs 4n=$eng4%.1fs")
-      }
-    } else if (mainElapsed < 300.0) {
-      // fallback: thread-level proxy in fresh in-process sessions — only if
-      // there is still budget to pay for it; a JSON line with null scaling
-      // beats no JSON line at the driver's kill deadline
-      mode = "local-threads"
-      def threadRun(n: Int): Double = {
-        val s = session(n)
-        try { pipelineRun(s, 30000, n); val (t, _) = pipelineRun(s, 300000, n); t }
-        finally s.stop()
-      }
-      t1x = threadRun(8)
-      t4x = threadRun(32)
-    } else {
-      mode = "skipped-budget"
+    def near(t: Double, m: Double): Boolean = t / m < 2.0 && m / t < 2.0
+    val kept = if (valid.size < 2) valid else {
+      val (mN, m4) = (median(valid.map(_.t1)), median(valid.map(_.t4)))
+      valid.filter(r => near(r.t1, mN) && near(r.t4, m4))
     }
-    val efficiency = (t1x / t4x) / 4.0
-    val sparkLayer = efficiency / engCeiling // NOT clamped — surfaced as measured
-    // summary hw ceiling across rounds (median of plausible probes)
-    val hwProbes = rounds.map(_.hw).filterNot(_.isNaN).filter(r => r > 0.15 && r <= 1.05)
-    val hwCeiling = if (hwProbes.nonEmpty) median(hwProbes) else Double.NaN
-    // ceiling-normalized efficiency for the MEDIAN round, against ITS OWN
-    // hw probe (numerator and denominator share one drift window): "of the
-    // scaling this box could deliver to 4× busy cores in that window, how
-    // much did the cluster probe realize?" The denominator gets the same
-    // plausibility floor as every other probe (a 0.05 reading would report
-    // a physically meaningless 10× normalized number): an implausible
-    // round probe falls back to the cross-round median, and if THAT is
-    // missing too the normalized metric is null rather than garbage.
-    val hwDenominator =
-      if (!hwRoundCeiling.isNaN && hwRoundCeiling > 0.15 && hwRoundCeiling <= 1.05) hwRoundCeiling
-      else hwCeiling
-    val hwNormalized = efficiency / hwDenominator
-    // Hard implausibilities only: efficiency > 1.05 (4 executors cannot beat
-    // 4× one executor on one box), a hw probe > 1.05, or no round surviving
-    // the plausibility filter. The engine ceiling / spark-layer quotient are
-    // measured AFTER the rounds (different drift window) and compare a
-    // different workload's scaling — they are reported as context and do
-    // not gate: the same-window gate evidence is hw_normalized_efficiency.
-    // NaN comparisons are false, so the normalized-evidence ABSENCE must be
-    // flagged explicitly: a cluster-mode run where every hw probe failed the
-    // plausibility band would otherwise certify the gate on raw efficiency
-    // alone with suspect=false (the thread-proxy fallback legitimately has
-    // no probes and is exempt)
-    // ... plus the direct window-quality evidence: when steal WAS measurable
-    // and no round came in under the clean bound, every ratio in the run was
-    // taken from a window the hypervisor was interfering with — suspect, even
-    // if the indirect filters happened to pass.
-    val stealMeasured = valid.exists(_.stealKnown)
-    val suspect = efficiency > 1.05 || hwRoundCeiling > 1.05 || hwNormalized > 1.5 ||
-      kept.isEmpty || (hwNormalized.isNaN && mode == "local-cluster-executors") ||
-      (stealMeasured && clean.isEmpty)
+    Selection(valid, kept, valid.filter(_.clean))
+  }
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    val total = f"${results.map(_._2).sum}%.3f"
-    def jd(d: Double): String = if (d.isNaN) "null" else f"$d%.3f"
-    val pipe = s"""{"docs":40000,"triples":$nTriples,"sec":${jd(tPipe)},"triples_per_sec":${jd(triplesPerSec)}}"""
+  /** (efficiency over the chosen round's hw ceiling, the cross-round median
+    * of plausible hw readings), which replaces an implausible round reading. */
+  def hwNormalized(efficiency: Double, roundHw: Double, rounds: Seq[Round]): (Double, Double) = {
+    val hws = rounds.map(_.hw).filter(plausible)
+    val cross = if (hws.nonEmpty) median(hws) else Double.NaN
+    (efficiency / (if (plausible(roundHw)) roundHw else cross), cross)
+  }
+
+  /** Implausible numbers, no hw-normalized evidence, no round surviving the
+    * leg filter, or steal measured and no round clean. */
+  def scalingSuspect(sel: Selection, efficiency: Double, roundHw: Double, normalized: Double): Boolean =
+    efficiency > 1.05 || roundHw > 1.05 || normalized > 1.5 || normalized.isNaN || sel.kept.isEmpty ||
+      (sel.valid.exists(_.stealKnown) && sel.clean.isEmpty)
+
+  /** One headline pass with its window evidence: the hw probe taken just
+    * before it and the steal share during it. */
+  final case class Attempt(results: Seq[(String, Double)], hw: Double, steal: Double, wallSec: Double) {
+    def total: Double = results.map(_._2).sum
+    /** Contention only inflates a total, so this marks it as possibly inflated. */
+    def degraded: Boolean = hw < 0.70 || steal > CleanSteal
+  }
+
+  /** The driver's JSON line. Keys whose mechanism is gone keep constant values. */
+  def render(sfDir: String, warmupSec: Double, attempts: Seq[Attempt], triples: Long, pipeSec: Double,
+      k: Int, rounds: Seq[Round], engN: Double, eng4: Double): String = {
+    def jd(d: Double): String = if (d.isNaN || d.isInfinite) "null" else f"$d%.3f"
+    val chosen = attempts.minBy(a => (a.degraded, a.total))
+    val sel = select(rounds)
+    val (t1, t4, roundHw) = sel.chosen.fold((Double.NaN, Double.NaN, Double.NaN))(r => (r.t1, r.t4, r.hw))
+    val eff = t1 / t4 / 4.0
+    val (norm, cross) = hwNormalized(eff, roundHw, rounds)
+    val engCeiling = Some(engN / eng4 / 4.0).filter(plausible).getOrElse(Double.NaN)
+    val mode = if (sel.chosen.isDefined) "local-cluster-executors" else "skipped-budget"
+    val qs = chosen.results.map { case (q, s) => s"\"$q\":${jd(s)}" }.mkString("{", ",", "}")
     val roundsJson = rounds.map { r =>
       s"""{"cluster_n_sec":${jd(r.t1)},"cluster_4n_sec":${jd(r.t4)},"efficiency":${jd(r.ratio)},"hw_ceiling":${jd(r.hw)},"steal_n":${jd(r.s1)},"steal_4n":${jd(r.s4)},"clean":${r.clean}}"""
     }.mkString("[", ",", "]")
-    val scaling = s"""{"mode":"$mode","executors_n":1,"executors_4n":4,"cores_per_executor":8,"docs":${if (mode == "local-cluster-executors") clusterProbeDocs else 300000},"t_n_sec":${jd(t1x)},"t_4n_sec":${jd(t4x)},"efficiency_n_to_4n":${jd(efficiency)},"suspect":$suspect,"spawn_canary_sec":${jd(canarySec)},"spawn_degraded":$spawnDegraded,"rounds":$roundsJson,"rounds_dropped":${dropped.size},"clean_rounds":${clean.size},"clean_steal_bound":$CleanSteal,"hw_ceiling_8_to_32_threads":${jd(hwCeiling)},"hw_ceiling_median_round":${jd(hwRoundCeiling)},"hw_normalized_efficiency":${jd(hwNormalized)},"engine_n_sec":${jd(engN)},"engine_4n_sec":${jd(eng4)},"engine_ceiling_1x8_vs_4x8_jvms":${jd(engCeiling)},"spark_layer_efficiency":${jd(sparkLayer)}}"""
-    // headline window certification block (round-4 judge item 1): the same
-    // evidence the scaling rounds carry, attached to the headline itself —
-    // the hw probe sampled immediately before the chosen attempt, the steal
-    // share during it, the warmup duration, and the suspect verdict
-    val headlineJson = s"""{"warmup_sec":${jd(warmupSec)},"attempts":$attempts,"hw_probe":${jd(chosen.hw)},"steal":${jd(chosen.steal)},"attempt1_total_sec":${jd(attempt1.totalSec)},"trimmed":$trimmedHeadline,"suspect":$headlineSuspect}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","headline_steal":${jd(headlineSteal)},"headline":$headlineJson,"pipeline":$pipe,"scaling":$scaling}"""
-    // bare-JSON file: sbt prefixes stdout with [info]/[error], which broke the
-    // driver's tail-scrape in round 1 ("parsed": null) — a known file never does
+    val scaling = s"""{"mode":"$mode","executors_n":1,"executors_4n":4,"cores_per_executor":$k,"docs":${DocsPerCore * k},"t_n_sec":${jd(t1)},"t_4n_sec":${jd(t4)},"efficiency_n_to_4n":${jd(eff)},"suspect":${scalingSuspect(sel, eff, roundHw, norm)},"spawn_canary_sec":null,"spawn_degraded":false,"rounds":$roundsJson,"rounds_dropped":${sel.valid.size - sel.kept.size},"clean_rounds":${sel.clean.size},"clean_steal_bound":$CleanSteal,"hw_ceiling_8_to_32_threads":${jd(cross)},"hw_ceiling_median_round":${jd(roundHw)},"hw_normalized_efficiency":${jd(norm)},"engine_n_sec":${jd(engN)},"engine_4n_sec":${jd(eng4)},"engine_ceiling_1x8_vs_4x8_jvms":${jd(engCeiling)},"spark_layer_efficiency":${jd(eff / engCeiling)}}"""
+    val headline = s"""{"warmup_sec":${jd(warmupSec)},"attempts":${attempts.size},"hw_probe":${jd(chosen.hw)},"steal":${jd(chosen.steal)},"attempt1_total_sec":${jd(attempts.head.total)},"trimmed":false,"suspect":${chosen.degraded}}"""
+    val pipe = s"""{"docs":$PipeDocs,"triples":$triples,"sec":${jd(pipeSec)},"triples_per_sec":${jd(triples / pipeSec)}}"""
+    s"""{"metric":"total","value":${jd(chosen.total)},"unit":"sec","queries":$qs,"sf":"$sfDir","headline_steal":${jd(chosen.steal)},"headline":$headline,"pipeline":$pipe,"scaling":$scaling}"""
+  }
+
+  /** A child process whose merged output a daemon thread drains into a queue
+    * and tees to `target/<name>.log`: no pipe fills, and once the process
+    * dies every [[await]] returns. */
+  private final class Proc(name: String, cmd: String*) {
+    val proc: Process = {
+      val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+      pb.environment().put("SPARK_HOME", sparkHome)
+      pb.start()
+    }
+    private val lines = new LinkedBlockingQueue[Option[String]]()
+    daemon {
+      val in = new BufferedReader(new InputStreamReader(proc.getInputStream))
+      try Using.resource(new PrintWriter(new FileWriter(s"target/$name.log"), true)) { log =>
+        Iterator.continually(in.readLine()).takeWhile(_ != null).foreach { l => log.println(l); lines.put(Some(l)) }
+      } catch { case NonFatal(_) => } finally lines.put(None)
+    }
+    /** The first line `pf` matches; None once the output has ended. */
+    def await[A](pf: PartialFunction[String, A]): Option[A] = {
+      var l = lines.take()
+      while (l.exists(!pf.isDefinedAt(_))) l = lines.take()
+      if (l.isEmpty) lines.put(l)
+      l.map(pf)
+    }
+    def send(s: String): Unit =
+      try { proc.getOutputStream.write(s"$s\n".getBytes("UTF-8")); proc.getOutputStream.flush() }
+      catch { case NonFatal(_) => }
+    def kill(): Unit = { proc.descendants().forEach(h => { h.destroyForcibly(); () }); proc.destroyForcibly(); () }
+  }
+
+  private def daemon(body: => Unit): Unit = { val t = new Thread(() => body); t.setDaemon(true); t.start() }
+  /** The single deadline: kill `ps` with their process trees after `sec`. */
+  private def killAfter(sec: Double, ps: Seq[Proc]): Unit =
+    daemon { Thread.sleep(math.max(0L, (sec * 1000).toLong)); ps.foreach(_.kill()) }
+
+  /** The Spark distribution whose jars/ build.sbt compiles against. */
+  private val SparkInstall = Paths.get("/opt/spark")
+  /** A SPARK_HOME in target/ whose bin/ and jars/ link to the install:
+    * local-cluster workers keep executor logs under $SPARK_HOME/work, which
+    * then stays in the build tree. */
+  private lazy val sparkHome: String = {
+    val home = new File("target/spark-home").getAbsoluteFile
+    home.mkdirs()
+    for (d <- Seq("bin", "jars"); link = new File(home, d).toPath if !Files.exists(link, LinkOption.NOFOLLOW_LINKS))
+      Files.createSymbolicLink(link, SparkInstall.resolve(d))
+    home.getPath
+  }
+
+  private def clusterProbe(execs: Int, k: Int): Option[Proc] = Try(new Proc(s"cluster_probe_$execs",
+    s"$sparkHome/bin/spark-submit", "--master", s"local-cluster[$execs,$k,${HeapMbPerCore * k}]",
+    "--conf", s"spark.executor.memory=${HeapMbPerCore * k}m",
+    "--conf", s"spark.executor.extraJavaOptions=-Xms${HeapMbPerCore * k}m -XX:+AlwaysPreTouch",
+    "--conf", s"spark.driver.memory=${HeapMbPerCore}m", "--conf", "spark.ui.enabled=false",
+    // generated input: no task should hold a core waiting for locality
+    "--conf", "spark.locality.wait=0",
+    // 24·k partitions: 6 waves on the 4N leg's 4k cores
+    "--class", "graft.ClusterProbe", Jar, (DocsPerCore * k).toString, (24 * k).toString)).toOption
+
+  /** One timed rep: (seconds, steal), NaN when the probe died or ran with
+    * fewer executors than its leg asks for. */
+  private def rep(p: Proc, execs: Int): (Double, Double) = {
+    p.send("rep")
+    p.await { case RepRe(sec, st, ex) => if (ex.toInt >= execs) (sec.toDouble, st.toDouble) else (Double.NaN, Double.NaN) }
+      .getOrElse((Double.NaN, Double.NaN))
+  }
+
+  /** Fixed total work, string building on `threads` threads, no Spark; seconds. */
+  private def hwRun(threads: Int, units: Long): Double = {
+    val (ctr, sink) = (new AtomicLong(units), new AtomicLong())
+    val t0 = System.nanoTime()
+    val ts = (1 to threads).map(_ => new Thread(() => while (ctr.getAndDecrement() > 0) {
+      val sb = new java.lang.StringBuilder
+      var i = 0
+      while (i < 20000) { sb.append(i); i += 1 }
+      sink.addAndGet(sb.toString.hashCode)
+    }))
+    ts.foreach(_.start()); ts.foreach(_.join())
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** The hardware's k → 4k thread scaling in this window, the ceiling no
+    * same-host N→4N run can beat: the median of 3 pairs, since a pair whose
+    * legs straddle a window flip reads garbage (0.12 and 1.26 were seen). */
+  private def hwProbe(k: Int): Double =
+    median(Seq.fill(3)(hwRun(k, HwUnitsPerCore * k) / hwRun(4 * k, HwUnitsPerCore * k) / 4.0))
+
+  /** One engine-ceiling leg: `procs` [[EngineProbe]] JVMs of k threads share
+    * EngineDocsPerCore·k docs, released together; the slowest one's seconds. */
+  private def engineLeg(procs: Int, k: Int, secLeft: Double): Double = try {
+    val chunk = EngineDocsPerCore * k / procs
+    val heap = s"${HeapMbPerCore * k}m"
+    val ps = (0 until procs).map(i => new Proc(s"engine_probe_${procs}_$i", "java", s"-Xms$heap", s"-Xmx$heap",
+      "-XX:+AlwaysPreTouch", "-cp", s"$Jar:${SparkInstall.resolve("jars")}/*", "graft.EngineProbe", k.toString,
+      (i * chunk).toString, ((i + 1) * chunk).toString))
+    killAfter(secLeft, ps)
+    ps.foreach(_.await { case l if l.contains("[engine-probe] ready") => () })
+    ps.foreach(_.send(""))
+    ps.map(_.await { case SecRe(s) => s.toDouble }.getOrElse(Double.NaN)).max
+  } catch { case NonFatal(_) => Double.NaN }
+
+  /** Seconds the driver's kill clock (it times `sbt "runMain graft.Bench"`)
+    * ran before main(): the earliest start among this JVM's related /proc
+    * ancestors (java, sbt, timeout, a shell running sbt). Capped at 400 s so
+    * a misattributed ancestor cannot zero the budget. */
+  private def preMainOverheadSec(): Double = try {
+    def read(f: String): String = { val s = scala.io.Source.fromFile(f); try s.mkString finally s.close() }
+    val uptime = read("/proc/uptime").split("\\s+")(0).toDouble
+    // (parent, start in USER_HZ = 100 ticks): fields 4 and 22, counted after
+    // the last ')' since the command name may hold spaces
+    def stat(pid: Long): (Long, Double) = {
+      val s = read(s"/proc/$pid/stat")
+      val f = s.substring(s.lastIndexOf(')') + 2).split(" ")
+      (f(1).toLong, f(19).toDouble / 100.0)
+    }
+    def related(pid: Long): Boolean = Try(read(s"/proc/$pid/cmdline").replace('\u0000', ' '))
+      .map(c => c.contains("sbt") || c.contains("java") || c.startsWith("timeout")).getOrElse(false)
+    var (pid, earliest, hops, walk) = (ProcessHandle.current().pid(), uptime, 0, true)
+    while (walk && hops < 6 && pid > 1 && (hops == 0 || related(pid))) Try(stat(pid)) match {
+      case Success((ppid, start)) => earliest = math.min(earliest, start); pid = ppid; hops += 1
+      case _ => walk = false
+    }
+    math.min(400.0, math.max(0.0, uptime - earliest))
+  } catch { case NonFatal(_) => 0.0 }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString).toInt
+    val k = math.max(1, cpus / 4)
+    val t0 = System.nanoTime()
+    val preMain = preMainOverheadSec()
+    def elapsed: Double = (System.nanoTime() - t0) / 1e9 + preMain
+    def note(msg: String): Unit = System.err.println(f"[bench] t=$elapsed%.0fs $msg")
+    note(f"cpus=$cpus k=$k; $preMain%.0fs passed before main (sbt + JVM fork)")
+    val spark = Verify.session(cpus.toString)
+
+    // ---- scaling first, so its probes are gone before the headline runs
+    hwRun(4 * k, HwUnitsPerCore * k) // JIT warmup
+    val scalingEnd = Budget - TailSec
+    val legs = Seq(1, 4).flatMap(clusterProbe(_, k))
+    killAfter(scalingEnd - elapsed, legs)
+    var rounds = Vector.empty[Round]
+    if (legs.size == 2 && legs.forall(_.await { case l if l.contains("[cluster-probe] ready") => () }.isDefined)) {
+      note("cluster probes ready")
+      var worst = 0.0
+      while (legs.forall(_.proc.isAlive) && rounds.count(_.clean) < 3 && rounds.size < 8 &&
+          elapsed + worst * 1.25 < scalingEnd) {
+        val r0 = elapsed
+        val (t1, s1) = rep(legs(0), 1)
+        val (t4, s4) = rep(legs(1), 4)
+        val r = Round(t1, t4, hwProbe(k), s1, s4)
+        rounds :+= r
+        worst = math.max(worst, elapsed - r0)
+        note(f"round n=$t1%.1fs (steal $s1%.2f) 4n=$t4%.1fs (steal $s4%.2f) hw=${r.hw}%.2f clean=${r.clean}")
+      }
+    }
+    legs.foreach(_.send("quit"))
+    legs.foreach { p => p.proc.waitFor(5, TimeUnit.SECONDS); p.kill() }
+
+    // ---- headline; the warmup takes session, codegen and footer setup off q01
+    val warmT0 = System.nanoTime()
     try {
-      val out = new java.io.File("target/bench.json")
-      out.getParentFile.mkdirs()
-      val w = new java.io.PrintWriter(out, "UTF-8")
-      try w.println(line) finally w.close()
-    } catch { case scala.util.control.NonFatal(e) => System.err.println(s"[bench] bench.json write failed: $e") }
+      spark.range(1000).selectExpr("sum(id)").count()
+      SparkEntry.queries("q01_agg_pricing")(spark, sfDir).count()
+      // 64-row samples load and codegen the minhash / simhash / vector
+      // kernels, which otherwise land on the first timed d*/e* query
+      val docsSample = spark.read.parquet(s"$sfDir/documents.parquet").limit(64)
+      DedupOps.minhashLsh(docsSample).count()
+      DedupOps.simhashPairs(docsSample).count()
+      // ordered: lshTopK re-scans its input, so the sample must not change
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").orderBy("vec_id").limit(64)
+      SimilarityOps.lshTopK(emb, emb.limit(4), "vec_id", "embedding", k = 2).count()
+    } catch { case NonFatal(e) => note(s"warmup failed: $e") }
+    val warmupSec = (System.nanoTime() - warmT0) / 1e9
+    def attempt(): Attempt = {
+      val hw = hwProbe(k)
+      val s0 = StealMeter.snap()
+      val a0 = System.nanoTime()
+      val results = Headline.map { q =>
+        val q0 = System.nanoTime()
+        try SparkEntry.queries(q)(spark, sfDir).count()
+        catch { case e: Throwable => note(s"$q failed: ${e.getMessage}") }
+        q -> (System.nanoTime() - q0) / 1e9
+      }
+      Attempt(results, hw, StealMeter.share(s0, StealMeter.snap()), (System.nanoTime() - a0) / 1e9)
+    }
+    val a1 = attempt()
+    note(f"warmup $warmupSec%.1fs; headline ${a1.total}%.1fs hw=${a1.hw}%.2f steal=${a1.steal}%.3f")
+    val attempts =
+      if (a1.degraded && elapsed + a1.wallSec * 1.25 + EngineSec < Budget) Seq(a1, attempt()) else Seq(a1)
+    if (attempts.size == 2) note(f"headline retry ${attempts(1).total}%.1fs hw=${attempts(1).hw}%.2f")
+
+    val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
+    val pipeDocs = SyntheticDocs.generate(spark, PipeDocs, cpus)
+    val p0 = System.nanoTime()
+    val triples = ExpandStage.triples(ExpandStage.run(pipeDocs, ctxB)).count()
+    val pipeSec = (System.nanoTime() - p0) / 1e9
+    spark.stop()
+    val (engN, eng4) =
+      if (select(rounds).chosen.isEmpty || elapsed + EngineSec > Budget) (Double.NaN, Double.NaN)
+      else (engineLeg(1, k, Budget - elapsed), engineLeg(4, k, Budget - elapsed))
+    note(f"engine legs n=$engN%.1fs 4n=$eng4%.1fs")
+
+    val line = render(sfDir, warmupSec, attempts, triples, pipeSec, k, rounds, engN, eng4)
+    // a bare-JSON file: sbt prefixes stdout lines with [info]
+    try Files.writeString(Paths.get("target/bench.json"), line + "\n")
+    catch { case NonFatal(e) => note(s"bench.json write failed: $e") }
     println(line)
   }
 }

@@ -3,76 +3,44 @@ package graft
 import org.apache.spark.sql.SparkSession
 import graft.spark.{ExpandStage, RemoteContextPool, SyntheticDocs}
 
-/** spark-submit entry for the N-vs-4N *executor* scaling evidence
-  * (north_rule): master comes from spark-submit — run with
-  * `--master local-cluster[1,8,6144]` (N) and `--master local-cluster[4,8,6144]`
-  * (4N); each executor is its own JVM, as on a real cluster.
+/** spark-submit entry for [[Bench]]'s N-vs-4N executor scaling legs; the
+  * master (`local-cluster[1,k,M]` or `local-cluster[4,k,M]`) comes from
+  * spark-submit, so each executor is its own JVM, as on a real cluster.
   *
-  *   args: <docs> <partitions> <reps | "serve">
+  *   args: <docs> <partitions>
   *
-  * "serve" mode: warm up, print a ready line, then run ONE timed rep per
-  * "rep" command on stdin (exit on "quit"/EOF). Bench drives both cluster
-  * sizes this way and interleaves reps — a scaling round then costs one rep
-  * per leg (~10-25 s) instead of a full JVM-spawn + preTouch + warmup cycle
-  * (~150 s), so many rounds fit the budget and the round selection can
-  * reject the host's degraded windows (which last minutes and are sometimes
-  * invisible to the steal counter) instead of praying one round lands well.
+  * Warms on a few docs, prints a ready line, then times one rep of `docs`
+  * synthetic documents (expand → toRdf → count) per "rep" line on stdin,
+  * until "quit" or EOF. On a fresh cluster the first reps run slow.
   */
 object ClusterProbe {
   def main(args: Array[String]): Unit = {
-    val n = if (args.length > 0) args(0).toLong else 300000L
-    val parts = if (args.length > 1) args(1).toInt else 64
-    val serve = args.length > 2 && args(2) == "serve"
-    val reps = if (args.length > 2 && !serve) args(2).toInt else 3
+    val (n, parts) = (args(0).toLong, args(1).toInt)
     val spark = SparkSession.builder().appName("graft-cluster-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
-
+    val sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    val ctxB = sc.broadcast(RemoteContextPool.pool)
     def timed(docs: Long): (Double, Long) = {
       val ds = SyntheticDocs.generate(spark, docs, parts)
       val t0 = System.nanoTime()
       val c = ExpandStage.triples(ExpandStage.run(ds, ctxB)).count()
       ((System.nanoTime() - t0) / 1e9, c)
     }
-    // warmup scaled to total cores so every executor JVM gets the same per-core
-    // JIT warmup regardless of cluster size (a fixed warmup under-warms the
-    // 4N leg: its reps kept speeding up 5.6→4.9→4.5 s). 25k docs/core: with
-    // reps=1 the timed run no longer rides a previous rep's warmup, so the
-    // pre-timed warm must carry the full C2 ramp on its own
-    // serve mode barely warms: the ready line must come up fast even in a
-    // degraded window (measured: the 25k/core warm took 5+ min in one, and
-    // even 10k/core blew a 180 s startup watchdog), so it only touches the
-    // codegen/broadcast paths and lets the FIRST SERVE REPS carry the C2
-    // ramp — Bench's clean-round selection discards slow early rounds
-    // anyway. One-shot mode keeps the full warm: its first timed rep has
-    // nothing else to ride on.
-    val warm = (if (serve) 1000L else 25000L) * spark.sparkContext.defaultParallelism
-    timed(warm)
-    // executor count (statusTracker includes the driver in local-cluster):
-    // a rep that ran before every worker registered is NOT a valid leg
-    def execs: Int = spark.sparkContext.statusTracker.getExecutorInfos.length - 1
-    def oneRep(rep: Int): (Double, Double) = {
-      val s0 = StealMeter.snap()
-      val (t, c) = timed(n)
-      val steal = StealMeter.share(s0, StealMeter.snap())
-      println(f"[cluster-probe] rep=$rep master=${spark.sparkContext.master} docs=$n triples=$c sec=$t%.3f thr=${c / t}%.0f steal=$steal%.3f execs=$execs")
-      (t, steal)
-    }
-    if (serve) {
-      println(s"[cluster-probe] ready master=${spark.sparkContext.master} execs=$execs")
-      System.out.flush()
-      val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))
-      var rep = 0
-      var line = in.readLine()
-      while (line != null && line.trim != "quit") {
-        if (line.trim == "rep") { rep += 1; oneRep(rep); System.out.flush() }
-        line = in.readLine()
+    timed(1000L * sc.defaultParallelism)
+    // statusTracker counts the driver too; a rep that ran before every
+    // executor registered is not a valid leg, and Bench rejects it
+    def execs: Int = sc.statusTracker.getExecutorInfos.length - 1
+    println(s"[cluster-probe] ready master=${sc.master} execs=$execs")
+    System.out.flush()
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))
+    Iterator.continually(in.readLine()).takeWhile(l => l != null && l.trim != "quit")
+      .filter(_.trim == "rep").zipWithIndex.foreach { case (_, i) =>
+        val s0 = StealMeter.snap()
+        val (t, c) = timed(n)
+        val steal = StealMeter.share(s0, StealMeter.snap())
+        println(f"[cluster-probe] rep=${i + 1} master=${sc.master} docs=$n triples=$c sec=$t%.3f thr=${c / t}%.0f steal=$steal%.3f execs=$execs")
+        System.out.flush()
       }
-    } else {
-      val results = (1 to reps).map(oneRep)
-      val best = results.minBy(_._1)
-      println(f"[cluster-probe] BEST master=${spark.sparkContext.master} sec=${best._1}%.3f steal=${best._2}%.3f")
-    }
     spark.stop()
   }
 }

@@ -5,11 +5,11 @@ import graft.spark.{ExpandStage, RemoteContextPool, SyntheticDocs}
 
 /** Pure-engine scaling probe: the per-document engine (generate → expand →
   * toRdf → canonical labels) over a doc-id range on a fixed thread count,
-  * with NO Spark involvement. Bench forks this as 1 process × 8 threads vs
-  * 4 processes × 8 threads — the exact executor topology of the N-vs-4N
+  * with NO Spark involvement. Bench forks this as 1 process × k threads vs
+  * 4 processes × k threads — the exact executor topology of the N-vs-4N
   * legs minus the Spark layer. The resulting ratio is the hardware + JVM
   * scaling ceiling for THIS workload on THIS box (allocation- and
-  * memory-bandwidth-heavy JSON processing scales worse 8→32 busy cores than
+  * memory-bandwidth-heavy JSON processing scales worse k→4k busy cores than
   * cache-resident compute); Spark-layer efficiency = cluster ratio / this.
   *
   *   args: <threads> <docStart> <docEnd>

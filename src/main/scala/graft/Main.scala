@@ -9,9 +9,12 @@ import graft.spark._
   * lineage → global dedup graph. Re-running with the same outDir resumes,
   * skipping completed buckets.
   *
-  *   spark-submit --master local-cluster[4,8,6144] --class graft.Main \
+  *   spark-submit --master local-cluster[4,1,1024] --class graft.Main \
   *     <jar> --out /tmp/graft-run [--docs 100000] [--buckets 16] \
   *     [--input <parquet dir of (doc_id, spans)>]
+  *
+  * That is 4 executors of 1 core and 1 GiB, for a 4-core host; with 4k
+  * cores use `local-cluster[4,k,1024·k]`.
   */
 object Main {
   def main(args: Array[String]): Unit = {

@@ -1,10 +1,10 @@
 package graft
 
-/** Hypervisor-steal measurement from /proc/stat. This box is a VM on an
-  * oversubscribed host: measured steal is ~0% at idle but 10%+ of total CPU
-  * capacity under full 32-core demand even in calm windows, with bursts that
-  * slow individual benchmark legs 2-3× (the "host lottery" BENCH.md documents
-  * as ±30% drift). Sampling the steal counter around each timed leg turns
+/** Hypervisor-steal measurement from /proc/stat. Benchmark hosts are VMs on
+  * oversubscribed hardware: measured steal is ~0% at idle but 10%+ of total
+  * CPU capacity when every core is busy, even in calm windows, with bursts
+  * that slow individual benchmark legs 2-3× (the "host lottery" BENCH.md
+  * documents as ±30% drift). Sampling the steal counter around each timed leg turns
   * "this window felt degraded" into a measured, per-leg fact that the
   * scaling-round selection can act on and the bench artifact can report.
   */
