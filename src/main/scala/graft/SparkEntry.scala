@@ -37,6 +37,9 @@ object SparkEntry {
     SyntheticDocs.generate(s, docCount(sfDir), parts)
   }
 
+  /** The spans the per-document API queries (j05, j07, j09) run, in offset order. */
+  private def jsonldSpans(doc: Doc): Seq[Span] = doc.spans.filter(_.kind == "jsonld").sortBy(_.offset)
+
   /** j12's pinned constants: the triple count and order-independent
     * labelset hash of the canonicalized fixed 120-doc deep-bnode corpus.
     * Derived ONCE from this engine's own deterministic output (never from
@@ -499,21 +502,17 @@ object SparkEntry {
       // flatten API (the reference's commented-out stub, lib.rs:470-477)
       // lifted to the corpus: per-doc flattened node count + named-graph count
       import s.implicits._
-      val ctxB = s.sparkContext.broadcast(RemoteContextPool.pool)
       pipelineDocs(s, d).mapPartitions { it =>
-        val loader = RemoteContextPool.loaderFor(ctxB.value)
-        val state = new graft.core.ApiState(graft.core.JsonLdOptions(), loader)
+        val loader = RemoteContextPool.fullLoader
         it.map { doc =>
           var nodes = 0L; var graphs = 0L
-          doc.spans.filter(_.kind == "jsonld").sortBy(_.offset).foreach { span =>
-            try {
-              val json = graft.json.JsonParser.parse(span.text)
-              val opts = state.options.copy(base = Some(s"${ExpandStage.DocNs}${doc.doc_id}/span/${span.offset}"))
+          jsonldSpans(doc).foreach { span =>
+            ExpandStage.withSpan(doc, span, graft.core.JsonLdOptions()) { (json, opts) =>
               val flat = graft.core.JsonLdApi.flatten(
                 graft.core.JsonLdInput.Doc(json), None, opts, loader).asArr.get
               nodes += flat.size
               flat.foreach(n => if (n.asObj.exists(_.contains("@graph"))) graphs += 1)
-            } catch { case _: graft.core.JsonLdError => }
+            }
           }
           (doc.doc_id, nodes, graphs)
         }
@@ -524,10 +523,8 @@ object SparkEntry {
       // fromRdf ∘ toRdf internal-consistency gate per document: triples →
       // fromRdf (Serialize RDF as JSON-LD) → toRdf → canonical set compare
       import s.implicits._
-      val ctxB = s.sparkContext.broadcast(RemoteContextPool.pool)
       pipelineDocs(s, d).mapPartitions { it =>
-        val loader = RemoteContextPool.loaderFor(ctxB.value)
-        val state = new graft.core.ApiState(graft.core.JsonLdOptions(), loader)
+        val state = new graft.core.ApiState(graft.core.JsonLdOptions(), RemoteContextPool.fullLoader)
         it.map { doc =>
           val (rows, _) = ExpandStage.expandDoc(doc, state, ExpandStage.aliasDictionary)
           val triples = rows.map(r =>
@@ -545,23 +542,19 @@ object SparkEntry {
       // framing API (the reference's stub, lib.rs:479-481) at corpus scale:
       // frame every jsonld span by @type and count matched entities per doc
       import s.implicits._
-      val ctxB = s.sparkContext.broadcast(RemoteContextPool.pool)
       val frameTxt = """{"@context":{"@vocab":"http://graft.example/vocab/"},"@type":"Article"}"""
       pipelineDocs(s, d).mapPartitions { it =>
-        val loader = RemoteContextPool.loaderFor(ctxB.value)
+        val loader = RemoteContextPool.fullLoader
         val frameDoc = graft.json.JsonParser.parse(frameTxt)
         it.map { doc =>
           var matched = 0L
-          doc.spans.filter(_.kind == "jsonld").sortBy(_.offset).foreach { span =>
-            try {
-              val json = graft.json.JsonParser.parse(span.text)
-              val opts = graft.core.JsonLdOptions(
-                base = Some(s"${ExpandStage.DocNs}${doc.doc_id}/span/${span.offset}"))
+          jsonldSpans(doc).foreach { span =>
+            ExpandStage.withSpan(doc, span, graft.core.JsonLdOptions()) { (json, opts) =>
               val framed = graft.core.JsonLdApi.frame(
                 graft.core.JsonLdInput.Doc(json), frameDoc.deepCopy, opts, loader)
               matched += (framed.get("@graph").flatMap(_.asArr).map(_.size.toLong)
                 .getOrElse(if (framed.keys.exists(k => k != "@context")) 1L else 0L))
-            } catch { case _: graft.core.JsonLdError => }
+            }
           }
           (doc.doc_id, matched)
         }
@@ -575,20 +568,16 @@ object SparkEntry {
       // self-checking rows-only query: a doc survives only when EVERY
       // jsonld span round-trips
       import s.implicits._
-      val ctxB = s.sparkContext.broadcast(RemoteContextPool.pool)
       val ctxTxt = """{"@context": {"@vocab": "http://graft.example/vocab/"}}"""
       pipelineDocs(s, d).mapPartitions { it =>
-        val loader = RemoteContextPool.loaderFor(ctxB.value)
+        val loader = RemoteContextPool.fullLoader
         val ctxDoc = graft.json.JsonParser.parse(ctxTxt)
         it.map { doc =>
           var ok = 0L; var total = 0L
-          doc.spans.filter(_.kind == "jsonld").sortBy(_.offset).foreach { span =>
+          jsonldSpans(doc).foreach { span =>
             total += 1
-            try {
-              val opts = graft.core.JsonLdOptions(
-                base = Some(s"${ExpandStage.DocNs}${doc.doc_id}/span/${span.offset}"))
-              val expanded = graft.core.JsonLdApi.expand(
-                graft.core.JsonLdInput.Doc(graft.json.JsonParser.parse(span.text)), opts, loader)
+            ExpandStage.withSpan(doc, span, graft.core.JsonLdOptions()) { (json, opts) =>
+              val expanded = graft.core.JsonLdApi.expand(graft.core.JsonLdInput.Doc(json), opts, loader)
               // compactPreExpanded: expansion runs once, not re-run inside
               // compact; deepCopy because compaction may mutate its input
               // and `expanded` is the comparison target below
@@ -597,7 +586,7 @@ object SparkEntry {
               val re = graft.core.JsonLdApi.expand(
                 graft.core.JsonLdInput.Doc(compacted), opts, loader)
               if (graft.json.JsonEq.jsonLdEq(re, expanded, ordered = false)) ok += 1
-            } catch { case _: graft.core.JsonLdError => }
+            }
           }
           (doc.doc_id, total, ok)
         }

@@ -17,8 +17,6 @@ final case class Url(
     query: Option[String],
     fragment: Option[String]
 ) {
-  def isSpecial: Boolean = Url.specialSchemes.contains(scheme)
-
   def serialize: String = {
     val sb = new StringBuilder(scheme).append(':')
     authority.foreach(a => sb.append("//").append(a))
@@ -28,15 +26,6 @@ final case class Url(
     sb.toString
   }
   override def toString: String = serialize
-
-  def hostPort: (String, Option[String]) = authority match {
-    case Some(a) =>
-      val i = a.lastIndexOf(':')
-      // avoid splitting inside IPv6 [..]
-      if (i > 0 && !a.substring(i).contains(']')) (a.substring(0, i), Some(a.substring(i + 1)))
-      else (a, None)
-    case None => ("", None)
-  }
 
   /** Path with the last segment replaced by "" (url crate
     * path_segments_mut().pop().push("")), used for same-URL relativization.

@@ -20,15 +20,12 @@ object JsonLdApi {
 
   /** expand (/root/reference/src/lib.rs:368-468). Returns the expanded array. */
   def expand(input0: JsonLdInput, options: JsonLdOptions, loader: DocumentLoader = DocumentLoader.empty): JArr =
-    expandWithState(input0, new ApiState(options, loader))
+    expand(input0, new ApiState(options, loader))
 
   /** expand with a caller-managed ApiState — lets a partition-long state
     * amortize the loaded/processed context caches across documents.
     */
-  def expand(input0: JsonLdInput, state: ApiState): JArr =
-    expandWithState(input0, state)
-
-  private[core] def expandWithState(input0: JsonLdInput, state: ApiState): JArr = {
+  def expand(input0: JsonLdInput, state: ApiState): JArr = {
     val options = state.options
     val input = input0 match {
       case JsonLdInput.Ref(iri) => JsonLdInput.Remote(state.loader.load(iri))
@@ -131,15 +128,7 @@ object JsonLdApi {
       loader: DocumentLoader = DocumentLoader.empty
   ): JObj = {
     val state = new ApiState(options, loader)
-    val input = input0 match {
-      case JsonLdInput.Ref(iri) => JsonLdInput.Remote(state.loader.load(iri))
-      case other => other
-    }
-    val expandedInput = expandWithState(input, state.withOptions(options.copy(ordered = false)))
-    val contextBase: Option[Url] = input match {
-      case JsonLdInput.Remote(doc) => Some(parseBase(doc.documentUrl))
-      case _ => options.base.map(parseBase)
-    }
+    val (expandedInput, contextBase) = expandInput(input0, options, state)
     compactExpanded(expandedInput, ctx, contextBase, state)
   }
 
@@ -155,21 +144,9 @@ object JsonLdApi {
       loader: DocumentLoader = DocumentLoader.empty
   ): JsonValue = {
     val state = new ApiState(options, loader)
-    val input = input0 match {
-      case JsonLdInput.Ref(iri) => JsonLdInput.Remote(state.loader.load(iri))
-      case other => other
-    }
-    val expandedInput = expandWithState(input, state.withOptions(options.copy(ordered = false)))
+    val (expandedInput, contextBase) = expandInput(input0, options, state)
     val flattened = Flatten.flattenExpanded(expandedInput)
-    ctx match {
-      case None => flattened
-      case Some(_) =>
-        val contextBase: Option[Url] = input match {
-          case JsonLdInput.Remote(doc) => Some(parseBase(doc.documentUrl))
-          case _ => options.base.map(parseBase)
-        }
-        compactExpanded(flattened, ctx, contextBase, state)
-    }
+    if (ctx.isEmpty) flattened else compactExpanded(flattened, ctx, contextBase, state)
   }
 
   /** fromRdf (W3C JSON-LD 1.1 API §8.2 Serialize RDF as JSON-LD), the
@@ -191,23 +168,32 @@ object JsonLdApi {
       loader: DocumentLoader = DocumentLoader.empty
   ): JObj = {
     val state = new ApiState(options, loader)
-    val input = input0 match {
-      case JsonLdInput.Ref(iri) => JsonLdInput.Remote(state.loader.load(iri))
-      case other => other
-    }
-    val expandedInput =
-      expandWithState(input, state.withOptions(options.copy(ordered = false, frameExpansion = false)))
-    val expandedFrame = expandWithState(JsonLdInput.Doc(frameDoc.deepCopy),
+    val (expandedInput, contextBase) = expandInput(input0, options.copy(frameExpansion = false), state)
+    val expandedFrame = expand(JsonLdInput.Doc(frameDoc.deepCopy),
       state.withOptions(options.copy(ordered = false, frameExpansion = true)))
     val framed = Framing.frame(expandedInput, expandedFrame, options)
-    val contextBase: Option[Url] = input match {
-      case JsonLdInput.Remote(doc) => Some(parseBase(doc.documentUrl))
-      case _ => options.base.map(parseBase)
-    }
     val ctx: Option[JsonValue] =
       frameDoc.asObj.flatMap(_.get("@context")).map(c => JObj("@context" -> c.deepCopy))
     val compacted = compactExpanded(framed, ctx, contextBase, state)
     Framing.cleanup(compacted).asObj.get
+  }
+
+  /** The input prologue of compact, flatten and frame: load a `Ref` input
+    * into a `Remote` one, expand it unordered under `options`, and derive
+    * the context base — the document URL of a remote input, else
+    * `options.base`.
+    */
+  private def expandInput(input0: JsonLdInput, options: JsonLdOptions, state: ApiState): (JArr, Option[Url]) = {
+    val input = input0 match {
+      case JsonLdInput.Ref(iri) => JsonLdInput.Remote(state.loader.load(iri))
+      case other => other
+    }
+    val expanded = expand(input, state.withOptions(options.copy(ordered = false)))
+    val contextBase = input match {
+      case JsonLdInput.Remote(doc) => Some(parseBase(doc.documentUrl))
+      case _ => options.base.map(parseBase)
+    }
+    (expanded, contextBase)
   }
 
   /** Compact a document that is ALREADY in expanded form, skipping the

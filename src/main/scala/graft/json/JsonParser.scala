@@ -31,10 +31,6 @@ object JsonParser {
     } finally p.close()
   }
 
-  def parseOpt(s: String): Option[JsonValue] =
-    try Some(parse(s))
-    catch { case _: Exception => None }
-
   private def readValue(p: JacksonParser, t: JsonToken): JsonValue = t match {
     case JsonToken.START_OBJECT =>
       val o = new JObj()

@@ -75,6 +75,35 @@ object ExpandStage {
     true
   }
 
+  /** The prologue of every per-span engine call: parse `span`, hand `body`
+    * its JSON and `options` with the span's base
+    * `<DocNs><doc_id>/span/<offset>`, and turn a failure into the span's
+    * `DocError`. An html span carries a web page whose JSON-LD lives in
+    * `<script type="application/ld+json">` elements; corpus ingestion takes
+    * ALL of them (HtmlScripts, W3C HTML content algorithms).
+    */
+  def withSpan[A](doc: Doc, span: Span, options: JsonLdOptions)(
+      body: (JsonValue, JsonLdOptions) => A): Either[DocError, A] =
+    try {
+      val json =
+        if (span.kind == "html") HtmlScripts.extract(span.text, None, extractAllScripts = true)
+        else JsonParser.parse(span.text)
+      Right(body(json, options.copy(base = Some(s"$DocNs${doc.doc_id}/span/${span.offset}"))))
+    } catch {
+      case e: JsonLdError =>
+        Left(DocError(doc.doc_id, span.offset, e.code.rendered, e.render))
+      case e: Exception =>
+        Left(DocError(doc.doc_id, span.offset, "loading document failed", String.valueOf(e.getMessage)))
+      case _: StackOverflowError =>
+        // belt over FastJson.MaxDepth: expansion recursion is several
+        // frames per JSON level, so a depth-legal but pathological span
+        // could still blow a small executor stack. SOE is an Error — an
+        // Exception-only handler would kill the task (and after retries
+        // the whole 100 TB job) on ONE hostile document. Span state is
+        // thread-local, so unwinding to this boundary is safe.
+        Left(DocError(doc.doc_id, span.offset, "loading document failed", "recursion depth exceeded"))
+    }
+
   /** Expand one document to triples (pure; also used by ScalaTest directly).
     * Blank-node labels are canonicalized per document with the doc id as
     * scope salt — bnodes never cross documents by construction, so this is
@@ -124,32 +153,11 @@ object ExpandStage {
 
     val docTriples = Vector.newBuilder[Triple]
     for (span <- sorted) span.kind match {
-      case kind @ ("jsonld" | "html") =>
-        try {
-          // html spans carry a web page; its JSON-LD payload lives in
-          // <script type="application/ld+json"> elements — corpus ingestion
-          // takes ALL scripts (HtmlScripts, W3C HTML content algorithms)
-          val json =
-            if (kind == "html") HtmlScripts.extract(span.text, None, extractAllScripts = true)
-            else JsonParser.parse(span.text)
-          val opts = options.copy(base = Some(s"$DocNs${doc.doc_id}/span/${span.offset}"))
-          // withOptions shares the partition-long loaded/processed context caches
-          val expanded = JsonLdApi.expand(JsonLdInput.Doc(json), partitionState.withOptions(opts))
-          docTriples ++= ToRdf.toRdf(expanded, opts)
-        } catch {
-          case e: JsonLdError =>
-            errors += DocError(doc.doc_id, span.offset, e.code.rendered, e.render)
-          case e: Exception =>
-            errors += DocError(doc.doc_id, span.offset, "loading document failed", String.valueOf(e.getMessage))
-          case _: StackOverflowError =>
-            // belt over FastJson.MaxDepth: expansion recursion is several
-            // frames per JSON level, so a depth-legal but pathological span
-            // could still blow a small executor stack. SOE is an Error — an
-            // Exception-only handler would kill the task (and after retries
-            // the whole 100 TB job) on ONE hostile document. Span state is
-            // thread-local, so unwinding to this boundary is safe.
-            errors += DocError(doc.doc_id, span.offset, "loading document failed", "recursion depth exceeded")
-        }
+      case "jsonld" | "html" =>
+        // withOptions shares the partition-long loaded/processed context caches
+        withSpan(doc, span, options) { (json, opts) =>
+          docTriples ++= ToRdf.toRdf(JsonLdApi.expand(JsonLdInput.Doc(json), partitionState.withOptions(opts)), opts)
+        }.left.foreach(errors += _)
       case "media" =>
         if (span.media_ref != null)
           docTriples += Triple(dIri, HasMediaPred, "iri", span.media_ref, "", "", "")

@@ -22,6 +22,10 @@ import org.apache.spark.sql.functions._
   * `triple_count` and `error_count` are `Dataset.observe` metrics collected
   * while the errors and triples are written. No output is re-read and no
   * input re-counted.
+  *
+  * Remote contexts: the vendored [[RemoteContextPool.pool]] is broadcast
+  * whole, as everywhere else the engine runs, so html and jsonld spans see
+  * the same contexts and no corpus scan runs.
   */
 object Materialize {
 
@@ -33,7 +37,7 @@ object Materialize {
     * java.io.File is local-FS-only and silently reports false on HDFS/S3,
     * which would rewrite staging (and ignore lineage) every run.
     */
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
+  private[spark] def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
@@ -87,11 +91,7 @@ object Materialize {
     import spark.implicits._
     val (completed, attempts) = lineageState(spark, outDir)
     val done = if (resume) completed else Set.empty[Int]
-    val ctxB = RemoteContextPool.broadcastResolved(spark,
-      docs.select(explode(col("spans")).as("s"))
-        .filter(col("s.kind") === "jsonld" && col("s.text").contains(RemoteContextPool.baseIri))
-        .select(col("s.text")).as[String]
-        .flatMap(t => RemoteContextPool.knownIris.filter(t.contains)))
+    val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
 
     // Stage the bucketed corpus once, partitioned BY bucket: per-bucket reads
     // below are partition-pruned scans (only bucket=N files touched), and a

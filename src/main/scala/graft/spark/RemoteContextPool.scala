@@ -12,6 +12,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * the single-process version of this; a broadcast map is the 1000-executor
   * version. An unknown IRI must yield `loading remote context failed`, never
   * a network call.
+  *
+  * Every engine path (`Materialize.run`, `SparkEntry`, `Bench`,
+  * `ClusterProbe`) broadcasts [[pool]] whole; the per-document queries that
+  * call the JSON-LD API directly take [[fullLoader]] in each partition.
   */
 object RemoteContextPool {
   val baseIri = "http://graft.example/ctx/"
@@ -36,7 +40,10 @@ object RemoteContextPool {
   val knownIris: Vector[String] = pool.keys.toVector.sorted
 
   /** Resolve IRIs: vendored pool first, then (if given) a driver-side
-    * fetcher such as [[graft.core.HttpDocumentLoader]]. Fetch failures are
+    * fetcher such as [[graft.core.HttpDocumentLoader]]. Without a fetcher
+    * the result is a subset of [[pool]]; the fetcher is the hook for
+    * contexts outside it, and kgbench's set-up resolves through here and
+    * [[broadcastResolved]]. Fetch failures are
     * dropped — executors then raise the deterministic
     * `loading remote context failed` for those IRIs, never a network call.
     * The fetched document is re-serialized to its JSON text (a Link-header
@@ -51,12 +58,12 @@ object RemoteContextPool {
       })
     }.toMap
 
-  /** Scan the corpus for distinct referenced context IRIs (cheap distinct on
-    * a projected column), resolve on the driver (vendored pool, then the
-    * optional fetcher — the production path puts an [[HttpDocumentLoader]]
-    * here), and broadcast. At 10^12 docs the distinct is over K≈5 values —
-    * the scan is pruned to the spans column only, and HTTP happens at most
-    * once per distinct IRI on the driver.
+  /** Resolve the distinct IRIs of `referenced` on the driver (vendored pool,
+    * then the optional fetcher — a production path that fetches puts an
+    * [[graft.core.HttpDocumentLoader]] here) and broadcast them. HTTP happens
+    * at most once per distinct IRI, on the driver. With no fetcher it can
+    * only return pool entries, so the engine broadcasts [[pool]] instead and
+    * scans no corpus.
     */
   def broadcastResolved(spark: SparkSession, referenced: Dataset[String],
       fetcher: Option[DocumentLoader] = None): Broadcast[Map[String, String]] = {

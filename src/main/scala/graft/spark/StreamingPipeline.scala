@@ -90,11 +90,6 @@ object StreamingPipeline {
         })
   }
 
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   // Committed-batch ids per lineage path, cached in driver memory after ONE
   // read: the previous gate re-scanned the whole lineage parquet every
   // micro-batch — O(batches²) driver I/O over a long-running stream. The
@@ -121,7 +116,7 @@ object StreamingPipeline {
       lineageReloads.computeIfAbsent(p, _ => new java.util.concurrent.atomic.AtomicLong(0L))
         .incrementAndGet()
       val s = java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()
-      if (pathExists(spark, p))
+      if (Materialize.pathExists(spark, p))
         spark.read.parquet(p).select("batch_id").collect().foreach(r => s.add(r.getLong(0)))
       s
     })
@@ -147,7 +142,7 @@ object StreamingPipeline {
       // notebook rerun, test cleanup). Verify the lineage table still
       // exists before refusing; the FS metadata call sits on this rare
       // refusal path only, so the common path stays zero-I/O per batch.
-      if (pathExists(spark, lineagePath)) return false
+      if (Materialize.pathExists(spark, lineagePath)) return false
       committedCache.remove(lineagePath)
       ids = committedIds(spark, lineagePath)
       if (ids.contains(Long.box(batchId))) return false

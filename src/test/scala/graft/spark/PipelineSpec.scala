@@ -186,6 +186,20 @@ class PipelineSpec extends AnyFunSuite {
     assert(report.errors == lineage.map(_.error_count).sum)
   }
 
+  test("Materialize resolves a pool context referenced only from an html span, as ExpandStage does") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft-html-ctx").toString
+    val page = s"""<html><head><script type="application/ld+json">""" +
+      s"""{"@context":"${RemoteContextPool.baseIri}typed.jsonld","@id":"http://s/h","count":"3"}""" +
+      """</script></head><body>p</body></html>"""
+    val docs = Seq(Doc("doc-html-ctx", Seq(Span("html", page, null, 0)))).toDS()
+    val report = Materialize.run(docs, out, buckets = 1)
+    assert((report.triples, report.errors) == (1L, 0L), report)
+    val viaStage = ExpandStage.triples(ExpandStage.run(docs, spark.sparkContext.broadcast(RemoteContextPool.pool)))
+    assert(spark.read.parquet(s"$out/triples").drop("bucket").as[TripleRow].collect().toSeq ==
+      viaStage.collect().toSeq)
+  }
+
   test("empty buckets do not hang: 3 docs into 8 buckets commit 0/0/0 lineage rows") {
     import spark.implicits._
     import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}

@@ -204,5 +204,32 @@ class PlanSpec extends AnyFunSuite {
     assert(errors.size == 2)
     assert(errors.exists(_.code == "invalid @version value"))
     assert(triples.nonEmpty) // the valid span still contributes
+
+    // the span prologue expandDoc and the j05/j07/j09 queries share: a good
+    // span, FastJson's IllegalArgumentException, an unknown pool context
+    // (a JsonLdError) and an html page
+    val four = Doc("doc-four", Seq(
+      Span("jsonld", """{"@context":{"@vocab":"http://v/"},"@id":"rel","ok":"yes"}""", null, 1),
+      Span("jsonld", "{not json at all", null, 2),
+      Span("jsonld", s"""{"@context":"${RemoteContextPool.baseIri}nope.jsonld","a":"b"}""", null, 3),
+      Span("html", """<html><head><script type="application/ld+json">""" +
+        """{"@context":{"@vocab":"http://v/"},"@id":"h","r":"s"}</script></head></html>""", null, 4)))
+    val state = new graft.core.ApiState(JsonLdOptions(), RemoteContextPool.fullLoader)
+    val bases = Seq.newBuilder[String]
+    val results = four.spans.map(span => ExpandStage.withSpan(four, span, JsonLdOptions()) { (json, opts) =>
+      bases += opts.base.get
+      graft.core.JsonLdApi.expand(graft.core.JsonLdInput.Doc(json), state.withOptions(opts)).size
+    })
+    assert(bases.result() == Seq(1, 3, 4).map(o => s"${ExpandStage.DocNs}doc-four/span/$o"))
+    assert(results(0) == Right(1) && results(3) == Right(1), results)
+    val failures = results.collect { case Left(e) => (e.code, e.span_offset, e.message) }
+    // expandDoc's error channel reports exactly these failures
+    assert(failures == Seq(
+      ("loading document failed", 2, "expected object key at offset 1"),
+      ("loading remote context failed", 3, "loading remote context failed\ncaused by: loading document " +
+        s"failed: no vendored document for ${RemoteContextPool.baseIri}nope.jsonld")))
+    val (fourTriples, fourErrors) = ExpandStage.expandDoc(four, RemoteContextPool.fullLoader, JsonLdOptions(), Map.empty)
+    assert(fourErrors.map(e => (e.code, e.span_offset, e.message)) == failures)
+    assert(fourTriples.map(_.subj) == Seq("rel", "h").map(id => s"${ExpandStage.DocNs}doc-four/span/$id"))
   }
 }
