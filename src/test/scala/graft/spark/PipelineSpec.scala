@@ -219,6 +219,51 @@ class PipelineSpec extends AnyFunSuite {
     assert(empty.forall(l => l.triple_count == 0 && l.error_count == 0), empty.toSeq)
   }
 
+  test("a failure in bucket 2 with bucket 3 in flight commits buckets 0 and 1 and leaves no job, thread or cache") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val out = java.nio.file.Files.createTempDirectory("graft-fail").toString
+    val fresh = java.nio.file.Files.createTempDirectory("graft-fail-full").toString
+    // bucket 3 holds about 40 times the docs of each other bucket, so that
+    // it is still running when bucket 2's failure reaches the committing
+    // thread
+    val docs = SyntheticDocs.generate(spark, 8000, 4)
+      .filter(Materialize.bucketOf(4) === 3 || col("doc_id") < "doc-000000000200")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[RuntimeException] { Materialize.run(docs, out, buckets = 4, failAtBucket = Some(2)) }
+    assert(e.getMessage == "injected failure at bucket 2")
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty, "a Spark job outlived the failed run")
+    val poolThreads = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-materialize-"))
+    assert(poolThreads.isEmpty, s"live pool threads: $poolThreads")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore, "the failed run left rows cached")
+    // bucket 2 was failed after its errors were written; bucket 3 ran to its
+    // end but, being above the failure, was not committed
+    assert(Materialize.pathExists(spark, s"$out/errors/bucket=2"))
+    assert(Materialize.pathExists(spark, s"$out/triples/bucket=3"))
+    val committed = spark.read.parquet(s"$out/lineage").as[PartitionLineage].collect().map(_.bucket).sorted
+    assert(committed.toSeq == Seq(0, 1))
+    val resumed = Materialize.run(docs, out, buckets = 4)
+    assert(resumed.skipped == 2 && resumed.processed == 2)
+    Materialize.run(docs, fresh, buckets = 4)
+    def graph(dir: String) = Materialize.finalizeGraph(spark, dir).collect().map(_.toString).sorted.toSeq
+    assert(graph(out) == graph(fresh))
+  }
+
+  test("Materialize reads its own tables with the schema an inferring read finds, nullability included") {
+    val out = java.nio.file.Files.createTempDirectory("graft-schemas").toString
+    val docs = SyntheticDocs.generate(spark, 50, 2)
+    Materialize.run(docs, out, buckets = 2)
+    val graph = Materialize.finalizeGraph(spark, out)
+    def inferred(dir: String) = spark.read.parquet(s"$out/$dir").schema
+    val staging = new java.io.File(out).list().filter(_.startsWith("staging_b2_")).toSeq
+    assert(staging.size == 1, staging)
+    assert(Materialize.stagedSchema(docs.schema) == inferred(staging.head))
+    assert(Materialize.lineageSchema == inferred("lineage"))
+    assert(Materialize.triplesSchema == inferred("triples"))
+    assert(graph.schema == inferred("graph"))
+  }
+
   test("distributed canonicalization (iterative joins) is deterministic, complete, and structure-preserving") {
     import spark.implicits._
     def mk(doc: String): Seq[TripleRow] = Seq(
