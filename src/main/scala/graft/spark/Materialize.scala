@@ -2,7 +2,7 @@ package graft.spark
 
 import java.util.concurrent.{Callable, ExecutionException, Executors, Future => JFuture}
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftBridge, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
@@ -78,27 +78,29 @@ object Materialize {
     }
   }
 
-  /** Schemas of this object's own tables, as an inferring parquet read of
-    * them returns them (every field nullable; `bucket` is a partition
-    * column). Reading with them skips the footer-inference job each
-    * schema-less `spark.read.parquet` runs.
+  /** Schemas of this object's own tables. Reading with them skips the
+    * footer-inference job each schema-less `spark.read.parquet` runs.
     */
-  private[spark] def stagedSchema(docs: StructType): StructType =
-    GraftBridge.asNullable(docs.add("bucket", IntegerType))
-  private[spark] val lineageSchema: StructType = GraftBridge.asNullable(Encoders.product[PartitionLineage].schema)
-  private[spark] val triplesSchema: StructType =
-    GraftBridge.asNullable(Encoders.product[TripleRow].schema.add("bucket", IntegerType))
+  private[spark] def stagedSchema(docs: StructType): StructType = docs.add("bucket", IntegerType)
+  private[spark] val lineageSchema: StructType = Encoders.product[PartitionLineage].schema
+  private[spark] val triplesSchema: StructType = Encoders.product[TripleRow].schema.add("bucket", IntegerType)
+
+  /** Most buckets in flight at once, whatever the cluster's size, so that
+    * at most `MaxWindow` ÷ `buckets` of the expanded corpus is cached.
+    */
+  private val MaxWindow = 8
 
   /** Buckets in flight at once: two per core of the session
-    * (`defaultParallelism`), at most the pending ones. A bucket's work is
-    * mostly driver-side Spark job overhead, and its expand runs as one task
-    * per staged file, so one bucket per core leaves cores idle. On a 4-core
-    * host, `graft.Main`'s 16 buckets ran fastest with a window of 8: median
-    * wall 20.7 s, against 22.5 s with 4, 22.7 s with 16 and 29.0 s one
-    * bucket at a time.
+    * (`defaultParallelism`), at most [[MaxWindow]] and at most the pending
+    * ones. A bucket's work is mostly driver-side Spark job overhead, and its
+    * expand runs as one task per staged file, so one bucket per core leaves
+    * cores idle. Measured on one 4-core host only (`local[4]`, 2–5 runs per
+    * window): `graft.Main`'s 16 buckets took a median wall of 29.0 s one
+    * bucket at a time, 21.4–22.5 s with windows of 3, 4 and 6, 20.7 s with
+    * 8 and 22.7 s with 16; windows 3 to 8 are not told apart by those runs.
     */
   private def windowSize(spark: SparkSession, pending: Int): Int =
-    math.max(1, pending min 2 * spark.sparkContext.defaultParallelism)
+    math.max(1, pending min 2 * spark.sparkContext.defaultParallelism min MaxWindow)
 
   /** Run the full pipeline over `docs`. Each pending bucket is expanded
     * (partition-local), deduplicated and written; then its lineage row
@@ -106,15 +108,16 @@ object Materialize {
     *
     * Buckets overlap. A window of P pending buckets runs on a thread pool
     * that this call creates and shuts down; P is [[windowSize]], two per
-    * core. Lineage rows are appended by the calling thread **in bucket
-    * order**: bucket b commits only after every lower pending bucket has
-    * committed, and each commit submits the next pending bucket. So a crash
-    * never leaves a committed bucket above an uncommitted one.
+    * core and at most [[MaxWindow]]. Lineage rows are appended by the
+    * calling thread **in bucket order**: bucket b commits only after every
+    * lower pending bucket has committed, and each commit submits the next
+    * pending bucket. So a crash never leaves a committed bucket above an
+    * uncommitted one.
     *
     * Memory bound: an in-flight bucket holds its expanded rows cached
     * (`MEMORY_AND_DISK`) until its writes end, so at most P ÷ `buckets` of
-    * the expanded corpus is cached at once; with fewer than 2 × cores
-    * buckets, that is all of it.
+    * the expanded corpus is cached at once, and P ≤ [[MaxWindow]] on any
+    * cluster. With P or fewer pending buckets, that is all of them.
     *
     * Failure: the first failure in bucket order stops new submissions. The
     * buckets still in flight run to their end, nothing at or above the
@@ -234,6 +237,6 @@ object Materialize {
     val graph = all.groupBy("subj", "pred", "obj_kind", "obj_value", "obj_datatype", "obj_lang", "graph")
       .agg(min("doc_id").as("first_doc"), count(lit(1)).as("support"))
     graph.write.mode(SaveMode.Overwrite).parquet(s"$outDir/graph")
-    spark.read.schema(GraftBridge.asNullable(graph.schema)).parquet(s"$outDir/graph")
+    spark.read.schema(graph.schema).parquet(s"$outDir/graph")
   }
 }

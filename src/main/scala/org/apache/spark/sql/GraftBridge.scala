@@ -1,19 +1,14 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` Column ↔ Expression converters — the
   * standard technique for libraries that ship custom Catalyst expressions
   * (the alternative, registering every expression as a SQL function, cannot
-  * serve sessions created by external drivers) — and into the
-  * `private[spark]` `StructType.asNullable`. This is the only file that
+  * serve sessions created by external drivers). This is the only file that
   * reaches into Spark's package-private surface.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-  /** `schema` with every field, array element and map value nullable, as
-    * Spark writes (and an inferring read returns) a file-based table. */
-  def asNullable(schema: StructType): StructType = schema.asNullable
 }

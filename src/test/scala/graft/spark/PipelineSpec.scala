@@ -224,10 +224,10 @@ class PipelineSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val out = java.nio.file.Files.createTempDirectory("graft-fail").toString
     val fresh = java.nio.file.Files.createTempDirectory("graft-fail-full").toString
-    // bucket 3 holds about 40 times the docs of each other bucket, so that
+    // bucket 3 holds about 80 times the docs of each other bucket, so that
     // it is still running when bucket 2's failure reaches the committing
     // thread
-    val docs = SyntheticDocs.generate(spark, 8000, 4)
+    val docs = SyntheticDocs.generate(spark, 16000, 4)
       .filter(Materialize.bucketOf(4) === 3 || col("doc_id") < "doc-000000000200")
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[RuntimeException] { Materialize.run(docs, out, buckets = 4, failAtBucket = Some(2)) }
@@ -241,6 +241,15 @@ class PipelineSpec extends AnyFunSuite {
     // end but, being above the failure, was not committed
     assert(Materialize.pathExists(spark, s"$out/errors/bucket=2"))
     assert(Materialize.pathExists(spark, s"$out/triples/bucket=3"))
+    // The checks above mean something only if bucket 3 was still running
+    // when the committing thread met bucket 2's failure, that is once bucket
+    // 2 had failed (right after its errors write) and bucket 1 had committed
+    // (the last lineage write). Bucket 3's triples write must end after both.
+    def endedAt(dir: String) = java.nio.file.Files.getLastModifiedTime(java.nio.file.Paths.get(out, dir, "_SUCCESS"))
+    val failureSeen = Seq(endedAt("errors/bucket=2"), endedAt("lineage")).max
+    val margin = endedAt("triples/bucket=3").toMillis - failureSeen.toMillis
+    info(s"bucket 3 ended $margin ms after bucket 2's failure was seen")
+    assert(margin > 0, "bucket 3 ended before bucket 2's failure was seen")
     val committed = spark.read.parquet(s"$out/lineage").as[PartitionLineage].collect().map(_.bucket).sorted
     assert(committed.toSeq == Seq(0, 1))
     val resumed = Materialize.run(docs, out, buckets = 4)
@@ -256,11 +265,12 @@ class PipelineSpec extends AnyFunSuite {
     Materialize.run(docs, out, buckets = 2)
     val graph = Materialize.finalizeGraph(spark, out)
     def inferred(dir: String) = spark.read.parquet(s"$out/$dir").schema
+    def given(schema: StructType, dir: String) = spark.read.schema(schema).parquet(s"$out/$dir").schema
     val staging = new java.io.File(out).list().filter(_.startsWith("staging_b2_")).toSeq
     assert(staging.size == 1, staging)
-    assert(Materialize.stagedSchema(docs.schema) == inferred(staging.head))
-    assert(Materialize.lineageSchema == inferred("lineage"))
-    assert(Materialize.triplesSchema == inferred("triples"))
+    assert(given(Materialize.stagedSchema(docs.schema), staging.head) == inferred(staging.head))
+    assert(given(Materialize.lineageSchema, "lineage") == inferred("lineage"))
+    assert(given(Materialize.triplesSchema, "triples") == inferred("triples"))
     assert(graph.schema == inferred("graph"))
   }
 
