@@ -4,15 +4,19 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 import java.util.{Arrays, HexFormat}
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** A triple row with its blank-node keys, `<doc_id>|<label>` per role (null
-  * where the role holds no blank node), as [[Canonicalize]] groups it.
+  * where the role holds no blank node), and its `scope`, as [[Canonicalize]]
+  * shuffles it.
   */
 private[spark] final case class KeyedTriple(subj: String, pred: String, obj_kind: String,
     obj_value: String, obj_datatype: String, obj_lang: String, graph: String, doc_id: String,
-    subj_key: String, obj_key: String, graph_key: String)
+    subj_key: String, obj_key: String, graph_key: String, scope: String) {
+  def row: TripleRow = TripleRow(subj, pred, obj_kind, obj_value, obj_datatype, obj_lang, graph, doc_id)
+}
 
 /** Node count and distinct-hash count after rounds 0, 1, … of one or more
   * scopes; adding two sums them.
@@ -35,14 +39,23 @@ private[spark] object ScopeCounts {
   * own first `|`, so docs `a|1` and `a|2` share scope `a`. Every hash is
   * seeded with the scope and the automorphism tie-break ranks within a
   * scope, so no hash, rank or label depends on another scope. The stage
-  * therefore groups the bnode-adjacent rows by scope and runs in two passes
-  * over one local checkpoint of the input:
+  * therefore shuffles every row once, bnode-adjacent rows by scope, and
+  * sorts each partition so that its scopes come first, one after another,
+  * and the rows without a blank node last. Two passes read that one
+  * shuffled RDD:
   *
   *  1. per scope, the node count and the distinct-hash counts after
   *     Weisfeiler-Lehman rounds 0 .. `rounds`−1, summed per partition on
   *     the executors and then on the driver, which collects one row per
   *     partition whatever the number of scopes;
-  *  2. per scope, hashes at round R, ranks, labels, and the relabelled rows.
+  *  2. per scope, hashes at round R, ranks, labels, and the relabelled rows,
+  *     then the partition's other rows unchanged.
+  *
+  * Pass 2's job reads pass 1's shuffle files and skips the map stage, so the
+  * input runs once. Nothing is checkpointed: the returned DataFrame wraps
+  * pass 2's RDD, whose lineage keeps the shuffle alive, and a lost map
+  * output is recomputed from that lineage. The input must therefore be
+  * deterministic, as every expand pipeline is.
   *
   * R is global: refinement stops at the first round whose corpus-wide
   * distinct-hash count is unchanged or equals the node count, `rounds`
@@ -55,14 +68,18 @@ private[spark] object ScopeCounts {
   *
   * Memory: a task holds one scope's bnode-adjacent rows at a time — in
   * scoped mode one document's, or those of all docs whose ids agree up to
-  * their first `|`. `scoped = false` makes the whole corpus one scope `""`,
-  * held by one task; no query uses it.
+  * their first `|` — and streams the other rows one by one; the sort spills
+  * as any Spark sort does. `scoped = false` makes the whole corpus one scope
+  * `""`, whose rows one task holds; no query uses it.
   *
-  * Partitions: the scope shuffle has max(cores, `spark.sql.shuffle.partitions`)
-  * partitions, so each task sorts about (bnode-adjacent data) ÷ that count,
-  * sized like any other shuffle of the session. The count is fixed, so AQE
-  * neither coalesces nor splits these partitions; a scope is indivisible in
-  * any case, so one oversized document still lands in one task.
+  * Partitions: the shuffle has max(cores, `spark.sql.shuffle.partitions`)
+  * partitions, so each task sorts about (input) ÷ that count, sized like any
+  * other shuffle of the session. The count is fixed, so AQE neither
+  * coalesces nor splits these partitions; a scope is indivisible in any
+  * case, so one oversized document still lands in one task. A row is
+  * partitioned by its scope, or, without one, by its `doc_id`, or its
+  * subject when that is null too: the key is never null, so the null-doc_id
+  * rows of scoped mode spread over the partitions instead of hashing to one.
   */
 object Canonicalize {
 
@@ -93,30 +110,26 @@ object Canonicalize {
       s"relabelRoles must be a non-empty subset of $AllRoles")
     val spark = triples.sparkSession
     import spark.implicits._
-    // `triples` is usually an un-cached expand pipeline, read here by both
-    // passes and the pass-through rows: checkpoint it so expansion runs once
-    val input = triples.toDF().localCheckpoint(false)
-    val keyed = keyedByScope(input, scoped)
-    val scopes = byScope(keyed)
+    val shuffled = byScope(keyedByScope(triples.toDF(), scoped))
 
     // pass 1: the counts the stop rule reads, for rounds 0 .. rounds-1
     val probes = rounds max 1
     val ScopeCounts(nodes, distinct) =
-      scopeCounts(scopes, probes).collect().foldLeft(ScopeCounts.zero(probes))(_ + _)
-    if (nodes == 0) return (input, 0)
+      scopeCounts(shuffled, probes).collect().foldLeft(ScopeCounts.zero(probes))(_ + _)
     // refinement runs while the distinct count still changes and some nodes
     // still share a hash; the count after the last permitted round is never
-    // read, so `rounds` caps R without a probe
+    // read, so `rounds` caps R without a probe. No nodes: R = 0, and pass 2
+    // hands the shuffled rows back unchanged
     val r =
       if (rounds <= 0 || distinct(0) == nodes) 0
       else (1 until rounds).find(k => distinct(k) == distinct(k - 1) || distinct(k) == nodes).getOrElse(rounds)
 
-    // pass 2: label every scope at round R
-    val relabeled = scopes
-      .flatMapGroups((scope, rows) => new ScopeGraph(scope, rows.toVector).relabel(r, relabelRoles))
-      .toDF()
-    val plain = keyed.filter(col("scope").isNull).select(relabeled.columns.map(col).toIndexedSeq: _*)
-    (plain.union(relabeled), r)
+    // pass 2: label every scope at round R, then pass the other rows through
+    val relabeled = shuffled.mapPartitions { rows =>
+      val buffered = rows.buffered
+      scopeGraphs(buffered).flatMap(_.relabel(r, relabelRoles)) ++ buffered.map(_.row)
+    }
+    (spark.createDataset(relabeled).toDF(), r)
   }
 
   /** `rows` with the bnode keys of [[KeyedTriple]] and their `scope`, null
@@ -132,28 +145,43 @@ object Canonicalize {
       .withColumn("scope", substring_index(coalesce(col("subj_key"), col("obj_key"), col("graph_key")), "|", 1))
   }
 
-  /** The bnode-adjacent rows of `keyed`, grouped by scope. */
-  private[spark] def byScope(keyed: DataFrame): KeyValueGroupedDataset[String, KeyedTriple] = {
+  /** Every row of `keyed`, shuffled once by its never-null partition key
+    * and sorted by scope, nulls last. Both passes read this one RDD
+    * instance, and so one set of shuffle files: a second Dataset over the
+    * same plan would plan, and run, its own exchange.
+    */
+  private[spark] def byScope(keyed: DataFrame): RDD[KeyedTriple] = {
     val spark = keyed.sparkSession
     import spark.implicits._
     // a scope's work is hashing, heavy for its bytes: AQE would coalesce the
     // small shuffle into one task, so fix the count, at least one per core
     val partitions = spark.sparkContext.defaultParallelism max
       spark.conf.get("spark.sql.shuffle.partitions").toInt
-    keyed.filter(col("scope").isNotNull)
-      .repartition(partitions, col("scope"))
-      .groupBy("scope").as[String, KeyedTriple]
+    keyed.repartition(partitions, coalesce(col("scope"), col("doc_id"), col("subj"), lit("")))
+      .sortWithinPartitions(col("scope").asc_nulls_last)
+      .as[KeyedTriple].rdd
   }
 
-  /** Pass 1: per partition, the summed [[ScopeCounts]] of its scopes for
-    * rounds 0 .. `probes`−1, one row per partition.
+  /** The scopes at the head of a partition of [[byScope]], one buffered at a
+    * time; `rows` is left at the partition's first row without a scope.
     */
-  private[spark] def scopeCounts(scopes: KeyValueGroupedDataset[String, KeyedTriple],
-      probes: Int): Dataset[ScopeCounts] = {
-    implicit val enc: Encoder[ScopeCounts] = Encoders.product[ScopeCounts]
-    scopes.mapGroups((scope, rows) => new ScopeGraph(scope, rows.toVector).counts(probes))
-      .mapPartitions(cs => Iterator(cs.foldLeft(ScopeCounts.zero(probes))(_ + _)))
+  private def scopeGraphs(rows: BufferedIterator[KeyedTriple]): Iterator[ScopeGraph] = new Iterator[ScopeGraph] {
+    def hasNext: Boolean = rows.hasNext && rows.head.scope != null
+    def next(): ScopeGraph = {
+      val scope = rows.head.scope
+      val members = Vector.newBuilder[KeyedTriple]
+      while (hasNext && rows.head.scope == scope) members += rows.next()
+      new ScopeGraph(scope, members.result())
+    }
   }
+
+  /** Pass 1: per partition of [[byScope]], the summed [[ScopeCounts]] of its
+    * scopes for rounds 0 .. `probes`−1, one row per partition. It stops at
+    * the partition's first row without a scope, before deserializing the rest.
+    */
+  private[spark] def scopeCounts(shuffled: RDD[KeyedTriple], probes: Int): RDD[ScopeCounts] =
+    shuffled.mapPartitions(rows =>
+      Iterator(scopeGraphs(rows.buffered).foldLeft(ScopeCounts.zero(probes))(_ + _.counts(probes))))
 
   /** Skew-aware per-predicate profile: two-phase (salted partial → final)
     * aggregation for the rdf:type-style hot predicates (north_rule: skew

@@ -425,6 +425,51 @@ class PipelineSpec extends AnyFunSuite {
     assert(counts.map(_.nodes).sum == nodes)
   }
 
+  test("canonicalization spreads pass-through rows with a null doc_id over the shuffle partitions") {
+    import spark.implicits._
+    val nullDoc = (0 until 1000).map(i => TripleRow(s"http://s/$i", "http://p/v", "literal", s"$i", "", "", "", null))
+    val keyed = Canonicalize.keyedByScope(nullDoc.toDF(), scoped = true)
+    val perPartition = Canonicalize.byScope(keyed)
+      .mapPartitions(rows => Iterator(rows.count(_.doc_id == null))).collect()
+    assert(perPartition.sum == nullDoc.size)
+    assert(perPartition.count(_ > 0) > 1, s"null-doc_id rows per partition: ${perPartition.toSeq}")
+  }
+
+  test("canonicalization shuffles once, both passes reading it, and checkpoints nothing") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    val input = canonRecipeRows(40).toDS()
+    val group = "canonicalize-shape"
+    val groupStages = mutable.Set.empty[Int]
+    val shuffleWriters = mutable.Set.empty[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        if (e.properties.getProperty("spark.jobGroup.id") == group) groupStages ++= e.stageIds
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0) shuffleWriters += e.stageInfo.stageId
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out = try {
+      spark.sparkContext.setJobGroup(group, group)
+      val (out, rounds) = Canonicalize.globalWithRounds(input, rounds = 3, scoped = true)
+      assert(rounds > 0)
+      out.write.format("noop").mode("overwrite").save()
+      out
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val written = listener.synchronized(shuffleWriters.intersect(groupStages))
+    assert(written.size == 1, s"stages that wrote shuffle files: $written")
+    def closure(rdd: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+      rdd +: rdd.dependencies.flatMap(d => closure(d.rdd))
+    val checkpointed = closure(out.queryExecution.toRdd).filter(_.isCheckpointed)
+    assert(checkpointed.isEmpty, s"checkpointed RDDs under the output: $checkpointed")
+  }
+
   test("canonical triples do not depend on the input's blank-node labels, except on WL-stable ties") {
     import spark.implicits._
     // a random bijection of each doc's bnode labels onto themselves
