@@ -16,8 +16,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * The session is [[Verify.session]] on `SPARK_GRAFT_CPUS` cores (default:
   * the JVM's processor count) over `SPARK_GRAFT_SF_DIR` (default sf0.1).
-  * Queries with eager side effects (j10's stage write, e07's index build) run
-  * them while the query is built, outside the timed write.
+  * A query's seconds run from the start of its build to the end of its
+  * write, so work a query runs while it is built is counted: j10's stage
+  * write, e07's index build, and `Canonicalize`'s scope shuffle and pass 1
+  * in j02, j11 and j12.
   *
   * Usage: runMain graft.Profile <outDir> [query ...]   (no names: all queries)
   */
@@ -51,8 +53,8 @@ object Profile {
     try {
       val todo = if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names
       todo.map { name =>
-        val df = SparkEntry.queries(name)(spark, sfDir)
         val t0 = System.nanoTime()
+        val df = SparkEntry.queries(name)(spark, sfDir)
         df.write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
         val qe = Option(writes.poll(60, TimeUnit.SECONDS))

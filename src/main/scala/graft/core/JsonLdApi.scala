@@ -23,7 +23,9 @@ object JsonLdApi {
     expand(input0, new ApiState(options, loader))
 
   /** expand with a caller-managed ApiState — lets a partition-long state
-    * amortize the loaded/processed context caches across documents.
+    * amortize the loaded-context cache across documents. The processed-
+    * context cache amortizes only calls that share a base; the pipeline's
+    * spans never do (0 hits in 3,069 lookups).
     */
   def expand(input0: JsonLdInput, state: ApiState): JArr = {
     val options = state.options

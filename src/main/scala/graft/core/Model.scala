@@ -161,12 +161,12 @@ final class ApiState(
 }
 
 object ApiState {
-  /** Bounded LRU for processed top-level contexts. Web-scale corpora reuse a
-    * small set of contexts across millions of documents; processing each once
-    * per partition instead of once per span is the single biggest CPU lever
-    * in the pipeline (the reference caches *loaded* remote contexts,
-    * /root/reference/src/lib.rs:254 — this extends the same idea to the
-    * *processed* form, keyed by full value + base so semantics are unchanged).
+  /** Bounded LRU for processed top-level contexts, keyed by full value +
+    * base so semantics are unchanged (the reference caches only *loaded*
+    * remote contexts, /root/reference/src/lib.rs:254). It does not hit in
+    * the pipeline: the key holds the base, which `ExpandStage.withSpan` sets
+    * per span, so no two spans share a key. Measured with one shared state
+    * over 20,000 synthetic docs: 0 hits in 3,069 lookups.
     */
   final class LruCache(maxEntries: Int)
       extends java.util.LinkedHashMap[String, Context](64, 0.75f, true) {

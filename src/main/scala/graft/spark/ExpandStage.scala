@@ -154,7 +154,8 @@ object ExpandStage {
     val docTriples = Vector.newBuilder[Triple]
     for (span <- sorted) span.kind match {
       case "jsonld" | "html" =>
-        // withOptions shares the partition-long loaded/processed context caches
+        // withOptions shares the partition-long context caches; only the
+        // loaded one hits, as the processed one's key holds the span's base
         withSpan(doc, span, options) { (json, opts) =>
           docTriples ++= ToRdf.toRdf(JsonLdApi.expand(JsonLdInput.Doc(json), partitionState.withOptions(opts)), opts)
         }.left.foreach(errors += _)

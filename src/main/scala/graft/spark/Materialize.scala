@@ -2,6 +2,7 @@ package graft.spark
 
 import java.util.concurrent.{Callable, ExecutionException, Executors, Future => JFuture}
 import scala.collection.mutable
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
@@ -16,6 +17,12 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   *   triples/bucket=N/   deduplicated triples of bucket N
   *   errors/bucket=N/    expansion error channel
   *   lineage/            one row per completed bucket (status, counts, attempt)
+  *   errors|triples/batch=N/  the same two channels of streamed micro-batch N
+  *   stream_lineage/     one row per completed micro-batch, `bucket` = batch id
+  *
+  * A bucket and a micro-batch are both units of one writer, [[writeUnit]]:
+  * buckets are written by [[run]], micro-batches by
+  * [[StreamingPipeline.materializeStream]].
   *
   * Resume: completed buckets are read from lineage and skipped (the
   * coarse-grained equivalent of a `left_anti` on completed doc_ids — bucket
@@ -64,14 +71,14 @@ object Materialize {
       .digest(normalized.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
   }
 
-  /** Done buckets and the highest attempt per bucket, from one collected
-    * read of `lineage/` (one row per bucket commit, so O(buckets)).
+  /** Done units and the highest attempt per unit, from one collected read
+    * of the lineage table at `path` (one row per unit commit, so O(units)).
     */
-  private def lineageState(spark: SparkSession, outDir: String): (Set[Int], Map[Int, Int]) = {
-    if (!pathExists(spark, s"$outDir/lineage")) (Set.empty, Map.empty)
+  private[spark] def lineageState(spark: SparkSession, path: String): (Set[Int], Map[Int, Int]) = {
+    if (!pathExists(spark, path)) (Set.empty, Map.empty)
     else {
       import spark.implicits._
-      val rows = spark.read.schema(lineageSchema).parquet(s"$outDir/lineage")
+      val rows = spark.read.schema(lineageSchema).parquet(path)
         .select("bucket", "status", "attempt").as[(Int, String, Int)].collect()
       (rows.collect { case (b, "done", _) => b }.toSet,
         rows.groupMapReduce(_._1)(_._3)(math.max))
@@ -101,6 +108,51 @@ object Materialize {
     */
   private def windowSize(spark: SparkSession, pending: Int): Int =
     math.max(1, pending min 2 * spark.sparkContext.defaultParallelism min MaxWindow)
+
+  /** Unit `<kind>=<id>`'s writes (a bucket of [[run]], a micro-batch of
+    * [[StreamingPipeline.materializeStream]]), and the lineage row that
+    * will commit them: `docs` are expanded once into a cached dataset,
+    * then `errors/<unit>` and the deduplicated `triples/<unit>` are written,
+    * both `Overwrite`, so a redone unit replaces its earlier writes.
+    * `betweenWrites` runs after the errors write and before the triples
+    * write.
+    */
+  private[spark] def writeUnit(
+      docs: Dataset[Doc],
+      ctxB: Broadcast[Map[String, String]],
+      outDir: String,
+      kind: String,
+      id: Int,
+      attempt: Int,
+      betweenWrites: () => Unit = () => ()
+  ): PartitionLineage = {
+    val t0 = System.nanoTime()
+    // Lineage counts are Observations, each fulfilled by the first query
+    // that reports it:
+    // - doc_count is observed under rows.cache(), in the cached plan
+    //   (CollectMetricsExec.collect follows InMemoryTableScanExec into
+    //   it). The errors write goes first and has no shuffle, so it builds
+    //   the cache and counts the docs in its result stage.
+    // - error_count and triple_count are observed directly under their
+    //   writes, in those writes' result stages.
+    // Spark merges a result task's accumulator updates once per partition
+    // (a map task's on every successful attempt), so a retried map stage
+    // cannot double any of the three.
+    val docsSeen, triplesWritten, errorsWritten = Observation()
+    val rows = ExpandStage.run(docs.observe(docsSeen, count(lit(1)).as("n")), ctxB).cache()
+    try {
+      ExpandStage.errors(rows).observe(errorsWritten, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/errors/$kind=$id")
+      betweenWrites()
+      ExpandStage.triples(rows)
+        .dropDuplicates("subj", "pred", "obj_kind", "obj_value", "obj_datatype", "obj_lang", "graph")
+        .observe(triplesWritten, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/triples/$kind=$id")
+    } finally rows.unpersist()
+    def n(o: Observation) = o.get("n").asInstanceOf[Long]
+    PartitionLineage(id, n(docsSeen), n(triplesWritten), n(errorsWritten), "done", attempt,
+      (System.nanoTime() - t0) / 1000000)
+  }
 
   /** Run the full pipeline over `docs`. Each pending bucket is expanded
     * (partition-local), deduplicated and written; then its lineage row
@@ -142,7 +194,7 @@ object Materialize {
   ): RunReport = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (completed, attempts) = lineageState(spark, outDir)
+    val (completed, attempts) = lineageState(spark, s"$outDir/lineage")
     val done = if (resume) completed else Set.empty[Int]
     val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
 
@@ -162,37 +214,10 @@ object Materialize {
     }
     val staged = spark.read.schema(stagedSchema(docs.schema)).parquet(stagingDir)
 
-    /** Bucket b's writes, and the lineage row that will commit them. */
-    def work(b: Int): PartitionLineage = {
-      val t0 = System.nanoTime()
-      // Lineage counts are Observations, each fulfilled by the first query
-      // that reports it:
-      // - doc_count is observed under rows.cache(), in the cached plan
-      //   (CollectMetricsExec.collect follows InMemoryTableScanExec into
-      //   it). The errors write goes first and has no shuffle, so it builds
-      //   the cache and counts the docs in its result stage.
-      // - error_count and triple_count are observed directly under their
-      //   writes, in those writes' result stages.
-      // Spark merges a result task's accumulator updates once per partition
-      // (a map task's on every successful attempt), so a retried map stage
-      // cannot double any of the three.
-      val docsSeen, triplesWritten, errorsWritten = Observation()
-      val bucketDocs = staged.filter(col("bucket") === b).drop("bucket").as[Doc]
-        .observe(docsSeen, count(lit(1)).as("n"))
-      val rows = ExpandStage.run(bucketDocs, ctxB).cache()
-      try {
-        ExpandStage.errors(rows).observe(errorsWritten, count(lit(1)).as("n"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/errors/bucket=$b")
-        if (failAtBucket.contains(b)) throw new RuntimeException(s"injected failure at bucket $b")
-        ExpandStage.triples(rows)
-          .dropDuplicates("subj", "pred", "obj_kind", "obj_value", "obj_datatype", "obj_lang", "graph")
-          .observe(triplesWritten, count(lit(1)).as("n"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/triples/bucket=$b")
-      } finally rows.unpersist()
-      def n(o: Observation) = o.get("n").asInstanceOf[Long]
-      PartitionLineage(b, n(docsSeen), n(triplesWritten), n(errorsWritten), "done",
-        attempts.getOrElse(b, 0) + 1, (System.nanoTime() - t0) / 1000000)
-    }
+    def work(b: Int): PartitionLineage =
+      writeUnit(staged.filter(col("bucket") === b).drop("bucket").as[Doc], ctxB, outDir, "bucket", b,
+        attempts.getOrElse(b, 0) + 1,
+        () => if (failAtBucket.contains(b)) throw new RuntimeException(s"injected failure at bucket $b"))
 
     val todo = (0 until buckets).filterNot(done)
     val pending = todo.iterator

@@ -1,8 +1,9 @@
 package graft.spark
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.JsonLdOptions
 
 /** Structured Streaming lift of the expansion stage. The per-document engine
@@ -15,7 +16,11 @@ object StreamingPipeline {
 
   final case class TimedDoc(doc: Doc, ingest_ts: java.sql.Timestamp)
 
-  /** streaming Dataset[TimedDoc] → streaming triples with event time. */
+  /** streaming Dataset[TimedDoc] → streaming triples with event time: the
+    * triple channel that [[predicateRates]] and [[subjectFragments]]
+    * aggregate. [[materializeStream]] is the sink that writes both
+    * channels, errors included.
+    */
   def expandStream(
       docs: Dataset[TimedDoc],
       resolvedContexts: Broadcast[Map[String, String]],
@@ -90,95 +95,42 @@ object StreamingPipeline {
         })
   }
 
-  // Committed-batch ids per lineage path, cached in driver memory after ONE
-  // read: the previous gate re-scanned the whole lineage parquet every
-  // micro-batch — O(batches²) driver I/O over a long-running stream. The
-  // cache is appended to on every successful lineage write, so only a fresh
-  // driver JVM (a true restart) pays the lineage read again. Bounded: 8
-  // bytes per committed batch id.
-  private val committedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[java.lang.Long]]()
-  /** Lineage parquet loads actually performed, per lineage path (test
-    * observability: StreamingSpec asserts batch k>0 does not rescan lineage).
-    */
-  private val lineageReloads =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private[spark] def lineageReloadCount(outDir: String): Long = {
-    val c = lineageReloads.get(s"$outDir/stream_lineage")
-    if (c == null) 0L else c.get()
-  }
-  /** Drop the cached committed ids — simulates a fresh driver JVM. */
-  private[spark] def invalidateLineageCache(outDir: String): Unit =
-    committedCache.remove(s"$outDir/stream_lineage")
-
-  private def committedIds(spark: SparkSession, lineagePath: String): java.util.Set[java.lang.Long] =
-    committedCache.computeIfAbsent(lineagePath, { p =>
-      lineageReloads.computeIfAbsent(p, _ => new java.util.concurrent.atomic.AtomicLong(0L))
-        .incrementAndGet()
-      val s = java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()
-      if (Materialize.pathExists(spark, p))
-        spark.read.parquet(p).select("batch_id").collect().foreach(r => s.add(r.getLong(0)))
-      s
-    })
-
-  /** Append one micro-batch of triples durably: data first, then the lineage
-    * row — and skip batch ids that already have a lineage row. foreachBatch
-    * is at-least-once on failure/restart; the lineage gate layers idempotence
-    * on top (same pattern as Materialize's bucket lineage). Returns false
-    * when the batch was skipped as already committed. The committed check is
-    * O(1) against the driver-side cache; the lineage table is read once per
-    * driver JVM, not once per batch.
-    * `n_triples` is observed on the write itself; the batch dir is not read
-    * back.
-    */
-  def appendTriplesBatch(batch: org.apache.spark.sql.DataFrame, batchId: Long, outDir: String): Boolean = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val lineagePath = s"$outDir/stream_lineage"
-    var ids = committedIds(spark, lineagePath)
-    if (ids.contains(Long.box(batchId))) {
-      // about to REFUSE the batch — the only case where a stale cache can
-      // cause harm (outDir deleted and recreated inside one driver JVM:
-      // notebook rerun, test cleanup). Verify the lineage table still
-      // exists before refusing; the FS metadata call sits on this rare
-      // refusal path only, so the common path stays zero-I/O per batch.
-      if (Materialize.pathExists(spark, lineagePath)) return false
-      committedCache.remove(lineagePath)
-      ids = committedIds(spark, lineagePath)
-      if (ids.contains(Long.box(batchId))) return false
-    }
-    val rows = batch.drop("ingest_ts")
-    // overwrite, not append: a retry of a batch whose data write succeeded
-    // but whose lineage row did not (the exact failure window the gate
-    // covers) must replace the partial/duplicate dir, not double it
-    val written = Observation()
-    rows.observe(written, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$outDir/triples/batch=$batchId")
-    Seq((batchId, written.get("n").asInstanceOf[Long])).toDF("batch_id", "n_triples")
-      .write.mode("append").parquet(lineagePath)
-    // only after the lineage row is durable — a failed lineage write must
-    // leave the id uncached so the retry re-runs the overwrite path
-    ids.add(Long.box(batchId))
-    true
-  }
-
   /** readStream → expand → durable writeStream: the streaming lift of
-    * [[Materialize]]. Each micro-batch lands under `outDir/triples/batch=N`
-    * with a per-batch lineage row; the engine's streaming checkpoint plus
-    * the lineage gate make restarts resume without duplicating batches.
+    * [[Materialize]], writing both channels. Micro-batch N is one
+    * [[Materialize.writeUnit]] unit, `errors/batch=N` then
+    * `triples/batch=N` (deduplicated within the batch, as a bucket is),
+    * committed by a [[PartitionLineage]] row in `stream_lineage` whose
+    * `bucket` is the batch id. An id that does not fit an `Int` fails the
+    * batch.
+    *
+    * foreachBatch is at-least-once on failure and restart. The engine's
+    * streaming checkpoint plus the lineage gate make restarts resume
+    * without duplicating batches: the committed ids are read once, when
+    * this call starts the query, and a batch whose id is among them is
+    * skipped. A batch written but not committed is redone; its writes are
+    * `Overwrite`.
     */
   def materializeStream(
       docs: Dataset[TimedDoc],
       resolvedContexts: Broadcast[Map[String, String]],
       outDir: String
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    expandStream(docs, resolvedContexts).writeStream
+  ): StreamingQuery = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val lineagePath = s"$outDir/stream_lineage"
+    val (committed, _) = Materialize.lineageState(spark, lineagePath)
+    docs.writeStream
       .option("checkpointLocation", s"$outDir/_checkpoints")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        appendTriplesBatch(batch, batchId, outDir); ()
+      .foreachBatch { (batch: Dataset[TimedDoc], batchId: Long) =>
+        val id = Math.toIntExact(batchId)
+        if (!committed(id)) {
+          val row = Materialize.writeUnit(batch.select(col("doc.*")).as[Doc], resolvedContexts, outDir,
+            "batch", id, attempt = 1)
+          Seq(row).toDS().write.mode(SaveMode.Append).parquet(lineagePath)
+        }
       }
-      .outputMode("append")
       .start()
+  }
 
   /** Streaming exact dedup with BOUNDED state: duplicates are dropped within
     * the watermark horizon via dropDuplicatesWithinWatermark — the only safe

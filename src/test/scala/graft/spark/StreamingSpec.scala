@@ -97,68 +97,112 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("materializeStream: durable per-batch triple sink with idempotent lineage gating") {
+  private val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:10")
+
+  /** One materializeStream query on `outDir`: each element of `batches` is
+    * added as one micro-batch and processed before the next.
+    */
+  private def materialize(outDir: String, batches: Seq[Seq[Doc]]): Unit = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft-stream-mat").toString
     val input = MemoryStream[StreamingPipeline.TimedDoc]
     val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
     val q = StreamingPipeline.materializeStream(input.toDS(), ctxB, outDir)
-    try {
-      val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:10")
-      input.addData((0L until 20L).map(i => StreamingPipeline.TimedDoc(SyntheticDocs.generateDoc(i), t0)))
+    try batches.foreach { docs =>
+      input.addData(docs.map(StreamingPipeline.TimedDoc(_, t0)))
       q.processAllAvailable()
-      input.addData(Seq(StreamingPipeline.TimedDoc(SyntheticDocs.generateDoc(99L), t0)))
-      q.processAllAvailable()
-      val triples = spark.read.parquet(s"$outDir/triples")
-      assert(triples.count() > 0)
-      val lineage = spark.read.parquet(s"$outDir/stream_lineage").collect()
-      assert(lineage.length >= 1)
-      assert(lineage.map(_.getAs[Long]("n_triples")).sum == triples.count())
-      // replaying an already-committed batch id must be a no-op (the
-      // at-least-once foreachBatch contract under restart)
-      val before = triples.count()
-      val someBatch = lineage.head.getAs[Long]("batch_id")
-      val replay = StreamingPipeline.appendTriplesBatch(
-        spark.read.parquet(s"$outDir/triples/batch=$someBatch"), someBatch, outDir)
-      assert(!replay)
-      assert(spark.read.parquet(s"$outDir/triples").count() == before)
     } finally q.stop()
   }
 
-  test("lineage gate is O(1) per batch: the lineage table is read once per JVM, not once per batch") {
+  private def docs(ids: Long*): Seq[Doc] = ids.map(SyntheticDocs.generateDoc)
+
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) { val fs = f.listFiles; if (fs != null) fs.foreach(rm) }
+    f.delete(); ()
+  }
+
+  private def lineage(outDir: String): Seq[PartitionLineage] = {
     import spark.implicits._
-    val outDir = java.nio.file.Files.createTempDirectory("graft-stream-o1").toString
-    val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:10")
-    def batchDf(tag: String) = Seq((t0, s"http://s/$tag", "http://p/x", "o"))
-      .toDF("ingest_ts", "subj", "pred", "obj")
-    assert(StreamingPipeline.lineageReloadCount(outDir) == 0L)
-    assert(StreamingPipeline.appendTriplesBatch(batchDf("a"), 0L, outDir))
-    assert(StreamingPipeline.appendTriplesBatch(batchDf("b"), 1L, outDir))
-    assert(StreamingPipeline.appendTriplesBatch(batchDf("c"), 2L, outDir))
-    assert(!StreamingPipeline.appendTriplesBatch(batchDf("a"), 0L, outDir)) // replay → no-op
-    // the whole sequence cost exactly ONE lineage load (batch 2+ and the
-    // replay check hit the driver cache — the O(batches²) rescan is gone)
-    assert(StreamingPipeline.lineageReloadCount(outDir) == 1L)
-    // a fresh driver JVM (simulated by cache invalidation) re-reads lineage
-    // ONCE and still refuses committed ids — restart idempotence intact
-    StreamingPipeline.invalidateLineageCache(outDir)
-    assert(!StreamingPipeline.appendTriplesBatch(batchDf("a"), 0L, outDir))
-    assert(StreamingPipeline.appendTriplesBatch(batchDf("d"), 3L, outDir))
-    assert(StreamingPipeline.lineageReloadCount(outDir) == 2L)
-    val lineage = spark.read.parquet(s"$outDir/stream_lineage")
-    assert(lineage.select("batch_id").as[Long].collect().toSet == Set(0L, 1L, 2L, 3L))
-    // outDir deleted and recreated inside the SAME JVM (notebook rerun /
-    // test cleanup): the cached committed ids must not refuse the new
-    // run's batch 0 — the per-batch existence check drops the stale cache
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) { val fs = f.listFiles; if (fs != null) fs.foreach(rm) }
-      f.delete(); ()
+    spark.read.parquet(s"$outDir/stream_lineage").as[PartitionLineage].collect().sortBy(_.bucket).toSeq
+  }
+
+  test("materializeStream: durable per-batch triple sink with idempotent lineage gating") {
+    val outDir = java.nio.file.Files.createTempDirectory("graft-stream-mat").toString
+    materialize(outDir, Seq(docs(0L until 20L: _*), docs(99L)))
+    def triples(batch: Int) =
+      spark.read.parquet(s"$outDir/triples/batch=$batch").collect().map(_.toString).sorted.toSeq
+    val written = spark.read.parquet(s"$outDir/triples").count()
+    assert(written > 0)
+    val first = lineage(outDir)
+    assert(first.map(_.bucket) == Seq(0, 1))
+    assert(first.map(_.triple_count).sum == written)
+    assert(first.map(_.doc_count).sum == 21L)
+    assert(first.forall(l => l.status == "done" && l.attempt == 1))
+    val before = Seq(triples(0), triples(1))
+    // a restart without the streaming checkpoint replays batch ids 0 and 1
+    // (here with other docs): both are already committed, so they are
+    // skipped and their triples stay as they were; batch 2 is new and commits
+    rm(new java.io.File(s"$outDir/_checkpoints"))
+    materialize(outDir, Seq(docs(200L), docs(201L), docs(100L)))
+    assert(Seq(triples(0), triples(1)) == before)
+    val after = lineage(outDir)
+    assert(after.map(_.bucket) == Seq(0, 1, 2))
+    assert(after.take(2) == first)
+    assert(after(2).doc_count == 1L && after(2).triple_count > 0)
+    assert(spark.read.parquet(s"$outDir/triples").count() == written + after(2).triple_count)
+  }
+
+  test("materializeStream reads stream_lineage once per call, not once per batch") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val outDir = java.nio.file.Files.createTempDirectory("graft-stream-scans").toString
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.optimizedPlan.exists {
+          case l: LogicalRelation => l.relation match {
+            case r: HadoopFsRelation => r.location.rootPaths.exists(_.getName == "stream_lineage")
+            case _ => false
+          }
+          case _ => false
+        }) scans.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    def scansOf(batches: Seq[Seq[Doc]]): Int = {
+      scans.set(0)
+      materialize(outDir, batches)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      scans.get()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // a fresh outDir has no lineage table to read
+      assert(scansOf(Seq(docs(1L), docs(2L), docs(3L))) == 0)
+      // a restart reads it once, however many batches follow: ids 0-2 are
+      // skipped, 3 and 4 commit
+      rm(new java.io.File(s"$outDir/_checkpoints"))
+      assert(scansOf(Seq(docs(4L), docs(5L), docs(6L), docs(7L), docs(8L))) == 1)
+    } finally spark.listenerManager.unregister(listener)
+    assert(lineage(outDir).map(_.bucket) == (0 to 4))
+    // outDir deleted and recreated in the same JVM: no committed id
+    // outlives the directory, so the new run's batch 0 commits
     rm(new java.io.File(outDir))
-    assert(StreamingPipeline.appendTriplesBatch(batchDf("fresh"), 0L, outDir),
-      "stale committed-id cache refused batch 0 of a recreated outDir")
-    assert(spark.read.parquet(s"$outDir/triples/batch=0").count() == 1L)
+    materialize(outDir, Seq(docs(9L)))
+    assert(lineage(outDir).map(l => (l.bucket, l.doc_count)) == Seq((0, 1L)))
+    assert(spark.read.parquet(s"$outDir/triples/batch=0").count() == lineage(outDir).head.triple_count)
+  }
+
+  test("materializeStream writes a streamed span's DocError to errors/batch=N and counts it in lineage") {
+    val outDir = java.nio.file.Files.createTempDirectory("graft-stream-errors").toString
+    val good = Doc("doc-good", Seq(Span("jsonld", """{"@id":"http://s/1","http://p/x":"o"}""", null, 0)))
+    val bad = Doc("doc-bad", Seq(Span("jsonld", """{"@id":"http://s/2","http://p/x":""", null, 3)))
+    materialize(outDir, Seq(Seq(good, bad)))
+    val errors = spark.read.parquet(s"$outDir/errors/batch=0").collect()
+    assert(errors.map(r => (r.getAs[String]("doc_id"), r.getAs[Int]("span_offset"))).toSeq == Seq(("doc-bad", 3)))
+    val triples = spark.read.parquet(s"$outDir/triples/batch=0").collect()
+    assert(triples.map(_.getAs[String]("subj")).toSet == Set("http://s/1"))
+    val l = lineage(outDir)
+    assert(l.map(r => (r.bucket, r.doc_count, r.triple_count, r.error_count)) == Seq((0, 2L, 1L, 1L)))
   }
 
   test("streaming dedup drops in-horizon duplicates with bounded state") {
