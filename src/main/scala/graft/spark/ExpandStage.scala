@@ -5,11 +5,10 @@ import graft.json._
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Per-partition result row: exactly one of triple/error is set. One
-  * mapPartitions pass computes both channels; split downstream.
+/** Per-partition result row: exactly one of triple/error (each with its
+  * doc_id) is set. One mapPartitions pass computes both channels.
   */
 final case class PipeRow(
-    doc_id: String,
     triple: TripleRow, // null on error rows
     error: DocError // null on triple rows
 )
@@ -238,8 +237,7 @@ object ExpandStage {
       val partitionState = new ApiState(options, loader) // caches amortize across the partition
       it.flatMap { doc =>
         val (ts, es) = expandDoc(doc, partitionState, aliases)
-        ts.iterator.map(t => PipeRow(doc.doc_id, t, null)) ++
-          es.iterator.map(e => PipeRow(doc.doc_id, null, e))
+        ts.iterator.map(t => PipeRow(t, null)) ++ es.iterator.map(e => PipeRow(null, e))
       }
     }
   }

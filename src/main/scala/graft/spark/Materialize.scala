@@ -12,17 +12,18 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * writes go to Iceberg (`df.writeTo(table).append()`) in production — only
   * this object touches storage.
   *
-  * Layout under `outDir`:
+  * An `outDir` holds a bucketed run ([[run]]) or a stream
+  * ([[StreamingPipeline.materializeStream]]), never both: each refuses an
+  * `outDir` that holds the other's lineage table. A bucketed run's layout:
   *   staging_b{K}/bucket=N/  bucketed source docs (written once, partition-pruned per-bucket reads)
-  *   triples/bucket=N/   deduplicated triples of bucket N
+  *   triples/bucket=N/   triples of bucket N, one row per (triple, doc)
   *   errors/bucket=N/    expansion error channel
   *   lineage/            one row per completed bucket (status, counts, attempt)
-  *   errors|triples/batch=N/  the same two channels of streamed micro-batch N
+  * A stream's layout:
+  *   errors|triples/batch=N/  the same two channels of micro-batch N
   *   stream_lineage/     one row per completed micro-batch, `bucket` = batch id
   *
-  * A bucket and a micro-batch are both units of one writer, [[writeUnit]]:
-  * buckets are written by [[run]], micro-batches by
-  * [[StreamingPipeline.materializeStream]].
+  * A bucket and a micro-batch are both units of one writer, [[writeUnit]].
   *
   * Resume: completed buckets are read from lineage and skipped (the
   * coarse-grained equivalent of a `left_anti` on completed doc_ids — bucket
@@ -71,6 +72,12 @@ object Materialize {
       .digest(normalized.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
   }
 
+  /** Fails if `outDir` holds `lineage`, the other layout's lineage table. */
+  private[spark] def refuseOtherLayout(spark: SparkSession, outDir: String, lineage: String): Unit =
+    if (pathExists(spark, s"$outDir/$lineage"))
+      throw new IllegalArgumentException(s"$outDir already holds $lineage/: a bucketed run (lineage/) " +
+        "and a stream (stream_lineage/) need separate outDirs")
+
   /** Done units and the highest attempt per unit, from one collected read
     * of the lineage table at `path` (one row per unit commit, so O(units)).
     */
@@ -112,8 +119,9 @@ object Materialize {
   /** Unit `<kind>=<id>`'s writes (a bucket of [[run]], a micro-batch of
     * [[StreamingPipeline.materializeStream]]), and the lineage row that
     * will commit them: `docs` are expanded once into a cached dataset,
-    * then `errors/<unit>` and the deduplicated `triples/<unit>` are written,
-    * both `Overwrite`, so a redone unit replaces its earlier writes.
+    * then `errors/<unit>` and `triples/<unit>` (distinct rows: one per
+    * (triple, doc)) are written, both `Overwrite`, so a redone unit
+    * replaces its earlier writes.
     * `betweenWrites` runs after the errors write and before the triples
     * write.
     */
@@ -144,8 +152,7 @@ object Materialize {
       ExpandStage.errors(rows).observe(errorsWritten, count(lit(1)).as("n"))
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/errors/$kind=$id")
       betweenWrites()
-      ExpandStage.triples(rows)
-        .dropDuplicates("subj", "pred", "obj_kind", "obj_value", "obj_datatype", "obj_lang", "graph")
+      ExpandStage.triples(rows).distinct()
         .observe(triplesWritten, count(lit(1)).as("n"))
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/triples/$kind=$id")
     } finally rows.unpersist()
@@ -194,6 +201,7 @@ object Materialize {
   ): RunReport = {
     val spark = docs.sparkSession
     import spark.implicits._
+    refuseOtherLayout(spark, outDir, "stream_lineage")
     val (completed, attempts) = lineageState(spark, s"$outDir/lineage")
     val done = if (resume) completed else Set.empty[Int]
     val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
@@ -255,7 +263,9 @@ object Materialize {
 
   /** Cross-bucket global dedup → final graph table. Group keys contain subj —
     * high cardinality, so the rdf:type hot predicate does NOT skew this
-    * shuffle; AQE coalesces output partitions.
+    * shuffle; AQE coalesces output partitions. Units hold one row per
+    * (triple, doc), so `support` counts a triple's docs and `first_doc` is
+    * the least of them, whatever the bucket count.
     */
   def finalizeGraph(spark: SparkSession, outDir: String): DataFrame = {
     val all = spark.read.schema(triplesSchema).parquet(s"$outDir/triples")

@@ -39,37 +39,20 @@ object RemoteContextPool {
 
   val knownIris: Vector[String] = pool.keys.toVector.sorted
 
-  /** Resolve IRIs: vendored pool first, then (if given) a driver-side
-    * fetcher such as [[graft.core.HttpDocumentLoader]]. Without a fetcher
-    * the result is a subset of [[pool]]; the fetcher is the hook for
-    * contexts outside it, and kgbench's set-up resolves through here and
-    * [[broadcastResolved]]. Fetch failures are
-    * dropped — executors then raise the deterministic
-    * `loading remote context failed` for those IRIs, never a network call.
-    * The fetched document is re-serialized to its JSON text (a Link-header
-    * `contextUrl` was already applied by the loader contract before this
-    * point for full documents; bare contexts don't carry one).
+  /** The pool entries for `iris`. An IRI outside the pool is dropped, and
+    * executors then raise the deterministic `loading remote context failed`
+    * for it, never a network call: graft has no HTTP client.
     */
-  def resolveAll(iris: Vector[String], fetcher: Option[DocumentLoader] = None): Map[String, String] =
-    iris.flatMap { iri =>
-      pool.get(iri).map(iri -> _).orElse(fetcher.flatMap { f =>
-        try Some(iri -> graft.json.JsonWriter.write(f.load(iri).document))
-        catch { case _: JsonLdError => None }
-      })
-    }.toMap
+  def resolveAll(iris: Vector[String]): Map[String, String] =
+    iris.flatMap(iri => pool.get(iri).map(iri -> _)).toMap
 
-  /** Resolve the distinct IRIs of `referenced` on the driver (vendored pool,
-    * then the optional fetcher — a production path that fetches puts an
-    * [[graft.core.HttpDocumentLoader]] here) and broadcast them. HTTP happens
-    * at most once per distinct IRI, on the driver. With no fetcher it can
-    * only return pool entries, so the engine broadcasts [[pool]] instead and
-    * scans no corpus.
+  /** Resolve the distinct IRIs of `referenced` on the driver and broadcast
+    * them. It can only return pool entries, so the engine broadcasts
+    * [[pool]] instead and scans no corpus; kgbench's set-up resolves
+    * through here.
     */
-  def broadcastResolved(spark: SparkSession, referenced: Dataset[String],
-      fetcher: Option[DocumentLoader] = None): Broadcast[Map[String, String]] = {
-    val iris = referenced.distinct().collect().toVector
-    spark.sparkContext.broadcast(resolveAll(iris, fetcher))
-  }
+  def broadcastResolved(spark: SparkSession, referenced: Dataset[String]): Broadcast[Map[String, String]] =
+    spark.sparkContext.broadcast(resolveAll(referenced.distinct().collect().toVector))
 
   def loaderFor(resolved: Map[String, String]): DocumentLoader =
     new DocumentLoader.MapLoader(resolved)

@@ -98,10 +98,10 @@ object StreamingPipeline {
   /** readStream → expand → durable writeStream: the streaming lift of
     * [[Materialize]], writing both channels. Micro-batch N is one
     * [[Materialize.writeUnit]] unit, `errors/batch=N` then
-    * `triples/batch=N` (deduplicated within the batch, as a bucket is),
+    * `triples/batch=N` (one row per (triple, doc), as in a bucket),
     * committed by a [[PartitionLineage]] row in `stream_lineage` whose
     * `bucket` is the batch id. An id that does not fit an `Int` fails the
-    * batch.
+    * batch; an `outDir` holding a bucketed run's `lineage` is refused.
     *
     * foreachBatch is at-least-once on failure and restart. The engine's
     * streaming checkpoint plus the lineage gate make restarts resume
@@ -117,6 +117,7 @@ object StreamingPipeline {
   ): StreamingQuery = {
     val spark = docs.sparkSession
     import spark.implicits._
+    Materialize.refuseOtherLayout(spark, outDir, "lineage")
     val lineagePath = s"$outDir/stream_lineage"
     val (committed, _) = Materialize.lineageState(spark, lineagePath)
     docs.writeStream

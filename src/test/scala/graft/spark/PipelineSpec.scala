@@ -149,8 +149,8 @@ class PipelineSpec extends AnyFunSuite {
     val resumed = Materialize.run(docs, out1, buckets = 4)
     assert(resumed.skipped == 2 && resumed.processed == 2)
     val full = Materialize.run(docs, out2, buckets = 4)
-    val g1 = Materialize.finalizeGraph(spark, out1).drop("first_doc").orderBy("subj", "pred", "obj_value").collect()
-    val g2 = Materialize.finalizeGraph(spark, out2).drop("first_doc").orderBy("subj", "pred", "obj_value").collect()
+    val g1 = Materialize.finalizeGraph(spark, out1).orderBy("subj", "pred", "obj_value").collect()
+    val g2 = Materialize.finalizeGraph(spark, out2).orderBy("subj", "pred", "obj_value").collect()
     assert(g1.toSeq == g2.toSeq)
     // attempts: resumed buckets recorded attempt 1 (first completion)
     val lineage = spark.read.parquet(s"$out1/lineage")
@@ -161,6 +161,28 @@ class PipelineSpec extends AnyFunSuite {
     assert(rerun.skipped == 0 && rerun.processed == 4)
     val attempts = spark.read.parquet(s"$out1/lineage").groupBy("bucket").agg(max("attempt")).collect()
     assert(attempts.length == 4 && attempts.forall(_.getInt(1) == 2))
+  }
+
+  test("the graph's support counts the docs holding a triple and first_doc is the least, at any bucket count") {
+    import spark.implicits._
+    val docs = (0 until 10).map(i => Doc(f"d$i%02d",
+      Seq(Span("jsonld", """{"@id":"http://e/x","http://v/p":"v"}""", null, 0)))).toDS()
+    for (buckets <- Seq(1, 4, 8)) {
+      val out = java.nio.file.Files.createTempDirectory(s"graft-support-$buckets").toString
+      Materialize.run(docs, out, buckets = buckets)
+      val graph = Materialize.finalizeGraph(spark, out).select("first_doc", "support").as[(String, Long)].collect()
+      assert(graph.toSeq == Seq(("d00", 10L)), s"$buckets buckets")
+    }
+  }
+
+  test("resolveAll keeps only pool entries; broadcastResolved broadcasts that map") {
+    import spark.implicits._
+    val vocab = s"${RemoteContextPool.baseIri}vocab.jsonld"
+    val missing = s"${RemoteContextPool.baseIri}missing.jsonld"
+    val resolved = RemoteContextPool.resolveAll(Vector(vocab, missing))
+    assert(resolved == Map(vocab -> RemoteContextPool.pool(vocab)))
+    val broadcast = RemoteContextPool.broadcastResolved(spark, Seq(vocab, missing, vocab, missing, vocab).toDS())
+    assert(broadcast.value == resolved)
   }
 
   test("lineage counts equal what each bucket wrote; the report sums them") {

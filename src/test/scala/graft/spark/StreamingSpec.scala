@@ -205,6 +205,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(l.map(r => (r.bucket, r.doc_count, r.triple_count, r.error_count)) == Seq((0, 2L, 1L, 1L)))
   }
 
+  test("a bucketed run and a stream refuse each other's outDir") {
+    val bucketed = java.nio.file.Files.createTempDirectory("graft-mixed-bucketed").toString
+    Materialize.run(SyntheticDocs.generate(spark, 20, 2), bucketed, buckets = 2)
+    val toStream = intercept[IllegalArgumentException] { materialize(bucketed, Seq(docs(1L))) }
+    assert(toStream.getMessage.contains(s"$bucketed already holds lineage/"), toStream.getMessage)
+    assert(!new java.io.File(s"$bucketed/_checkpoints").exists, "the stream started")
+    assert(Materialize.finalizeGraph(spark, bucketed).count() > 0)
+
+    val streamed = java.nio.file.Files.createTempDirectory("graft-mixed-streamed").toString
+    materialize(streamed, Seq(docs(1L)))
+    val toBuckets = intercept[IllegalArgumentException] {
+      Materialize.run(SyntheticDocs.generate(spark, 20, 2), streamed, buckets = 2)
+    }
+    assert(toBuckets.getMessage.contains(s"$streamed already holds stream_lineage/"), toBuckets.getMessage)
+    assert(new java.io.File(streamed).list().toSet == Set("_checkpoints", "errors", "stream_lineage", "triples"))
+  }
+
   test("streaming dedup drops in-horizon duplicates with bounded state") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
