@@ -7,7 +7,9 @@ import graft.spark._
   * spark-submit on a multi-executor cluster"): full KG-construction run —
   * docs → expand → triples (+ error channel) → bucketed materialize with
   * lineage → global dedup graph. Re-running with the same outDir resumes,
-  * skipping completed buckets.
+  * skipping completed buckets. The input is read only while no bucket is
+  * committed: a resume reads the corpus staged by the first run, and fails
+  * when `--buckets` differs from that run's.
   *
   *   spark-submit --master local-cluster[4,1,1024] --class graft.Main \
   *     <jar> --out /tmp/graft-run [--docs 100000] [--buckets 16] \

@@ -12,25 +12,9 @@ import java.security.MessageDigest
   */
 object BnodeCanon {
 
-  // MessageDigest.getInstance does provider lookups with shared locks —
-  // at 32 executor threads × one call per bnode per round it serializes the
-  // whole stage. One digest per thread, reset between uses.
-  private val digests = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("SHA-256"))
-  private val hexChars = "0123456789abcdef".toCharArray
   // reusable per-thread UTF-8 staging buffer for digest updates (the
   // String.getBytes byte[] per hash was a top allocation site)
   private val utf8Buf = ThreadLocal.withInitial[Array[Byte]](() => new Array[Byte](256))
-
-  private def hex(d: Array[Byte]): String = {
-    val out = new Array[Char](d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      out(i * 2) = hexChars((d(i) >> 4) & 0xf)
-      out(i * 2 + 1) = hexChars(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
 
   /** md.update with exactly the bytes of `s.getBytes(UTF_8)`, no per-call
     * byte[] (standard UTF-8 encode incl. surrogate pairs into a reused buffer).
@@ -61,21 +45,24 @@ object BnodeCanon {
   }
 
   private def sha256(s: String): String = {
-    val md = digests.get()
+    val md = Hashing.sha256.get()
     md.reset()
     updateUtf8(md, s)
-    hex(md.digest())
+    Hashing.hex(md.digest())
   }
+
+  /** Most refinement rounds per individualization branch. */
+  private val MaxRounds = 8
 
   private def objKey(t: Triple): String = t.objKind + "\u0001" + t.objValue + "\u0001" + t.objDatatype + "\u0001" + t.objLang
 
   /** Relabel all `_:` ids in `triples` with canonical `_:c<hex>` labels.
     * `scopeSalt` is mixed into every label so bnodes from different scopes
     * (documents) never collide; pass "" to canonicalize purely by structure.
-    * maxRounds bounds the refinement fixpoint (graph diameter is the true
+    * `MaxRounds` bounds the refinement fixpoint (graph diameter is the true
     * bound; identical-hash survivors get deterministic ordinal suffixes).
     */
-  def canonicalize(triples0: Vector[Triple], scopeSalt: String = "", maxRounds: Int = 8): Vector[Triple] = {
+  def canonicalize(triples0: Vector[Triple], scopeSalt: String = ""): Vector[Triple] = {
     // labels must depend on the quad SET, not the triple multiset: a
     // document repeating an identical value emits the same triple twice
     // out of toRdf, while a round-trip through fromRdf dedups it — hashing
@@ -112,7 +99,7 @@ object BnodeCanon {
       bnodes.iterator.map { b =>
         val sigs = sigsByNode.get(b).sorted
         // digest fed incrementally — same bytes as prevHash(b) + sigs.mkString("\n")
-        val md = digests.get()
+        val md = Hashing.sha256.get()
         md.reset()
         updateUtf8(md, prevHash(b))
         var i = 0
@@ -121,7 +108,7 @@ object BnodeCanon {
           updateUtf8(md, sigs(i))
           i += 1
         }
-        b -> hex(md.digest())
+        b -> Hashing.hex(md.digest())
       }.toMap
     }
 
@@ -137,7 +124,7 @@ object BnodeCanon {
       var hs = h0
       var round = 0
       var changed = hs.values.toSet.size != bnodes.size
-      while (changed && round < maxRounds) {
+      while (changed && round < MaxRounds) {
         def term(s: String): String = if (s.startsWith("_:")) "#" + hs(s) else s
         val next = hashRound(
           term, t => if (t.objKind == "bnode") "#" + hs(t.objValue) else objKey(t),

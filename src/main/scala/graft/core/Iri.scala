@@ -83,30 +83,41 @@ object Url {
     parseGeneral(input)
   }
 
-  /** Zero-allocation acceptance scan: true ⇔ `fastParse` would accept.
-    * Well-formedness checks (isIri) only need the verdict — building and
-    * discarding the Url (4 substrings + case class) per unique subject IRI
-    * was a measured JFR site.
+  /** One scan of the dominant IRI shape
+    * `scheme://lowerhost/path[?query][#fragment]`: all-lowercase letter
+    * scheme, host limited to `[a-z0-9.-]`, path free of `'.'` (⇒ no dot
+    * segments). There the general parser is provably the identity
+    * normalization. Returns -1 for anything else, else the host's end in
+    * the high 32 bits and the path's end (the first `?` or `#`, or the
+    * length) in the low 32. Allocates nothing. This exists because per-span
+    * subject IRIs are unique, so the isIri memo never hits on them and the
+    * full WHATWG-style parse was the largest engine CPU cluster in JFR.
     */
-  private[core] def fastValid(s: String): Boolean = {
+  private def fastScan(s: String): Long = {
     val n = s.length
-    if (n < 8) return false
-    if (s.charAt(0) <= ' ' || s.charAt(n - 1) <= ' ') return false
+    if (n < 8) return -1 // shortest: "x://h/"-ish; below that let the general path decide
+    if (s.charAt(0) <= ' ' || s.charAt(n - 1) <= ' ') return -1 // trim territory
     var i = 0
     while (i < n && { val c = s.charAt(i); c >= 'a' && c <= 'z' }) i += 1
-    if (i == 0 || i + 3 >= n || s.charAt(i) != ':' || s.charAt(i + 1) != '/' || s.charAt(i + 2) != '/') return false
+    if (i == 0 || i + 3 >= n || s.charAt(i) != ':' || s.charAt(i + 1) != '/' || s.charAt(i + 2) != '/') return -1
     val hostStart = i + 3
     var j = hostStart
     while (j < n && { val c = s.charAt(j); (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '.' || c == '-' }) j += 1
-    if (j == hostStart) return false
-    if (j < n) { val c = s.charAt(j); if (c != '/' && c != '?' && c != '#') return false }
+    if (j == hostStart) return -1 // empty/unusual host
+    if (j < n) { val c = s.charAt(j); if (c != '/' && c != '?' && c != '#') return -1 }
     var k = j
     while (k < n && { val c = s.charAt(k); c != '?' && c != '#' }) {
-      if (s.charAt(k) == '.') return false
+      if (s.charAt(k) == '.') return -1
       k += 1
     }
-    true
+    (j.toLong << 32) | k
   }
+
+  /** True ⇔ `fastParse` would accept. Well-formedness checks (isIri) only
+    * need the verdict — building and discarding the Url (4 substrings +
+    * case class) per unique subject IRI was a measured JFR site.
+    */
+  private[core] def fastValid(s: String): Boolean = fastScan(s) >= 0
 
   /** The full parse path, bypassing fastParse — exposed so tests can assert
     * fastParse ≡ parseGeneral on every input shape.
@@ -122,48 +133,28 @@ object Url {
     parseAfterScheme(scheme, rest)
   }
 
-  /** Conservative single-scan parse for the dominant IRI shape
-    * `scheme://lowerhost/path[?query][#fragment]` — all-lowercase letter
-    * scheme, host limited to `[a-z0-9.-]`, path free of `'.'` (⇒ no dot
-    * segments) — where the general parser is provably the identity
-    * normalization. Returns null for anything else; the caller falls back.
-    * Every accepted input yields field-for-field what `parseAfterScheme`
-    * would (PropertySpec cross-checks). This exists because per-span
-    * subject IRIs are unique, so the isIri memo never hits on them and the
-    * full WHATWG-style parse was the largest engine CPU cluster in JFR.
+  /** The Url of an input [[fastScan]] accepts, null for any other; the
+    * caller falls back. Every accepted input yields field-for-field what
+    * `parseAfterScheme` would (PropertySpec cross-checks).
     */
   private def fastParse(s: String): Url = {
+    val pos = fastScan(s)
+    if (pos < 0) return null
+    val hostEnd = (pos >>> 32).toInt
+    val pathEnd = pos.toInt
+    val schemeEnd = s.indexOf(':')
     val n = s.length
-    if (n < 8) return null // shortest: "x://h/"-ish; below that let the general path decide
-    if (s.charAt(0) <= ' ' || s.charAt(n - 1) <= ' ') return null // trim territory
-    var i = 0
-    while (i < n && { val c = s.charAt(i); c >= 'a' && c <= 'z' }) i += 1
-    if (i == 0 || i + 3 >= n || s.charAt(i) != ':' || s.charAt(i + 1) != '/' || s.charAt(i + 2) != '/') return null
-    val scheme = s.substring(0, i)
-    val hostStart = i + 3
-    var j = hostStart
-    while (j < n && { val c = s.charAt(j); (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '.' || c == '-' }) j += 1
-    if (j == hostStart) return null // empty/unusual host
-    val afterHost = if (j < n) s.charAt(j) else '\u0000'
-    if (j < n && afterHost != '/' && afterHost != '?' && afterHost != '#') return null
-    val authority = s.substring(hostStart, j)
-    // path: from j (must start '/') up to first '?' or '#'; no '.' allowed
-    var k = j
-    while (k < n && { val c = s.charAt(k); c != '?' && c != '#' }) {
-      if (s.charAt(k) == '.') return null
-      k += 1
-    }
-    val path = if (k == j) "/" else s.substring(j, k)
     var query: String = null
     var fragment: String = null
-    if (k < n && s.charAt(k) == '?') {
-      var q = k + 1
-      while (q < n && s.charAt(q) != '#') q += 1
-      query = s.substring(k + 1, q)
-      k = q
+    var f = pathEnd
+    if (f < n && s.charAt(f) == '?') {
+      f = s.indexOf('#', f + 1)
+      if (f < 0) f = n
+      query = s.substring(pathEnd + 1, f)
     }
-    if (k < n && s.charAt(k) == '#') fragment = s.substring(k + 1)
-    Url(scheme, Some(authority), path, Option(query), Option(fragment))
+    if (f < n) fragment = s.substring(f + 1)
+    Url(s.substring(0, schemeEnd), Some(s.substring(schemeEnd + 3, hostEnd)),
+      if (pathEnd == hostEnd) "/" else s.substring(hostEnd, pathEnd), Option(query), Option(fragment))
   }
 
   private def parseAfterScheme(scheme: String, rest0: String): Option[Url] = {

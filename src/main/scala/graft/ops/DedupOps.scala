@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Hashing
 
 /** Deduplication family for training-data pipelines. Every operator is a
   * shuffle-conscious DataFrame program:
@@ -39,14 +40,6 @@ object DedupOps {
       s => length(s) === k))
   }
 
-  // splitmix64 finalizer — cheap per-shingle seeded hash family
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   /** One-pass JVM minhash over character shingles. A Catalyst
     * `transform`/`array_min` formulation is interpreted (higher-order
     * functions don't codegen) and gets inlined numHashes× per row — measured
@@ -63,7 +56,7 @@ object DedupOps {
       while (c < i + k) { h0 = 31 * h0 + t.charAt(c); c += 1 }
       var j = 0
       while (j < numHashes) {
-        val h = mix64(h0 ^ (j.toLong * 0x9e3779b97f4a7c15L))
+        val h = Hashing.splitmix64(h0 ^ (j.toLong * 0x9e3779b97f4a7c15L))
         if (h < mins(j)) mins(j) = h
         j += 1
       }
@@ -196,7 +189,7 @@ object DedupOps {
           var h = 1125899906842597L
           var c = start
           while (c < i) { h = 31 * h + t.charAt(c); c += 1 }
-          h = mix64(h)
+          h = Hashing.splitmix64(h)
           var b = 0
           while (b < 64) { votes(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1); b += 1 }
         }

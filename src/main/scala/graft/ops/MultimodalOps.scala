@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.core.Hashing
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
   * with typed metadata. The decode step is REAL since round 5: payloads are
@@ -20,13 +21,6 @@ object MultimodalOps {
   final case class MediaMeta(media_ref: String, modality: String, width: Int, height: Int,
       duration_ms: Int, byte_len: Int, feature: Array[Float], error: String)
 
-  private def splitmix(x0: Long): Long = {
-    var z = x0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
   private[ops] def modalityOf(ref: String): String = {
     val h = math.abs(ref.hashCode % 3)
     if (h == 0) "image" else if (h == 1) "audio" else "video"
@@ -38,7 +32,7 @@ object MultimodalOps {
     * Stands in for the object-store fetch (see the object Scaladoc).
     */
   def fetchMedia(mediaRef: String): Array[Byte] = {
-    val h = splitmix(mediaRef.hashCode.toLong)
+    val h = Hashing.splitmix64(mediaRef.hashCode.toLong)
     def pick(shift: Int, mod: Int): Int = (((h >>> shift) % mod).toInt + mod) % mod
     modalityOf(mediaRef) match {
       case "image" =>

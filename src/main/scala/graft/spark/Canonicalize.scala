@@ -1,12 +1,12 @@
 package graft.spark
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.security.MessageDigest
-import java.util.{Arrays, HexFormat}
+import java.util.Arrays
 import scala.collection.mutable
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.core.Hashing
 
 /** A triple row with its blank-node keys, `<doc_id>|<label>` per role (null
   * where the role holds no blank node), and its `scope`, as [[Canonicalize]]
@@ -183,14 +183,16 @@ object Canonicalize {
     shuffled.mapPartitions(rows =>
       Iterator(scopeGraphs(rows.buffered).foldLeft(ScopeCounts.zero(probes))(_ + _.counts(probes))))
 
+  private val PredicateSalt = 32
+
   /** Skew-aware per-predicate profile: two-phase (salted partial → final)
     * aggregation for the rdf:type-style hot predicates (north_rule: skew
     * handled explicitly — a plain groupBy(pred) sends every rdf:type row to
-    * one reducer; the salt spreads it over `salt` reducers first).
+    * one reducer; the salt spreads it over `PredicateSalt` reducers first).
     */
-  def predicateCounts(triples: Dataset[TripleRow], salt: Int = 32): DataFrame = {
+  def predicateCounts(triples: Dataset[TripleRow]): DataFrame = {
     val t = triples.toDF()
-    t.groupBy(col("pred"), pmod(xxhash64(col("subj")), lit(salt)).as("salt"))
+    t.groupBy(col("pred"), pmod(xxhash64(col("subj")), lit(PredicateSalt)).as("salt"))
       .agg(count(lit(1)).as("partial"))
       .groupBy(col("pred"))
       .agg(sum(col("partial")).as("n"))
@@ -254,7 +256,7 @@ private final class ScopeGraph(scope: String, rows: Vector[KeyedTriple]) {
       i += 1
     }
     sigs.map { s =>
-      val md = sha256.get()
+      val md = Hashing.sha256.get()
       md.reset()
       md.update(scopeBytes)
       md.update(0.toByte)
@@ -262,7 +264,7 @@ private final class ScopeGraph(scope: String, rows: Vector[KeyedTriple]) {
         if (j > 0) md.update('\n'.toByte)
         md.update(b)
       }
-      hex.formatHex(md.digest())
+      Hashing.hex(md.digest())
     }
   }
 
@@ -294,9 +296,9 @@ private final class ScopeGraph(scope: String, rows: Vector[KeyedTriple]) {
     (0 until n).groupBy(v => h(v)).foreach { case (hv, members) =>
       val tied = members.size > 1
       members.sortBy(v => keys(v).getBytes(UTF_8))(byteOrder).iterator.zipWithIndex.foreach { case (v, rank) =>
-        val md = sha256.get()
+        val md = Hashing.sha256.get()
         md.reset()
-        label(v) = "_:c" + hex.formatHex(md.digest(
+        label(v) = "_:c" + Hashing.hex(md.digest(
           s"$scope|$hv|${if (tied) rank.toString else ""}".getBytes(UTF_8))).substring(0, 16)
       }
     }
@@ -309,8 +311,6 @@ private final class ScopeGraph(scope: String, rows: Vector[KeyedTriple]) {
 }
 
 private object ScopeGraph {
-  private val sha256 = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("SHA-256"))
-  private val hex = HexFormat.of()
   /** Spark's string order: UTF-8 bytes compared unsigned. */
   private val byteOrder: Ordering[Array[Byte]] = (a, b) => Arrays.compareUnsigned(a, b)
 }

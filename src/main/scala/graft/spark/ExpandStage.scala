@@ -226,15 +226,14 @@ object ExpandStage {
     */
   def run(
       docs: Dataset[Doc],
-      resolvedContexts: Broadcast[Map[String, String]],
-      options: JsonLdOptions = JsonLdOptions()
+      resolvedContexts: Broadcast[Map[String, String]]
   ): Dataset[PipeRow] = {
     val spark = docs.sparkSession
     import spark.implicits._
     val aliases = aliasDictionary
     docs.mapPartitions { it =>
       val loader = RemoteContextPool.loaderFor(resolvedContexts.value)
-      val partitionState = new ApiState(options, loader) // caches amortize across the partition
+      val partitionState = new ApiState(JsonLdOptions(), loader) // caches amortize across the partition
       it.flatMap { doc =>
         val (ts, es) = expandDoc(doc, partitionState, aliases)
         ts.iterator.map(t => PipeRow(t, null)) ++ es.iterator.map(e => PipeRow(null, e))

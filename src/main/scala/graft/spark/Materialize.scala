@@ -28,6 +28,8 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * Resume: completed buckets are read from lineage and skipped (the
   * coarse-grained equivalent of a `left_anti` on completed doc_ids — bucket
   * granularity keeps the resume check O(buckets), not O(docs), at 10^12 docs).
+  * `docs` is read only when no unit is committed: a resume reads the staged
+  * corpus, and only with the bucket count it was staged with.
   *
   * Lineage counts come from the bucket's own writes: `doc_count`,
   * `triple_count` and `error_count` are `Dataset.observe` metrics collected
@@ -51,25 +53,6 @@ object Materialize {
   private[spark] def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Session-stable fingerprint of the input's ANALYZED plan: the plan
-    * string with per-session artifacts stripped (expression ids `#123`,
-    * lambda class ids, object identity hashes), hashed. The plan's
-    * semanticHash is NOT usable here — it differs across spark-submit
-    * sessions for the identical logical input (measured: two submits of the
-    * same 1M-doc job produced two staging dirs), which silently defeats
-    * cross-run staging reuse. Covers source paths/shape without scanning
-    * data; an in-place rewrite of the same source path still escapes it —
-    * use a fresh outDir (run id) for that case.
-    */
-  private[spark] def inputFingerprint(docs: Dataset[Doc]): String = {
-    val normalized = docs.queryExecution.analyzed.toString
-      .replaceAll("#\\d+", "")
-      .replaceAll("\\$\\$Lambda\\$\\d+(/0x[0-9a-fA-F]+)?", "\\$\\$Lambda")
-      .replaceAll("@[0-9a-fA-F]+", "")
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(normalized.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
   }
 
   /** Fails if `outDir` holds `lineage`, the other layout's lineage table. */
@@ -165,6 +148,12 @@ object Materialize {
     * (partition-local), deduplicated and written; then its lineage row
     * commits it.
     *
+    * An `outDir` holds one staged run. While `lineage/` has no row, the
+    * call stages `docs` to `staging_b<buckets>/` (`Overwrite`). Once it has
+    * one, the call is a resume, with `resume = false` too: it reads the
+    * staged corpus, never the rows of `docs`, and fails before writing
+    * anything when no corpus was staged with `buckets` buckets.
+    *
     * Buckets overlap. A window of P pending buckets runs on a thread pool
     * that this call creates and shuts down; P is [[windowSize]], two per
     * core and at most [[MaxWindow]]. Lineage rows are appended by the
@@ -199,28 +188,22 @@ object Materialize {
       resume: Boolean = true,
       failAtBucket: Option[Int] = None
   ): RunReport = {
+    require(buckets >= 1, s"buckets must be at least 1, got $buckets")
     val spark = docs.sparkSession
     import spark.implicits._
     refuseOtherLayout(spark, outDir, "stream_lineage")
     val (completed, attempts) = lineageState(spark, s"$outDir/lineage")
     val done = if (resume) completed else Set.empty[Int]
-    val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
-
-    // Stage the bucketed corpus once, partitioned BY bucket: per-bucket reads
-    // below are partition-pruned scans (only bucket=N files touched), and a
-    // resumed run re-reads staging instead of recomputing the bucketing.
-    // (An earlier formulation used .cache() — at 10^12 docs that pins the
-    // whole corpus in executor memory/disk and dies with any executor; a
-    // staged table is the durable equivalent. Bucket count AND an input
-    // fingerprint are part of the path, so a re-run with a different bucket
-    // count or a different input never silently resolves to stale staging.)
-    val stagingDir = s"$outDir/staging_b${buckets}_${inputFingerprint(docs)}"
-    if (!pathExists(spark, s"$stagingDir/_SUCCESS")) {
+    val stagingDir = s"$outDir/staging_b$buckets"
+    if (attempts.isEmpty)
       docs.withColumn("bucket", bucketOf(buckets))
         .repartition(col("bucket"))
         .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(stagingDir)
-    }
+    else if (!pathExists(spark, s"$stagingDir/_SUCCESS"))
+      throw new IllegalArgumentException(s"$outDir holds a run staged with another bucket count than " +
+        s"$buckets, or its staging is gone: resume it with its own bucket count, or use a fresh outDir")
     val staged = spark.read.schema(stagedSchema(docs.schema)).parquet(stagingDir)
+    val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
 
     def work(b: Int): PartitionLineage =
       writeUnit(staged.filter(col("bucket") === b).drop("bucket").as[Doc], ctxB, outDir, "bucket", b,

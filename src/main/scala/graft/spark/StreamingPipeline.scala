@@ -23,15 +23,14 @@ object StreamingPipeline {
     */
   def expandStream(
       docs: Dataset[TimedDoc],
-      resolvedContexts: Broadcast[Map[String, String]],
-      options: JsonLdOptions = JsonLdOptions()
+      resolvedContexts: Broadcast[Map[String, String]]
   ): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val aliases = ExpandStage.aliasDictionary
     docs.mapPartitions { it =>
       val loader = RemoteContextPool.loaderFor(resolvedContexts.value)
-      val state = new graft.core.ApiState(options, loader)
+      val state = new graft.core.ApiState(JsonLdOptions(), loader)
       it.flatMap { td =>
         val (ts, _) = ExpandStage.expandDoc(td.doc, state, aliases)
         ts.iterator.map(t => (td.ingest_ts, t))

@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.core.Hashing.splitmix64
 
 /** Deterministic interleaved-docs corpus generator (FIXTURES.md §1): seed 42,
   * no external data, generated distributed via spark.range (no driver loop —
@@ -14,17 +15,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 object SyntheticDocs {
   val Seed = 42L
 
-  /** splitmix64 — stable across JVMs, cheap, seedable per doc index. */
-  private def mix(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
   private final class Rng(seed: Long) {
     private var s = seed
-    def nextLong(): Long = { s = mix(s); s }
+    def nextLong(): Long = { s = splitmix64(s); s }
     def nextInt(bound: Int): Int = (Math.floorMod(nextLong(), bound.toLong)).toInt
     def pick[T](xs: IndexedSeq[T]): T = xs(nextInt(xs.length))
   }
@@ -106,7 +99,7 @@ object SyntheticDocs {
   }
 
   def generateDoc(idx: Long): Doc = {
-    val r = new Rng(mix(Seed ^ idx))
+    val r = new Rng(splitmix64(Seed ^ idx))
     val nSpans = 1 + r.nextInt(8)
     val templates = jsonldTemplates
     var offset = 0
@@ -118,7 +111,7 @@ object SyntheticDocs {
         case k if k < 9 => // 50% jsonld
           Span("jsonld", templates(r.nextInt(templates.length))(r, idx, s), null, offset)
         case _ => // 10% media
-          Span("media", null, s"media://bucket/${mix(idx * 31 + s).toHexString}", offset)
+          Span("media", null, s"media://bucket/${splitmix64(idx * 31 + s).toHexString}", offset)
       }
     }
     Doc(docId(idx), spans)
@@ -149,7 +142,7 @@ object SyntheticDocs {
   }
 
   def deepBnodeDoc(idx: Long): Doc = {
-    val r = new Rng(mix(Seed ^ (idx + 0x5eedL)))
+    val r = new Rng(splitmix64(Seed ^ (idx + 0x5eedL)))
     val nSpans = 1 + r.nextInt(3)
     var offset = 0
     val spans = (0 until nSpans).map { s =>

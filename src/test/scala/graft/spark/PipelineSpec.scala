@@ -163,6 +163,41 @@ class PipelineSpec extends AnyFunSuite {
     assert(attempts.length == 4 && attempts.forall(_.getInt(1) == 2))
   }
 
+  test("a resume with another bucket count fails, leaving lineage and staging as they were") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft-rebucket").toString
+    val docs = SyntheticDocs.generate(spark, 400, 4)
+    intercept[RuntimeException] { Materialize.run(docs, out, buckets = 16, failAtBucket = Some(1)) }
+    def lineage() = spark.read.parquet(s"$out/lineage").as[PartitionLineage].collect().sortBy(_.bucket).toSeq
+    val before = lineage()
+    assert(before.map(_.bucket) == Seq(0))
+    val e = intercept[IllegalArgumentException] { Materialize.run(docs, out, buckets = 2) }
+    assert(e.getMessage.contains(out) && e.getMessage.contains("another bucket count"), e.getMessage)
+    assert(lineage() == before)
+    assert(!Materialize.pathExists(spark, s"$out/staging_b2"))
+  }
+
+  test("a resume reads the staged corpus, not the docs it is given") {
+    val out = java.nio.file.Files.createTempDirectory("graft-restage").toString
+    val fresh = java.nio.file.Files.createTempDirectory("graft-restage-full").toString
+    val all = SyntheticDocs.generate(spark, 400, 4)
+    val first = all.filter(col("doc_id") < "doc-000000000200")
+    val other = all.filter(col("doc_id") >= "doc-000000000200")
+    intercept[RuntimeException] { Materialize.run(first, out, buckets = 4, failAtBucket = Some(1)) }
+    Materialize.run(other, out, buckets = 4)
+    Materialize.run(first, fresh, buckets = 4)
+    def graph(dir: String) = Materialize.finalizeGraph(spark, dir).collect().map(_.toString).sorted.toSeq
+    assert(graph(out) == graph(fresh))
+  }
+
+  test("Materialize refuses fewer than one bucket before writing anything") {
+    val out = java.nio.file.Files.createTempDirectory("graft-nobuckets").toString
+    val docs = SyntheticDocs.generate(spark, 20, 1)
+    for (buckets <- Seq(0, -1))
+      intercept[IllegalArgumentException] { Materialize.run(docs, out, buckets = buckets) }
+    assert(new java.io.File(out).list().isEmpty)
+  }
+
   test("the graph's support counts the docs holding a triple and first_doc is the least, at any bucket count") {
     import spark.implicits._
     val docs = (0 until 10).map(i => Doc(f"d$i%02d",
@@ -288,7 +323,7 @@ class PipelineSpec extends AnyFunSuite {
     val graph = Materialize.finalizeGraph(spark, out)
     def inferred(dir: String) = spark.read.parquet(s"$out/$dir").schema
     def given(schema: StructType, dir: String) = spark.read.schema(schema).parquet(s"$out/$dir").schema
-    val staging = new java.io.File(out).list().filter(_.startsWith("staging_b2_")).toSeq
+    val staging = new java.io.File(out).list().filter(_.startsWith("staging_b2")).toSeq
     assert(staging.size == 1, staging)
     assert(given(Materialize.stagedSchema(docs.schema), staging.head) == inferred(staging.head))
     assert(given(Materialize.lineageSchema, "lineage") == inferred("lineage"))
