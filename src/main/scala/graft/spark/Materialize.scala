@@ -2,6 +2,7 @@ package graft.spark
 
 import java.util.concurrent.{Callable, ExecutionException, Executors, Future => JFuture}
 import scala.collection.mutable
+import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,18 +19,20 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   *   staging_b{K}/bucket=N/  bucketed source docs (written once, partition-pruned per-bucket reads)
   *   triples/bucket=N/   triples of bucket N, one row per (triple, doc)
   *   errors/bucket=N/    expansion error channel
-  *   lineage/            one row per completed bucket (status, counts, attempt)
+  *   lineage/            one row per committed bucket (counts, wall time)
   * A stream's layout:
   *   errors|triples/batch=N/  the same two channels of micro-batch N
   *   stream_lineage/     one row per completed micro-batch, `bucket` = batch id
   *
   * A bucket and a micro-batch are both units of one writer, [[writeUnit]].
+  * A unit is committed exactly when its lineage row exists.
   *
-  * Resume: completed buckets are read from lineage and skipped (the
+  * Resume: committed buckets are read from lineage and skipped (the
   * coarse-grained equivalent of a `left_anti` on completed doc_ids — bucket
   * granularity keeps the resume check O(buckets), not O(docs), at 10^12 docs).
   * `docs` is read only when no unit is committed: a resume reads the staged
-  * corpus, and only with the bucket count it was staged with.
+  * corpus, and only with the bucket count it was staged with. A fresh run
+  * (no lineage row) first deletes the uncommitted `triples/` and `errors/`.
   *
   * Lineage counts come from the bucket's own writes: `doc_count`,
   * `triple_count` and `error_count` are `Dataset.observe` metrics collected
@@ -51,7 +54,7 @@ object Materialize {
     * which would rewrite staging (and ignore lineage) every run.
     */
   private[spark] def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -61,19 +64,12 @@ object Materialize {
       throw new IllegalArgumentException(s"$outDir already holds $lineage/: a bucketed run (lineage/) " +
         "and a stream (stream_lineage/) need separate outDirs")
 
-  /** Done units and the highest attempt per unit, from one collected read
-    * of the lineage table at `path` (one row per unit commit, so O(units)).
+  /** Ids of the committed units, from one collected read of the `bucket`
+    * column of the lineage table at `path` (one row per commit, so O(units)).
     */
-  private[spark] def lineageState(spark: SparkSession, path: String): (Set[Int], Map[Int, Int]) = {
-    if (!pathExists(spark, path)) (Set.empty, Map.empty)
-    else {
-      import spark.implicits._
-      val rows = spark.read.schema(lineageSchema).parquet(path)
-        .select("bucket", "status", "attempt").as[(Int, String, Int)].collect()
-      (rows.collect { case (b, "done", _) => b }.toSet,
-        rows.groupMapReduce(_._1)(_._3)(math.max))
-    }
-  }
+  private[spark] def committedUnits(spark: SparkSession, path: String): Set[Int] =
+    if (!pathExists(spark, path)) Set.empty
+    else spark.read.schema(lineageSchema).parquet(path).select("bucket").collect().map(_.getInt(0)).toSet
 
   /** Schemas of this object's own tables. Reading with them skips the
     * footer-inference job each schema-less `spark.read.parquet` runs.
@@ -114,7 +110,6 @@ object Materialize {
       outDir: String,
       kind: String,
       id: Int,
-      attempt: Int,
       betweenWrites: () => Unit = () => ()
   ): PartitionLineage = {
     val t0 = System.nanoTime()
@@ -140,8 +135,7 @@ object Materialize {
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/triples/$kind=$id")
     } finally rows.unpersist()
     def n(o: Observation) = o.get("n").asInstanceOf[Long]
-    PartitionLineage(id, n(docsSeen), n(triplesWritten), n(errorsWritten), "done", attempt,
-      (System.nanoTime() - t0) / 1000000)
+    PartitionLineage(id, n(docsSeen), n(triplesWritten), n(errorsWritten), (System.nanoTime() - t0) / 1000000)
   }
 
   /** Run the full pipeline over `docs`. Each pending bucket is expanded
@@ -149,10 +143,11 @@ object Materialize {
     * commits it.
     *
     * An `outDir` holds one staged run. While `lineage/` has no row, the
-    * call stages `docs` to `staging_b<buckets>/` (`Overwrite`). Once it has
-    * one, the call is a resume, with `resume = false` too: it reads the
-    * staged corpus, never the rows of `docs`, and fails before writing
-    * anything when no corpus was staged with `buckets` buckets.
+    * call deletes `triples/` and `errors/`, whose units no row commits, and
+    * stages `docs` to `staging_b<buckets>/` (`Overwrite`). Once it has one,
+    * the call is a resume: it skips the committed buckets, reads the staged
+    * corpus, never the rows of `docs`, and fails before writing anything
+    * when no corpus was staged with `buckets` buckets.
     *
     * Buckets overlap. A window of P pending buckets runs on a thread pool
     * that this call creates and shuts down; P is [[windowSize]], two per
@@ -185,21 +180,21 @@ object Materialize {
       docs: Dataset[Doc],
       outDir: String,
       buckets: Int = 8,
-      resume: Boolean = true,
       failAtBucket: Option[Int] = None
   ): RunReport = {
     require(buckets >= 1, s"buckets must be at least 1, got $buckets")
     val spark = docs.sparkSession
     import spark.implicits._
     refuseOtherLayout(spark, outDir, "stream_lineage")
-    val (completed, attempts) = lineageState(spark, s"$outDir/lineage")
-    val done = if (resume) completed else Set.empty[Int]
+    val done = committedUnits(spark, s"$outDir/lineage")
     val stagingDir = s"$outDir/staging_b$buckets"
-    if (attempts.isEmpty)
+    if (done.isEmpty) {
+      val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Seq("triples", "errors").foreach(channel => fs.delete(new Path(s"$outDir/$channel"), true))
       docs.withColumn("bucket", bucketOf(buckets))
         .repartition(col("bucket"))
         .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(stagingDir)
-    else if (!pathExists(spark, s"$stagingDir/_SUCCESS"))
+    } else if (!pathExists(spark, s"$stagingDir/_SUCCESS"))
       throw new IllegalArgumentException(s"$outDir holds a run staged with another bucket count than " +
         s"$buckets, or its staging is gone: resume it with its own bucket count, or use a fresh outDir")
     val staged = spark.read.schema(stagedSchema(docs.schema)).parquet(stagingDir)
@@ -207,7 +202,6 @@ object Materialize {
 
     def work(b: Int): PartitionLineage =
       writeUnit(staged.filter(col("bucket") === b).drop("bucket").as[Doc], ctxB, outDir, "bucket", b,
-        attempts.getOrElse(b, 0) + 1,
         () => if (failAtBucket.contains(b)) throw new RuntimeException(s"injected failure at bucket $b"))
 
     val todo = (0 until buckets).filterNot(done)
@@ -248,7 +242,8 @@ object Materialize {
     * high cardinality, so the rdf:type hot predicate does NOT skew this
     * shuffle; AQE coalesces output partitions. Units hold one row per
     * (triple, doc), so `support` counts a triple's docs and `first_doc` is
-    * the least of them, whatever the bucket count.
+    * the least of them, whatever the bucket count. It reads every unit under
+    * `triples/`, committed or not, so it belongs after [[run]] has returned.
     */
   def finalizeGraph(spark: SparkSession, outDir: String): DataFrame = {
     val all = spark.read.schema(triplesSchema).parquet(s"$outDir/triples")

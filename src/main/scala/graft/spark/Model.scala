@@ -28,7 +28,5 @@ final case class PartitionLineage(
     doc_count: Long,
     triple_count: Long,
     error_count: Long,
-    status: String,
-    attempt: Int,
     wall_ms: Long
 )

@@ -107,7 +107,10 @@ object StreamingPipeline {
     * without duplicating batches: the committed ids are read once, when
     * this call starts the query, and a batch whose id is among them is
     * skipped. A batch written but not committed is redone; its writes are
-    * `Overwrite`.
+    * `Overwrite`. The gate holds only while the checkpoint makes the source
+    * replay the same docs under an id, so an `outDir` holding
+    * `stream_lineage/` but no `_checkpoints/` is refused with an
+    * `IllegalArgumentException` before the query starts.
     */
   def materializeStream(
       docs: Dataset[TimedDoc],
@@ -118,14 +121,16 @@ object StreamingPipeline {
     import spark.implicits._
     Materialize.refuseOtherLayout(spark, outDir, "lineage")
     val lineagePath = s"$outDir/stream_lineage"
-    val (committed, _) = Materialize.lineageState(spark, lineagePath)
+    if (Materialize.pathExists(spark, lineagePath) && !Materialize.pathExists(spark, s"$outDir/_checkpoints"))
+      throw new IllegalArgumentException(s"$outDir holds stream_lineage/ but no _checkpoints/: its source " +
+        "would replay committed batch ids with other docs; use a fresh outDir")
+    val committed = Materialize.committedUnits(spark, lineagePath)
     docs.writeStream
       .option("checkpointLocation", s"$outDir/_checkpoints")
       .foreachBatch { (batch: Dataset[TimedDoc], batchId: Long) =>
         val id = Math.toIntExact(batchId)
         if (!committed(id)) {
-          val row = Materialize.writeUnit(batch.select(col("doc.*")).as[Doc], resolvedContexts, outDir,
-            "batch", id, attempt = 1)
+          val row = Materialize.writeUnit(batch.select(col("doc.*")).as[Doc], resolvedContexts, outDir, "batch", id)
           Seq(row).toDS().write.mode(SaveMode.Append).parquet(lineagePath)
         }
       }

@@ -135,9 +135,9 @@ class PipelineSpec extends AnyFunSuite {
     // rdf:type hot predicate present (skew knob)
     val preds = Canonicalize.predicateCounts(spark.read.parquet(s"$out/triples").as[TripleRow]).collect()
     assert(preds.exists(_.getString(0) == "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"))
-    // lineage: one row per bucket, all done
+    // lineage: one row per bucket
     val lineage = spark.read.parquet(s"$out/lineage")
-    assert(lineage.filter(col("status") === "done").count() == 4)
+    assert(lineage.count() == 4)
   }
 
   test("resume skips completed buckets and reaches the same graph") {
@@ -152,15 +152,43 @@ class PipelineSpec extends AnyFunSuite {
     val g1 = Materialize.finalizeGraph(spark, out1).orderBy("subj", "pred", "obj_value").collect()
     val g2 = Materialize.finalizeGraph(spark, out2).orderBy("subj", "pred", "obj_value").collect()
     assert(g1.toSeq == g2.toSeq)
-    // attempts: resumed buckets recorded attempt 1 (first completion)
-    val lineage = spark.read.parquet(s"$out1/lineage")
-    assert(lineage.count() == 4)
-    assert(lineage.filter(col("attempt") =!= 1).isEmpty)
-    // resume = false reprocesses done buckets but still counts their attempts
-    val rerun = Materialize.run(docs, out1, buckets = 4, resume = false)
-    assert(rerun.skipped == 0 && rerun.processed == 4)
-    val attempts = spark.read.parquet(s"$out1/lineage").groupBy("bucket").agg(max("attempt")).collect()
-    assert(attempts.length == 4 && attempts.forall(_.getInt(1) == 2))
+    assert(spark.read.parquet(s"$out1/lineage").count() == 4)
+  }
+
+  test("a resume reads lineage rows written with the older status and attempt columns") {
+    val out = java.nio.file.Files.createTempDirectory("graft-oldlineage").toString
+    val fresh = java.nio.file.Files.createTempDirectory("graft-oldlineage-full").toString
+    val docs = SyntheticDocs.generate(spark, 200, 4)
+    intercept[RuntimeException] { Materialize.run(docs, out, buckets = 4, failAtBucket = Some(2)) }
+    // rewrite the two committed rows in the older seven-column layout
+    val rows = spark.read.parquet(s"$out/lineage").collect().toSeq
+    spark.createDataFrame(spark.sparkContext.parallelize(rows), Materialize.lineageSchema)
+      .select(col("bucket"), col("doc_count"), col("triple_count"), col("error_count"),
+        lit("done").as("status"), lit(1).as("attempt"), col("wall_ms"))
+      .write.mode("overwrite").parquet(s"$out/lineage")
+    assert(spark.read.parquet(s"$out/lineage").columns.toSeq.contains("attempt"))
+    val resumed = Materialize.run(docs, out, buckets = 4)
+    assert((resumed.skipped, resumed.processed) == (2, 2))
+    Materialize.run(docs, fresh, buckets = 4)
+    def graph(dir: String) = Materialize.finalizeGraph(spark, dir).collect().map(_.toString).sorted.toSeq
+    assert(graph(out) == graph(fresh))
+  }
+
+  test("a fresh run clears the triples and errors an uncommitted run left behind") {
+    val out = java.nio.file.Files.createTempDirectory("graft-leftover").toString
+    val fresh = java.nio.file.Files.createTempDirectory("graft-leftover-full").toString
+    val docs = SyntheticDocs.generate(spark, 400, 4)
+    intercept[RuntimeException] { Materialize.run(docs, out, buckets = 4, failAtBucket = Some(0)) }
+    assert(!Materialize.pathExists(spark, s"$out/lineage"))
+    assert(Materialize.pathExists(spark, s"$out/triples/bucket=3"))
+    Materialize.run(docs, out, buckets = 2)
+    Materialize.run(docs, fresh, buckets = 2)
+    def graph(dir: String) = Materialize.finalizeGraph(spark, dir)
+    def support(dir: String) = graph(dir).agg(sum("support")).head().getLong(0)
+    assert(support(out) == support(fresh))
+    assert(graph(out).collect().map(_.toString).sorted.toSeq == graph(fresh).collect().map(_.toString).sorted.toSeq)
+    for (channel <- Seq("triples", "errors"); b <- Seq(2, 3))
+      assert(!Materialize.pathExists(spark, s"$out/$channel/bucket=$b"), s"$channel/bucket=$b")
   }
 
   test("a resume with another bucket count fails, leaving lineage and staging as they were") {
@@ -269,7 +297,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(report.processed == 8)
     val lineage = spark.read.parquet(s"$out/lineage").as[PartitionLineage].collect()
     assert(lineage.map(_.bucket).sorted.toSeq == (0 until 8))
-    assert(lineage.forall(_.status == "done"))
     assert(lineage.map(_.doc_count).sum == 3)
     val empty = lineage.filter(_.doc_count == 0)
     assert(empty.length >= 5)

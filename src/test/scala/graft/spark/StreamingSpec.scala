@@ -99,13 +99,18 @@ class StreamingSpec extends AnyFunSuite {
 
   private val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:10")
 
-  /** One materializeStream query on `outDir`: each element of `batches` is
-    * added as one micro-batch and processed before the next.
-    */
-  private def materialize(outDir: String, batches: Seq[Seq[Doc]]): Unit = {
+  private def newInput(): MemoryStream[StreamingPipeline.TimedDoc] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[StreamingPipeline.TimedDoc]
+    MemoryStream[StreamingPipeline.TimedDoc]
+  }
+
+  /** One materializeStream query on `outDir` reading `input`: each element
+    * of `batches` is added as one micro-batch and processed before the
+    * next. A restart passes the source of the query it restarts.
+    */
+  private def materialize(outDir: String, batches: Seq[Seq[Doc]],
+      input: MemoryStream[StreamingPipeline.TimedDoc] = newInput()): Unit = {
     val ctxB = spark.sparkContext.broadcast(RemoteContextPool.pool)
     val q = StreamingPipeline.materializeStream(input.toDS(), ctxB, outDir)
     try batches.foreach { docs =>
@@ -137,19 +142,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(first.map(_.bucket) == Seq(0, 1))
     assert(first.map(_.triple_count).sum == written)
     assert(first.map(_.doc_count).sum == 21L)
-    assert(first.forall(l => l.status == "done" && l.attempt == 1))
     val before = Seq(triples(0), triples(1))
-    // a restart without the streaming checkpoint replays batch ids 0 and 1
-    // (here with other docs): both are already committed, so they are
-    // skipped and their triples stay as they were; batch 2 is new and commits
+    // a restart without the streaming checkpoint would replay batch ids 0
+    // and 1 with other docs, which the gate would drop: it is refused
+    // before anything is written
     rm(new java.io.File(s"$outDir/_checkpoints"))
-    materialize(outDir, Seq(docs(200L), docs(201L), docs(100L)))
+    val e = intercept[IllegalArgumentException] {
+      materialize(outDir, Seq(docs(200L), docs(201L), docs(100L)))
+    }
+    assert(e.getMessage.contains(outDir), e.getMessage)
     assert(Seq(triples(0), triples(1)) == before)
-    val after = lineage(outDir)
-    assert(after.map(_.bucket) == Seq(0, 1, 2))
-    assert(after.take(2) == first)
-    assert(after(2).doc_count == 1L && after(2).triple_count > 0)
-    assert(spark.read.parquet(s"$outDir/triples").count() == written + after(2).triple_count)
+    assert(lineage(outDir) == first)
+    assert(spark.read.parquet(s"$outDir/triples").count() == written)
+  }
+
+  test("materializeStream skips a replayed batch whose lineage row exists") {
+    val outDir = java.nio.file.Files.createTempDirectory("graft-stream-replay").toString
+    val input = newInput()
+    materialize(outDir, Seq(docs(0L until 5L: _*), docs(5L, 6L)), input)
+    val first = lineage(outDir)
+    assert(first.map(_.bucket) == Seq(0, 1))
+    // a crash after batch 1's lineage commit but before the checkpoint's
+    // commit: the restart replays batch 1 with the same docs, and the gate
+    // skips it, so no second row commits it
+    val commit = new java.io.File(s"$outDir/_checkpoints/commits/1")
+    assert(commit.delete())
+    new java.io.File(s"$outDir/_checkpoints/commits/.1.crc").delete()
+    val q = StreamingPipeline.materializeStream(input.toDS(), spark.sparkContext.broadcast(RemoteContextPool.pool),
+      outDir)
+    try q.processAllAvailable() finally q.stop()
+    assert(commit.exists(), "batch 1 was not replayed")
+    assert(lineage(outDir) == first)
   }
 
   test("materializeStream reads stream_lineage once per call, not once per batch") {
@@ -168,9 +191,10 @@ class StreamingSpec extends AnyFunSuite {
         }) scans.incrementAndGet()
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    val input = newInput()
     def scansOf(batches: Seq[Seq[Doc]]): Int = {
       scans.set(0)
-      materialize(outDir, batches)
+      materialize(outDir, batches, input)
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
       scans.get()
     }
@@ -178,12 +202,11 @@ class StreamingSpec extends AnyFunSuite {
     try {
       // a fresh outDir has no lineage table to read
       assert(scansOf(Seq(docs(1L), docs(2L), docs(3L))) == 0)
-      // a restart reads it once, however many batches follow: ids 0-2 are
-      // skipped, 3 and 4 commit
-      rm(new java.io.File(s"$outDir/_checkpoints"))
+      // a restart from the checkpoint reads it once, however many batches
+      // follow: ids 3-7 commit
       assert(scansOf(Seq(docs(4L), docs(5L), docs(6L), docs(7L), docs(8L))) == 1)
     } finally spark.listenerManager.unregister(listener)
-    assert(lineage(outDir).map(_.bucket) == (0 to 4))
+    assert(lineage(outDir).map(_.bucket) == (0 to 7))
     // outDir deleted and recreated in the same JVM: no committed id
     // outlives the directory, so the new run's batch 0 commits
     rm(new java.io.File(outDir))
