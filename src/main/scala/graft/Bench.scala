@@ -20,21 +20,23 @@ import graft.spark.{ExpandStage, RemoteContextPool, SyntheticDocs}
   *     clean, 8 ran, or the scaling deadline kills both probe process trees,
   *     which ends every blocked read.
   *  2. Headline: the [[Headline]] queries at `SPARK_GRAFT_SF_DIR` on
-  *     `local[cpus]`, retried once when its own window reads degraded.
-  *  3. Pipeline triples/s; engine-only ceiling, [[EngineProbe]] 1×k vs 4×k threads.
+  *     `local[cpus]`, each timed by [[Profile.time]] (its build plus a `noop`
+  *     write of every row), retried once when its own window reads degraded.
+  *  3. Pipeline triples/s; after the session stops, the engine-only ceiling
+  *     in this JVM, [[EngineProbe.run]] on k vs 4k threads ([[engineLegs]]).
   * Memory, every JVM alive at once: sbt, this JVM (`SPARK_DRIVER_MEM`), 2
   * submit drivers of [[HeapMbPerCore]] MiB and 5 pre-touched executors of
   * HeapMbPerCore·k MiB: with k = 1 and a 4 GiB driver, 9.25 GiB of heap.
   * One budget bounds the run: [[Budget]] seconds from the sbt launch, which
   * the driver's kill clock times ([[preMainOverheadSec]]). Scaling ends
   * [[TailSec]] before it; the headline retry and the engine legs run only if
-  * they fit, and the engine legs are killed at the budget.
+  * they fit.
   */
 object Bench {
   val Budget = 560.0
-  /** Warmup + headline with its retry + pipeline + engine legs: 120-190 s on 4 cores. */
+  /** Warmup + headline with its retry + pipeline + engine legs: 120-190 s on 4 cores (53-64 s, no retry, fast window). */
   val TailSec = 200.0
-  /** The engine legs, forks included, with margin: ~30 s on 4 cores. */
+  /** The engine legs with margin: under 14 s on 4 cores, pipeline included. */
   val EngineSec = 60.0
   /** Docs per rep per executor core: the 4N leg runs ≥ 5 s, so fixed job
     * overhead (scheduling, broadcast, stage setup: 0.3-0.6 s) stays small. */
@@ -55,7 +57,6 @@ object Bench {
     "e01_knn_bruteforce", "e02_ann_lsh", "e04_ann_ivf", "j01_expand_triples", "j02_graph_pipeline")
   private val Jar = "target/scala-2.13/jsonldrsspark_2.13-0.1.0.jar"
   private val RepRe = """.*\[cluster-probe\] rep=\d+ .* sec=([0-9.]+) .*steal=([0-9.]+|NaN) execs=(\d+).*""".r
-  private val SecRe = """.*\[engine-probe\].* sec=([0-9.]+).*""".r
 
   /** A scaling or hardware ratio can only be trusted inside (0.15, 1.05]:
     * 4 busy units cannot beat 4× one, and below 0.15 one leg stalled. */
@@ -166,10 +167,8 @@ object Bench {
     def kill(): Unit = { proc.descendants().forEach(h => { h.destroyForcibly(); () }); proc.destroyForcibly(); () }
   }
 
+  private def secs(body: => Any): Double = { val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9 }
   private def daemon(body: => Unit): Unit = { val t = new Thread(() => body); t.setDaemon(true); t.start() }
-  /** The single deadline: kill `ps` with their process trees after `sec`. */
-  private def killAfter(sec: Double, ps: Seq[Proc]): Unit =
-    daemon { Thread.sleep(math.max(0L, (sec * 1000).toLong)); ps.foreach(_.kill()) }
 
   /** The Spark distribution whose jars/ build.sbt compiles against. */
   private val SparkInstall = Paths.get("/opt/spark")
@@ -203,9 +202,8 @@ object Bench {
   }
 
   /** Fixed total work, string building on `threads` threads, no Spark; seconds. */
-  private def hwRun(threads: Int, units: Long): Double = {
+  private def hwRun(threads: Int, units: Long): Double = secs {
     val (ctr, sink) = (new AtomicLong(units), new AtomicLong())
-    val t0 = System.nanoTime()
     val ts = (1 to threads).map(_ => new Thread(() => while (ctr.getAndDecrement() > 0) {
       val sb = new java.lang.StringBuilder
       var i = 0
@@ -213,28 +211,28 @@ object Bench {
       sink.addAndGet(sb.toString.hashCode)
     }))
     ts.foreach(_.start()); ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
   }
 
-  /** The hardware's k → 4k thread scaling in this window, the ceiling no
-    * same-host N→4N run can beat: the median of 3 pairs, since a pair whose
-    * legs straddle a window flip reads garbage (0.12 and 1.26 were seen). */
-  private def hwProbe(k: Int): Double =
-    median(Seq.fill(3)(hwRun(k, HwUnitsPerCore * k) / hwRun(4 * k, HwUnitsPerCore * k) / 4.0))
+  /** (k-thread, 4k-thread) seconds of `leg`, from the median-ratio one of 3
+    * pairs, since a pair whose legs straddle a window flip reads garbage
+    * (0.12 and 1.26 were seen). */
+  private def medianPair(k: Int)(leg: Int => Double): (Double, Double) =
+    Seq.fill(3)((leg(k), leg(4 * k))).sortBy { case (n, f) => n / f }.apply(1)
 
-  /** One engine-ceiling leg: `procs` [[EngineProbe]] JVMs of k threads share
-    * EngineDocsPerCore·k docs, released together; the slowest one's seconds. */
-  private def engineLeg(procs: Int, k: Int, secLeft: Double): Double = try {
-    val chunk = EngineDocsPerCore * k / procs
-    val heap = s"${HeapMbPerCore * k}m"
-    val ps = (0 until procs).map(i => new Proc(s"engine_probe_${procs}_$i", "java", s"-Xms$heap", s"-Xmx$heap",
-      "-XX:+AlwaysPreTouch", "-cp", s"$Jar:${SparkInstall.resolve("jars")}/*", "graft.EngineProbe", k.toString,
-      (i * chunk).toString, ((i + 1) * chunk).toString))
-    killAfter(secLeft, ps)
-    ps.foreach(_.await { case l if l.contains("[engine-probe] ready") => () })
-    ps.foreach(_.send(""))
-    ps.map(_.await { case SecRe(s) => s.toDouble }.getOrElse(Double.NaN)).max
-  } catch { case NonFatal(_) => Double.NaN }
+  /** The hardware's k → 4k thread scaling in this window, the ceiling no
+    * same-host N→4N run can beat. */
+  private def hwProbe(k: Int): Double = { val (n, f) = medianPair(k)(hwRun(_, HwUnitsPerCore * k)); n / f / 4.0 }
+
+  /** The engine ceiling's (k-thread, 4k-thread) seconds: [[EngineProbe.run]]
+    * in this JVM over EngineDocsPerCore·k docs, after one untimed warmup. The
+    * key `engine_ceiling_1x8_vs_4x8_jvms` keeps its name from 1 vs 4 forked
+    * JVMs of k threads; on 4 vCPUs 1 vs 4 threads read 0.47–0.57, 4 steady
+    * JVMs ≈ 0.48. */
+  private def engineLegs(k: Int): (Double, Double) = {
+    def leg(threads: Int): Double = secs(EngineProbe.run(threads, 0, EngineDocsPerCore * k))
+    leg(4 * k)
+    medianPair(k)(leg)
+  }
 
   /** Seconds the driver's kill clock (it times `sbt "runMain graft.Bench"`)
     * ran before main(): the earliest start among this JVM's related /proc
@@ -275,7 +273,8 @@ object Bench {
     hwRun(4 * k, HwUnitsPerCore * k) // JIT warmup
     val scalingEnd = Budget - TailSec
     val legs = Seq(1, 4).flatMap(clusterProbe(_, k))
-    killAfter(scalingEnd - elapsed, legs)
+    // the single deadline: both probe process trees die at the scaling end
+    daemon { Thread.sleep(math.max(0L, ((scalingEnd - elapsed) * 1000).toLong)); legs.foreach(_.kill()) }
     var rounds = Vector.empty[Round]
     if (legs.size == 2 && legs.forall(_.await { case l if l.contains("[cluster-probe] ready") => () }.isDefined)) {
       note("cluster probes ready")
@@ -295,29 +294,27 @@ object Bench {
     legs.foreach { p => p.proc.waitFor(5, TimeUnit.SECONDS); p.kill() }
 
     // ---- headline; the warmup takes session, codegen and footer setup off q01
-    val warmT0 = System.nanoTime()
-    try {
-      spark.range(1000).selectExpr("sum(id)").count()
-      SparkEntry.queries("q01_agg_pricing")(spark, sfDir).count()
+    val warmupSec = secs(try {
+      Profile.time(spark.range(1000).selectExpr("sum(id)"))
+      Profile.time(SparkEntry.queries("q01_agg_pricing")(spark, sfDir))
       // 64-row samples load and codegen the minhash / simhash / vector
       // kernels, which otherwise land on the first timed d*/e* query
       val docsSample = spark.read.parquet(s"$sfDir/documents.parquet").limit(64)
-      DedupOps.minhashLsh(docsSample).count()
-      DedupOps.simhashPairs(docsSample).count()
+      Profile.time(DedupOps.minhashLsh(docsSample))
+      Profile.time(DedupOps.simhashPairs(docsSample))
       // ordered: lshTopK re-scans its input, so the sample must not change
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").orderBy("vec_id").limit(64)
-      SimilarityOps.lshTopK(emb, emb.limit(4), "vec_id", "embedding", k = 2).count()
-    } catch { case NonFatal(e) => note(s"warmup failed: $e") }
-    val warmupSec = (System.nanoTime() - warmT0) / 1e9
+      Profile.time(SimilarityOps.lshTopK(emb, emb.limit(4), "vec_id", "embedding", k = 2))
+    } catch { case NonFatal(e) => note(s"warmup failed: $e") })
     def attempt(): Attempt = {
       val hw = hwProbe(k)
       val s0 = StealMeter.snap()
       val a0 = System.nanoTime()
       val results = Headline.map { q =>
         val q0 = System.nanoTime()
-        try SparkEntry.queries(q)(spark, sfDir).count()
-        catch { case e: Throwable => note(s"$q failed: ${e.getMessage}") }
-        q -> (System.nanoTime() - q0) / 1e9
+        q -> (try Profile.time(SparkEntry.queries(q)(spark, sfDir)) catch {
+          case e: Throwable => note(s"$q failed: ${e.getMessage}"); (System.nanoTime() - q0) / 1e9
+        })
       }
       Attempt(results, hw, StealMeter.share(s0, StealMeter.snap()), (System.nanoTime() - a0) / 1e9)
     }
@@ -335,7 +332,7 @@ object Bench {
     spark.stop()
     val (engN, eng4) =
       if (select(rounds).chosen.isEmpty || elapsed + EngineSec > Budget) (Double.NaN, Double.NaN)
-      else (engineLeg(1, k, Budget - elapsed), engineLeg(4, k, Budget - elapsed))
+      else try engineLegs(k) catch { case NonFatal(e) => note(s"engine legs failed: $e"); (Double.NaN, Double.NaN) }
     note(f"engine legs n=$engN%.1fs 4n=$eng4%.1fs")
 
     val line = render(sfDir, warmupSec, attempts, triples, pipeSec, k, rounds, engN, eng4)

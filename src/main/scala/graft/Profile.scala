@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.Locale
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -32,6 +32,15 @@ object Profile {
     finally spark.stop()
   }
 
+  /** Seconds to build `query` and write every row into the `noop` sink: the
+    * clock starts before the build. The one query timer of [[run]] and of
+    * [[Bench]]'s headline; it fails when any column of any row fails. */
+  def time(query: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    query.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   /** Times and plans `names` (every query when empty); returns the JSON line. */
   def run(spark: SparkSession, sfDir: String, outDir: String, names: Seq[String]): String = {
     // The noop write plans and runs its own QueryExecution; the listener
@@ -53,10 +62,7 @@ object Profile {
     try {
       val todo = if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names
       todo.map { name =>
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val sec = time(SparkEntry.queries(name)(spark, sfDir))
         val qe = Option(writes.poll(60, TimeUnit.SECONDS))
           .getOrElse(throw new IllegalStateException(s"$name: the noop write reported no plan"))
         Files.writeString(Paths.get(outDir, s"$name.txt"),

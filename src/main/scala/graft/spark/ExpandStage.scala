@@ -42,8 +42,6 @@ object ExpandStage {
 
   def docIri(docId: String): String = DocNs + docId
 
-  private val tokenPattern = java.util.regex.Pattern.compile("[^a-z0-9]+")
-
   @inline private def lower(c: Char): Char =
     if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
 

@@ -3,10 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import scala.jdk.CollectionConverters._
+import graft.core.{ApiState, JsonLdOptions}
+import graft.spark.{ExpandStage, RemoteContextPool, SyntheticDocs}
 import Bench.{Attempt, Round}
 
 /** The gate logic of [[Bench]]: round selection, the hw-normalized
-  * efficiency, both `suspect` rules and the JSON line the driver parses. */
+  * efficiency, both `suspect` rules, the JSON line the driver parses and
+  * the engine ceiling's in-process legs. */
 class BenchSpec extends AnyFunSuite {
   private val NaN = Double.NaN
   /** A steal-clean round with N leg `t1`, 4N leg 10 s: ratio t1 / 40. */
@@ -60,6 +63,17 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.scalingSuspect(cSel, 0.75, 0.9, 1.6))
     assert(Bench.scalingSuspect(cSel, 0.75, 0.9, NaN))
     assert(Bench.scalingSuspect(Bench.select(Nil), NaN, NaN, NaN))
+  }
+
+  test("the engine ceiling's legs expand the same triples on 1 and on 4 threads") {
+    val docs = 2000L
+    val state = new ApiState(JsonLdOptions(), RemoteContextPool.loaderFor(RemoteContextPool.pool))
+    val expected = (0L until docs).map { i =>
+      ExpandStage.expandDoc(SyntheticDocs.generateDoc(i), state, ExpandStage.aliasDictionary)._1.size.toLong
+    }.sum
+    assert(expected > 0)
+    assert(EngineProbe.run(1, 0, docs) == expected)
+    assert(EngineProbe.run(4, 0, docs) == expected)
   }
 
   /** Every key path of a JSON value in document order; array elements share

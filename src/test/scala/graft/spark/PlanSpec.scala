@@ -176,6 +176,15 @@ class PlanSpec extends AnyFunSuite {
     assert(java.nio.file.Files.readString(out.resolve("q01_agg_pricing.txt")).contains("ShuffleQueryStage"))
   }
 
+  test("Profile.time computes every column: a throwing UDF fails it, while count() prunes the UDF") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val boom = udf { (x: Long) => if (x >= 0) throw new IllegalStateException("boom"); x }
+    val df = spark.range(10).select(boom(col("id")).as("y"))
+    assert(df.count() == 10)
+    val e = intercept[Exception](graft.Profile.time(df))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(c => String.valueOf(c.getMessage).contains("boom")), e)
+  }
+
   test("html spans: embedded application/ld+json scripts are extracted and expanded") {
     val page =
       """<html><head>
